@@ -202,8 +202,11 @@ def bm25_topk(
             F.sum(term_score).alias("score"),
         )
     )
+    # identical documents score a few ulps apart depending on the order the
+    # term scores were summed in; rank on the score rounded to 9 places so
+    # such ties break on doc_id here and in the DuckDB twin alike
     w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
+        F.desc(F.round("score", 9)), F.asc("doc_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -255,7 +258,7 @@ def bm25_topk_sql(
         ), ranked AS (
           SELECT query_id, doc_id, n_terms, score,
                  row_number() OVER (
-                   PARTITION BY query_id ORDER BY score DESC, doc_id ASC
+                   PARTITION BY query_id ORDER BY round(score, 9) DESC, doc_id ASC
                  )::BIGINT AS rank
           FROM scored
         )

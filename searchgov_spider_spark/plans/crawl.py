@@ -177,9 +177,9 @@ class CrawlEngine:
             "job", "url", "depth", "discovery_idx", "priority", "prevent_follow",
             "needs_js",  # S4 routing: per-job handle_javascript flag
         )
-        # hybrid canonicalization: fast-pattern URLs stay JVM-native;
-        # single-pass mode because `filtered`'s lineage (fetch + extraction
-        # explode) is expensive and the cache() sits downstream of here
+        # canonicalization is one Arrow UDF pass over every URL
+        # (with_canonical); the wave caches the result downstream of here,
+        # so `filtered`'s lineage (fetch + extraction explode) runs once
         withc = with_canonical(filtered, "url", "canon_url").withColumn(
             "url_hash", url_hash_col("canon_url")
         ).withColumn("domain", url_host_col("canon_url"))

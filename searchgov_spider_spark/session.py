@@ -5,6 +5,20 @@ same builder options apply — AQE, Arrow, and a shuffle-partition count
 sized to the cluster. At 100 TB scale the entry point is
 ``spark-submit --py-files searchgov_spider_spark.zip job.py`` with the
 same session options plus an Iceberg catalog (gated in sources.state).
+
+Cached plans may change their output partitioning
+(``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``). Spark
+defaults it off, so AQE never coalesces the shuffles inside a plan that is
+being cached, and every stage downstream of a cached frame keeps
+``spark.sql.shuffle.partitions`` tasks however few rows it holds. The crawl
+wave caches four frames right after its window exchanges (scheduled,
+fetched, parsed, candidates); with the option off a politeness-bounded
+wave of ~120 URLs ran every Python stage after them (extraction,
+canonicalize) as 32 tasks of ~4 rows, and each Python task costs a fixed
+~0.1 s of executor time on a 4-vCPU box (BENCH.md). With it on, AQE sizes
+those frames by their bytes: one partition for a small wave, as many as a
+production wave needs. No crawl operator depends on a cached frame's
+partition count (tests/test_crawl_engine.py pins both properties).
 """
 
 from __future__ import annotations
@@ -51,6 +65,11 @@ def get_spark(
         # carrying stage. 2048 keeps a typical-body batch ~200 MB while
         # costing row-heavy UDF stages (canonicalize) <10% vs the default.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        # let AQE coalesce the shuffles under cache() too (module docstring):
+        # the wave's cached frames then hold as many partitions as their
+        # bytes need, not shuffle.partitions, so small waves stop paying
+        # the fixed per-task Python cost once per empty-ish partition
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

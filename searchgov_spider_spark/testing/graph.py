@@ -180,17 +180,18 @@ def generate_graph(n_pages: int = 400, seed: int = 7, branching: int = 4) -> dic
     # assign pages to domains; index 0 per domain is its root
     by_domain: dict[str, list[int]] = {d: [] for d in doms}
     page_domain: list[str] = []
+    pos_in_domain: list[int] = []  # i's index in by_domain[page_domain[i]]
     for i in range(n_pages):
         d = doms[i] if i < len(doms) else rng.choices(doms, weights)[0]
         page_domain.append(d)
+        pos_in_domain.append(len(by_domain[d]))
         by_domain[d].append(i)
 
     def page_url(i: int) -> str:
         d = page_domain[i]
         if i < len(doms):
             return f"https://{d}/"
-        k = by_domain[d].index(i)
-        return f"https://{d}/p/{k}"
+        return f"https://{d}/p/{pos_in_domain[i]}"
 
     # robots-blocked existing pages on the hot domain
     private_idx = set(by_domain["hot.example.gov"][-3:]) if len(by_domain["hot.example.gov"]) > 6 else set()
@@ -198,8 +199,7 @@ def generate_graph(n_pages: int = 400, seed: int = 7, branching: int = 4) -> dic
     urls = {}
     for i in range(n_pages):
         if i in private_idx:
-            k = by_domain[page_domain[i]].index(i)
-            urls[i] = f"https://{page_domain[i]}/private/p{k}"
+            urls[i] = f"https://{page_domain[i]}/private/p{pos_in_domain[i]}"
         else:
             urls[i] = page_url(i)
 
@@ -207,7 +207,7 @@ def generate_graph(n_pages: int = 400, seed: int = 7, branching: int = 4) -> dic
     for i in range(n_pages):
         d = page_domain[i]
         siblings = by_domain[d]
-        k = siblings.index(i)
+        k = pos_in_domain[i]
         refs: list[str] = []
         # tree children keep every domain BFS-reachable
         for c in range(branching):

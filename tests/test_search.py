@@ -102,6 +102,36 @@ def test_bm25_rank_ordering_and_k(docs_df):
     assert by_q["qa"][0].doc_id == 4
 
 
+def test_bm25_identical_documents_rank_by_doc_id(spark):
+    """Identical documents may score a few ulps apart (their term scores are
+    summed in different orders); both engines must still rank each pair by
+    doc_id, so Spark and the DuckDB twin agree on every rank."""
+    import random
+
+    import duckdb
+    import pandas as pd
+
+    rng = random.Random(0)
+    vocab = "join hash row batch scan column customer filter small slow merge order".split()
+    docs = []
+    for pair in range(15):
+        text = " ".join(rng.choice(vocab) for _ in range(rng.randint(10, 40)))
+        docs += [(2 * pair, text), (2 * pair + 1, text)]
+    queries = (("q", " ".join(vocab[:10])),)
+    got = psearch.bm25_topk(
+        spark.createDataFrame(docs, "doc_id long, text string"), queries=queries, k=len(docs)
+    ).collect()
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(docs, columns=["doc_id", "text"]))
+    want = con.sql(psearch.bm25_topk_sql(queries=queries, k=len(docs))).fetchall()
+
+    rank = {r.doc_id: r.rank for r in got}
+    assert len(rank) == len(docs)
+    for pair in range(15):
+        assert rank[2 * pair + 1] == rank[2 * pair] + 1
+    assert rank == {doc_id: r for _q, doc_id, _n, _s, r in want}
+
+
 def test_pagerank_sums_to_one_and_matches_python(docs_df):
     ranks = {r.doc_id: r["rank"] for r in psearch.pagerank_docs(docs_df).collect()}
     n = len(DOCS)
