@@ -67,7 +67,11 @@ MAX_UNWANTED_PER_CODE = 50
 
 @dataclass(frozen=True)
 class CrawlConfig:
-    """Per-job crawl knobs, defaults matching the reference Scrapy config."""
+    """Per-job crawl knobs, defaults matching the reference Scrapy config.
+
+    ``frontier_buckets`` is unused: the engine no longer passes it to the
+    state store, whose writes keep each wave frame's own partitioning. It
+    stays for callers that still read it."""
 
     download_delay_sec: float = 1.0          # settings.py:46 DOWNLOAD_DELAY
     per_domain_concurrency: int = 1          # settings.py:44-45
@@ -84,7 +88,7 @@ class CrawlConfig:
     bloom_capacity: int = 1 << 20
     bloom_fpp: float = 0.01
     bloom_shards: int = 1                    # >1 shards the bloom by url_hash
-    frontier_buckets: int = 32               # hash-partition buckets for state tables
+    frontier_buckets: int = 32               # unused (see class docstring)
     salt_buckets: int = 8                    # salting factor for hot-domain windows
     csv_rotate_bytes: int = 100 * 1024       # pipelines.py:34
     es_batch_docs: int = 50                  # es_batch_upload.py:28

@@ -15,16 +15,16 @@ committed wave (P4, job_state/scheduler.py:18-47 semantics).
 
 Scale contract:
 - frontier/seen are hash-identified by ``url_hash = xxhash64(canon_url)``;
-  state tables are written bucketed by ``pmod(url_hash, n_buckets)`` so the
-  anti-join co-partitions at 10^10-URL scale.
+  each state write keeps the wave frame's own (AQE-sized) partitioning, so
+  a small wave's delta is one file (sources/state.py).
 - dedup = sharded-bloom pre-filter (broadcast) + exact left_anti on
   (url_hash, canon_url) — operators/dedup.py.
 - the politeness window is salted two-phase top-k — operators/politeness.py.
 - filters/robots are broadcast joins + codegen predicates, always upstream
   of the fetch stage (filter-before-fetch, SURVEY.md §4).
 - per-wave lineage: every wave appends a metrics row (fetch/dedup/error
-  counts) and documents rows carry (wave, job) — per-partition lineage
-  comes from the bucketed state layout.
+  counts) and documents rows carry (wave, job); each state table's
+  manifest records the wave's rows/bytes/files (``store.lineage(name)``).
 
 Determinism: ordering is (priority, depth, discovery_idx, canon_url); child
 discovery_idx = parent_fetch_rank * 65536 + link_position. The pure-Python
@@ -110,9 +110,7 @@ class CrawlEngine:
         self.robots = robots
         self.config = config
         self.state_dir = Path(state_dir) if state_dir else None
-        self.store = (
-            ParquetStateStore(spark, state_dir, config.frontier_buckets) if state_dir else None
-        )
+        self.store = ParquetStateStore(spark, state_dir) if state_dir else None
         self.user_agent = user_agent
         self.use_bloom_over = use_bloom_over
         self.seen_filter = seen_filter
@@ -123,11 +121,19 @@ class CrawlEngine:
 
     def _checkpoint(self, df: DataFrame, name: str, wave: int) -> DataFrame:
         """Truncate lineage between waves. With a state store, persist as
-        the wave's snapshot (bucketed parquet — the Iceberg-snapshot
-        analog) and read back; else localCheckpoint."""
+        the wave's snapshot (parquet — the Iceberg-snapshot analog) and
+        read back; else localCheckpoint."""
         if self.store is None:
             return df.localCheckpoint(eager=True)
         return self.store.write(df, name, wave)
+
+    def _empty_seen(self) -> DataFrame:
+        """The seen set before any delta, with no partitions: a
+        ``createDataFrame([])`` start set holds defaultParallelism empty
+        partitions, which would widen every scan of the seen union."""
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.emptyRDD(), "url_hash long, canon_url string"
+        )
 
     def _commit_wave(self, wave: int, metrics: WaveMetrics) -> None:
         """The wave's commit record: written only after frontier+seen
@@ -159,7 +165,7 @@ class CrawlEngine:
         wave = fw if sw is None else min(fw, sw)
         frontier = store.read("frontier", wave)
         if sw is None:
-            seen = spark.createDataFrame([], "url_hash long, canon_url string")
+            seen = engine._empty_seen()
         else:
             # union of per-wave deltas up to the resume wave; later deltas
             # (torn state) are excluded and re-marked by wave replay
@@ -272,7 +278,7 @@ class CrawlEngine:
 
     def run(self, max_waves: int | None = None) -> CrawlResult:
         frontier = self._checkpoint(self.initial_frontier(), "frontier", 0)
-        seen = self.spark.createDataFrame([], "url_hash long, canon_url string")
+        seen = self._empty_seen()
         return self.run_from(frontier, seen, start_wave=0, max_waves=max_waves)
 
     def run_from(

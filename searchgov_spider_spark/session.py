@@ -4,7 +4,7 @@ Local mode is used for tests/bench (``local[N]``); on a real cluster the
 same builder options apply — AQE, Arrow, and a shuffle-partition count
 sized to the cluster. At 100 TB scale the entry point is
 ``spark-submit --py-files searchgov_spider_spark.zip job.py`` with the
-same session options plus an Iceberg catalog (gated in sources.state).
+same session options.
 
 Cached plans may change their output partitioning
 (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``). Spark

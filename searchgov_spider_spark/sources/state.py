@@ -1,16 +1,17 @@
 """Crawl-state persistence: snapshot-per-wave tables (frontier, seen,
 documents, metrics) with resume.
 
-Production layout is Iceberg — `frontier`/`seen` partitioned by
-``bucket(N, url_hash)``, one snapshot committed per wave, resume =
+Production layout is Iceberg — one snapshot committed per wave, resume =
 ``VERSION AS OF``; snapshot expiry replaces the reference's Redis orphan
 TTL (extensions/scheduler_queue.py:52-121, SCHEDULER_KEY_ORPHAN_AGE).
-This sandbox has no Iceberg runtime jars, so the default backend is
-bucketed parquet with a manifest directory — same layout, same resume
-contract — and the Iceberg backend is gated behind catalog availability.
+This sandbox has no Iceberg runtime jars, so the store is plain parquet
+with a manifest directory: one directory per committed wave, same resume
+contract.
 
-The wave loop (plans/crawl.py) only needs: write(df, name, wave),
-read(name, wave), latest_wave(name), expire(keep_last).
+The store interface is what ``ParquetStateStore`` implements; the wave
+loop (plans/crawl.py) calls write(df, name, wave), write_delta(df, name,
+wave), read(name, wave), read_accumulated(name, up_to) and
+latest_wave(name).
 """
 
 from __future__ import annotations
@@ -21,22 +22,28 @@ import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ParquetStateStore:
-    """Bucketed-parquet state store (Iceberg-snapshot analog).
+    """Parquet state store (Iceberg-snapshot analog).
 
-    Layout: {root}/{name}/wave={w}/bucket={b}/part-*.parquet plus
+    Layout: {root}/{name}/wave={w}/part-*.parquet plus
     {root}/manifests/{name}/wave={w}.json marking committed waves —
     a write is visible to resume only after its manifest lands, which
     makes half-written waves invisible (the snapshot-commit analog).
+
+    A write keeps the frame's own partitioning, so a small wave delta
+    (AQE-coalesced upstream) is one file; the manifest records the
+    schema, and every read passes it, so no read runs a footer-inference
+    job. ``n_buckets`` is accepted for existing callers and unused: a
+    path-based parquet read carries no bucket spec, so a bucketed layout
+    co-partitions nothing.
     """
 
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 32):
         self.spark = spark
         self.root = Path(root)
-        self.n_buckets = n_buckets
 
     def _table(self, name: str) -> Path:
         return self.root / name
@@ -46,29 +53,19 @@ class ParquetStateStore:
 
     def write(self, df: DataFrame, name: str, wave: int, meta: dict | None = None) -> DataFrame:
         path = self._table(name) / f"wave={wave}"
-        out = df
-        bucketed = "url_hash" in df.columns
-        if bucketed:
-            out = out.withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)))
-            out.write.mode("overwrite").partitionBy("bucket").parquet(str(path))
-        else:
-            out.write.mode("overwrite").parquet(str(path))
+        # an empty frame still writes one empty file carrying the schema
+        df.write.mode("overwrite").parquet(str(path))
         m = self._manifest(name, wave)
         m.parent.mkdir(parents=True, exist_ok=True)
         m.write_text(
             json.dumps({
                 "wave": wave,
                 "schema": df.schema.json(),
-                "partitions": self._partition_stats(path),
+                "stats": self._file_stats(path),
                 **(meta or {}),
             })
         )
-        try:
-            back = self.spark.read.parquet(str(path))
-        except Exception:
-            # an empty df writes only _SUCCESS — no files to infer from
-            return self.spark.createDataFrame([], df.schema)
-        return back.drop("bucket") if bucketed else back
+        return self.spark.read.schema(df.schema).parquet(str(path))
 
     def write_delta(self, df: DataFrame, name: str, wave: int, meta: dict | None = None) -> DataFrame:
         """Append-only commit: the wave directory holds ONLY this wave's
@@ -80,33 +77,30 @@ class ParquetStateStore:
         return self.write(df, name, wave, meta={**(meta or {}), "delta": True})
 
     @staticmethod
-    def _partition_stats(path: Path) -> dict:
-        """Per-partition lineage for the manifest (Iceberg manifest-entry
-        analog): rows/bytes/files per bucket, read from parquet footers
-        driver-side — no extra Spark job."""
+    def _file_stats(path: Path) -> dict:
+        """The wave's lineage for the manifest (Iceberg manifest-entry
+        analog): rows/bytes/files, read from parquet footers driver-side —
+        no extra Spark job."""
         import pyarrow.parquet as pq
 
-        stats: dict[str, dict] = {}
-        for f in sorted(path.glob("**/*.parquet")):
-            bucket = f.parent.name if f.parent.name.startswith("bucket=") else "_root"
-            s = stats.setdefault(bucket, {"rows": 0, "bytes": 0, "files": 0})
-            try:
-                s["rows"] += pq.ParquetFile(f).metadata.num_rows
-            except Exception:
-                continue
-            s["bytes"] += f.stat().st_size
-            s["files"] += 1
+        stats = {"rows": 0, "bytes": 0, "files": 0}
+        for f in sorted(path.glob("*.parquet")):
+            stats["rows"] += pq.ParquetFile(f).metadata.num_rows
+            stats["bytes"] += f.stat().st_size
+            stats["files"] += 1
         return stats
 
     def lineage(self, name: str) -> list[dict]:
-        """Committed per-wave, per-partition lineage records:
-        [{wave, bucket, rows, bytes, files}, ...] across all manifests."""
-        out = []
-        for w in self.committed_waves(name):
-            meta = json.loads(self._manifest(name, w).read_text())
-            for bucket, s in meta.get("partitions", {}).items():
-                out.append({"wave": w, "bucket": bucket, **s})
-        return out
+        """Committed per-wave lineage records: [{wave, rows, bytes, files},
+        ...] across all manifests."""
+        return [
+            {"wave": w, **json.loads(self._manifest(name, w).read_text())["stats"]}
+            for w in self.committed_waves(name)
+        ]
+
+    def _schema(self, name: str, wave: int) -> StructType:
+        meta = json.loads(self._manifest(name, wave).read_text())
+        return StructType.fromJson(json.loads(meta["schema"]))
 
     def read_accumulated(self, name: str, up_to: int | None = None) -> DataFrame:
         """Union of all committed delta waves ≤ ``up_to`` (default: all).
@@ -115,24 +109,10 @@ class ParquetStateStore:
         makes torn-state resume correct: the replayed wave re-marks them.
         """
         waves = [w for w in self.committed_waves(name) if up_to is None or w <= up_to]
-        paths = []
-        for w in waves:
-            d = self._table(name) / f"wave={w}"
-            if d.exists() and any(d.glob("**/*.parquet")):
-                paths.append(str(d))
-        if not paths:
-            # all committed deltas are empty: rebuild schema from a manifest
-            from pyspark.sql.types import StructType
-
-            if not waves:
-                raise FileNotFoundError(f"no committed wave for state table {name!r}")
-            meta = json.loads(self._manifest(name, waves[-1]).read_text())
-            schema = StructType.fromJson(json.loads(meta["schema"]))
-            return self.spark.createDataFrame([], schema)
-        # basePath anchors partition discovery at the table root so the
-        # wave=/bucket= directory levels parse as partition columns
-        df = self.spark.read.option("basePath", str(self._table(name))).parquet(*paths)
-        return df.drop("bucket", "wave")
+        if not waves:
+            raise FileNotFoundError(f"no committed wave for state table {name!r}")
+        paths = [str(self._table(name) / f"wave={w}") for w in waves]
+        return self.spark.read.schema(self._schema(name, waves[-1])).parquet(*paths)
 
     def compact(self, name: str, up_to: int | None = None) -> int:
         """Merge committed deltas ≤ ``up_to`` (default: all) into the
@@ -176,19 +156,8 @@ class ParquetStateStore:
             wave = self.latest_wave(name)
         if wave is None:
             raise FileNotFoundError(f"no committed wave for state table {name!r}")
-        try:
-            df = self.spark.read.parquet(str(self._table(name) / f"wave={wave}"))
-        except Exception:
-            # empty snapshot (e.g. drained frontier of a finished crawl):
-            # rebuild from the schema recorded in the manifest
-            from pyspark.sql.types import StructType
-
-            meta = json.loads(self._manifest(name, wave).read_text())
-            schema = StructType.fromJson(json.loads(meta["schema"]))
-            if "bucket" in schema.fieldNames():
-                schema = StructType([f for f in schema.fields if f.name != "bucket"])
-            return self.spark.createDataFrame([], schema)
-        return df.drop("bucket") if "bucket" in df.columns else df
+        path = self._table(name) / f"wave={wave}"
+        return self.spark.read.schema(self._schema(name, wave)).parquet(str(path))
 
     def expire(self, name: str, keep_last: int = 2) -> int:
         """Drop all but the newest ``keep_last`` waves (snapshot expiry /
@@ -199,57 +168,3 @@ class ParquetStateStore:
             self._manifest(name, w).unlink(missing_ok=True)
             shutil.rmtree(self._table(name) / f"wave={w}", ignore_errors=True)
         return len(drop)
-
-
-def iceberg_available(spark: SparkSession, catalog: str = "spark_catalog") -> bool:
-    """True when an Iceberg catalog is configured and loadable."""
-    try:
-        impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-    except Exception:
-        impl = None
-    if not impl or "iceberg" not in str(impl).lower():
-        return False
-    try:
-        spark._jvm.org.apache.iceberg.Snapshot  # noqa: B018 - probe class
-        return True
-    except Exception:
-        return False
-
-
-class IcebergStateStore:
-    """Iceberg-backed store: same interface over real snapshots.
-
-    Deployment path (requires iceberg-spark-runtime on the cluster):
-    tables created as ``PARTITIONED BY (bucket(N, url_hash))``, one
-    commit per wave, resume via ``VERSION AS OF``, maintenance via
-    ``expire_snapshots``. Instantiation fails fast in environments
-    without the runtime (this sandbox).
-    """
-
-    def __init__(self, spark: SparkSession, database: str, n_buckets: int = 32, catalog: str = "spark_catalog"):
-        if not iceberg_available(spark, catalog):
-            raise NotImplementedError(
-                "Iceberg runtime not on the classpath; use ParquetStateStore "
-                "(identical layout + resume contract) or add "
-                "iceberg-spark-runtime to spark.jars.packages"
-            )
-        self.spark = spark
-        self.database = database
-        self.n_buckets = n_buckets
-
-    def write(self, df: DataFrame, name: str, wave: int, meta: dict | None = None) -> DataFrame:
-        full = f"{self.database}.{name}"
-        (
-            df.withColumn("wave", F.lit(wave))
-            .writeTo(full)
-            .option("write.distribution-mode", "hash")
-            .append()
-        )
-        return self.spark.read.table(full).filter(F.col("wave") == wave).drop("wave")
-
-    def read(self, name: str, wave: int) -> DataFrame:
-        return (
-            self.spark.read.table(f"{self.database}.{name}")
-            .filter(F.col("wave") == wave)
-            .drop("wave")
-        )
