@@ -95,7 +95,7 @@ def crawl_wave_bench(spark, n: int) -> tuple[float, int, dict]:
         # the downstream emit path, the synthetic row id does not; domain
         # comes from the engine's url_host_col (codegen try_parse_url),
         # which A/B-measured faster than the regexp it replaced.
-        with_canonical(synthetic_frontier(spark, n), "url", "canon_url", rescan_cheap=True)
+        with_canonical(synthetic_frontier(spark, n), "url", "canon_url")
         .select("url", "canon_url", "priority", "depth", "discovery_idx")
         .withColumn("url_hash", url_hash_col("canon_url"))
         .withColumn("domain", url_host_col("canon_url"))

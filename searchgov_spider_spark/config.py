@@ -69,20 +69,18 @@ MAX_UNWANTED_PER_CODE = 50
 class CrawlConfig:
     """Per-job crawl knobs, defaults matching the reference Scrapy config.
 
-    ``frontier_buckets`` is unused: the engine no longer passes it to the
-    state store, whose writes keep each wave frame's own partitioning. It
-    stays for callers that still read it."""
+    The reference's depth clamp (DEPTH_LIMIT=3 into [1, 250]) lives in
+    ``operators.filters.normalize_job_rules`` and its 100 KB sink batch
+    size in ``sources.sinks``. ``frontier_buckets`` is unused: the engine
+    no longer passes it to the state store, whose writes keep each wave
+    frame's own partitioning. It stays for callers that still read it."""
 
     download_delay_sec: float = 1.0          # settings.py:46 DOWNLOAD_DELAY
     per_domain_concurrency: int = 1          # settings.py:44-45
     download_timeout_sec: float = 15.0       # settings.py:38
     download_maxsize: int = 15 * 1024 * 1024  # settings.py:50
-    default_depth_limit: int = 3             # settings.py:58 DEPTH_LIMIT
-    depth_min: int = 1                       # domain_spider.py:129-131 clamp
-    depth_max: int = 250
     wave_seconds: float = 60.0               # fetch budget window per wave per domain
     max_waves: int = 64
-    output_target: str = "csv"
     user_agent: str = "usasearch"            # settings.py:28
     # dedup / frontier scale knobs
     bloom_capacity: int = 1 << 20
@@ -90,14 +88,6 @@ class CrawlConfig:
     bloom_shards: int = 1                    # >1 shards the bloom by url_hash
     frontier_buckets: int = 32               # unused (see class docstring)
     salt_buckets: int = 8                    # salting factor for hot-domain windows
-    csv_rotate_bytes: int = 100 * 1024       # pipelines.py:34
-    es_batch_docs: int = 50                  # es_batch_upload.py:28
-
-    def clamp_depth(self, depth_limit: int | None) -> int:
-        """Clamp a requested depth limit into [1, 250] as the reference does."""
-        if depth_limit is None:
-            return self.default_depth_limit
-        return max(self.depth_min, min(self.depth_max, int(depth_limit)))
 
     def wave_budget(self, crawl_delay: float | None = None) -> int:
         """Max fetches per domain per wave under the politeness delay.

@@ -1379,16 +1379,6 @@ def q_dedup_ngram_spans(spark, sf_dir):
     return _longify(pclean.dedup_ngram_spans(load(spark, sf_dir, "documents")))
 
 
-def q_ivf_ann(spark, sf_dir):
-    """IVF ANN (k-means codebook + probed inverted lists). The Lloyd
-    training loop is not SQL-expressible -> rows-only check for the
-    approximate n_probe=4 form; `ivf_ann_exact` pins the same machinery
-    against the brute-force oracle."""
-    return _longify(
-        psim.ivf_topk(load(spark, sf_dir, "embeddings"), n_centroids=16, n_probe=4, n_queries=10, k=5)
-    )
-
-
 def q_ivf_ann_exact(spark, sf_dir):
     """IVF with probe-all (n_probe == n_centroids): the candidate set is
     the whole corpus, so the result must be bit-identical to brute-force

@@ -12,7 +12,6 @@ import re
 from datetime import datetime
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -125,8 +124,3 @@ def parse_date_safely(value) -> str | None:
 @F.pandas_udf(T.StringType())
 def parse_date_udf(values: pd.Series) -> pd.Series:
     return values.map(parse_date_safely, na_action="ignore")
-
-
-def iso_timestamp_col(col: Column | str) -> Column:
-    """Native fast path for well-formed inputs."""
-    return F.date_format(F.to_timestamp(col), "yyyy-MM-dd'T'HH:mm:ss")

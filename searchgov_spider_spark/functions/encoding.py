@@ -33,11 +33,6 @@ from __future__ import annotations
 
 import codecs
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 _BOMS = (
     (codecs.BOM_UTF8, "utf-8-sig"),
     (codecs.BOM_UTF32_LE, "utf-32"),
@@ -175,13 +170,3 @@ def decode_http_response(response_bytes: bytes | None) -> str | None:
             return response_bytes.decode(enc)
         except (UnicodeDecodeError, TypeError, LookupError):
             return str(response_bytes)
-
-
-@F.pandas_udf(T.StringType())
-def decode_body_udf(bodies: pd.Series) -> pd.Series:
-    return bodies.map(decode_http_response, na_action="ignore")
-
-
-def decode_utf8_col(col: Column | str) -> Column:
-    """Native fast path when bodies are known-utf8 (the synthetic corpus)."""
-    return F.decode(F.col(col) if isinstance(col, str) else col, "UTF-8")

@@ -2,8 +2,8 @@
 
 Reference parity:
 - sha256 URL doc id — elasticsearch/i14y_helper.py:170-173 → native F.sha2.
-- shake_256 5-byte spider id — helpers/domain_spider.py:170-180 → pandas UDF
-  (no JVM builtin; cold path, only runs on the tiny seeds table).
+- shake_256 5-byte spider id — helpers/domain_spider.py:170-180 → the
+  pure-Python ``spider_id`` (no JVM builtin).
 - md5 file keys — sitemaps/sitemap_monitor.py:134 → native F.md5.
 
 ``portable_hash32`` is this engine's oracle-portable hash: the first 8 hex
@@ -17,10 +17,8 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def spider_id(*args) -> str:
@@ -29,11 +27,6 @@ def spider_id(*args) -> str:
         raise ValueError("One or more arguments must be passed to generate a spider_id.")
     joined = "".join(str(a) for a in args)
     return hashlib.shake_256(joined.encode()).hexdigest(5)
-
-
-@F.pandas_udf(T.StringType())
-def spider_id_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: hashlib.shake_256(str(v).encode()).hexdigest(5), na_action="ignore")
 
 
 def portable_hash32(value: str) -> int:
@@ -56,7 +49,3 @@ def seeded_hash32_col(col: Column | str, seed: int) -> Column:
     """Seeded member of the md5 hash family (for MinHash signatures)."""
     c = F.col(col) if isinstance(col, str) else col
     return portable_hash32_col(F.concat(F.lit(f"{seed}|"), c))
-
-
-def seeded_hash32_sql(expr: str, seed: int) -> str:
-    return portable_hash32_sql(f"'{seed}|' || {expr}")

@@ -17,7 +17,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -122,14 +121,3 @@ def normalize_lang(lang: str | None) -> str | None:
 @F.pandas_udf(T.StringType())
 def detect_lang_udf(texts: pd.Series) -> pd.Series:
     return texts.map(detect_lang, na_action="ignore")
-
-
-def language_cascade_col(header_lang: Column, html_lang: Column, meta_lang: Column, content: Column) -> Column:
-    """F.coalesce cascade; detector UDF only evaluated when all else null."""
-    norm = lambda c: F.lower(F.split(c, "-").getItem(0))  # noqa: E731
-    return F.coalesce(
-        F.substring(header_lang, 1, 2),
-        norm(html_lang),
-        norm(meta_lang),
-        detect_lang_udf(F.substring(content, 1, 64)),
-    )

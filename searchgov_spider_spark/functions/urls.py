@@ -154,15 +154,12 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return canonicalize_batch(urls)
 
 
-def with_canonical(
-    df, url_col: str = "url", out_col: str = "canon_url", rescan_cheap: bool = False
-):
+def with_canonical(df, url_col: str = "url", out_col: str = "canon_url"):
     """Canonicalization hot path: ONE vectorized Arrow UDF pass.
 
-    The ``rescan_cheap`` parameter is kept for API stability but both
-    modes now run the same single-pass plan. A "JVM-native fast path"
-    (classify fast-pattern URLs with native expressions, route only the
-    rest to Python) was built and MEASURED SLOWER, twice:
+    A "JVM-native fast path" (classify fast-pattern URLs with native
+    expressions, route only the rest to Python) was built and MEASURED
+    SLOWER, twice:
 
     * java.util.regex form: the anchored pattern is evaluated up to
       ~10x per row across the union branches' filters + projections —

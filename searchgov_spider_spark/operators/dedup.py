@@ -1,4 +1,6 @@
-"""Deduplication operators D1-D5 (SURVEY.md §2.4).
+"""Deduplication operators D1-D3 and D5 (SURVEY.md §2.4). D4, the emit-side
+dedup, needs no operator: D1 schedules each canonical URL once, so each is
+fetched and emitted once.
 
 D1 — URL-seen dedup (the scaling-critical operator). Two stages:
   1. probabilistic pre-filter: a sharded numpy Bloom filter built
@@ -134,6 +136,21 @@ class ShardedBloom:
                 out[m] = _contains(bits, hashes[m], self.spec)
         return out
 
+    def add(self, hashes: np.ndarray) -> None:
+        """Set the bits of ``hashes`` in place, each in shard
+        ``hash % n_shards`` (a missing shard starts empty)."""
+        hashes = np.asarray(hashes, dtype=np.int64).view(np.uint64)
+        n_shards = self.spec.n_shards
+        if n_shards == 1:
+            groups = [(0, hashes)]
+        else:
+            shard_of = (hashes % np.uint64(n_shards)).astype(np.int64)
+            groups = [(int(s), hashes[shard_of == s]) for s in np.unique(shard_of)]
+        for s, h in groups:
+            if s not in self.shards:
+                self.shards[s] = _empty_bits(self.spec)
+            _add_to_bits(self.shards[s], h, self.spec)
+
     def merge(self, other: "ShardedBloom") -> "ShardedBloom":
         """OR another bloom of the SAME spec into this one (incremental
         maintenance: per-wave delta blooms merge into the cumulative
@@ -173,26 +190,17 @@ def build_bloom(
     """
     if spec is None:
         spec = BloomSpec.for_capacity(capacity, fpp, n_shards)
-    n_shards = spec.n_shards
 
     def partial_bits(batches):
         """One partial bitmap per shard per PARTITION (accumulated across
         all Arrow batches of the partition) — no shuffle of row data; the
         bitmap is the map-side combine."""
-        acc: dict[int, np.ndarray] = {}
+        acc = ShardedBloom(spec, {})
         for pdf in batches:
-            h = pdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
-            if n_shards == 1:
-                acc.setdefault(0, _empty_bits(spec))
-                _add_to_bits(acc[0], h, spec)
-            else:
-                shard_of = (h % np.uint64(n_shards)).astype(np.int64)
-                for s in np.unique(shard_of):
-                    acc.setdefault(int(s), _empty_bits(spec))
-                    _add_to_bits(acc[int(s)], h[shard_of == s], spec)
-        if acc:
+            acc.add(pdf[hash_col].to_numpy(dtype=np.int64))
+        if acc.shards:
             yield pd.DataFrame(
-                {"shard": list(acc), "bits": [b.tobytes() for b in acc.values()]}
+                {"shard": list(acc.shards), "bits": [b.tobytes() for b in acc.shards.values()]}
             )
 
     # cap the number of partial producers: driver receives
@@ -219,54 +227,20 @@ def build_bloom(
             np.bitwise_or(shards[s], part, out=shards[s])
         else:
             shards[s] = part.copy()
-    for s in range(n_shards):
+    for s in range(spec.n_shards):
         shards.setdefault(s, _empty_bits(spec))
     return ShardedBloom(spec, shards)
-
-
-def build_bloom_driver(
-    df: DataFrame, hash_col: str = "url_hash", spec: BloomSpec | None = None
-) -> ShardedBloom:
-    """Driver-side bloom build for SMALL inputs (per-wave deltas): pull
-    the raw 8-byte hashes via Arrow (n_rows x 8 B — for a politeness-
-    bounded wave this is a few MB) and set bits locally. For a delta
-    whose bitmap is larger than its hash column this moves less data
-    than shipping per-partition partial bitmaps, and it costs one tiny
-    job instead of a coalesce + bitmap reduce. Use ``build_bloom`` for
-    the full seen-set (resume-time) rebuild."""
-    assert spec is not None, "delta blooms must reuse the cumulative spec"
-    h = (
-        df.select(F.col(hash_col)).toPandas()[hash_col]
-        .to_numpy(dtype=np.int64)
-        .view(np.uint64)
-    )
-    return build_bloom_from_hashes(h, spec)
 
 
 def build_bloom_from_hashes(h: np.ndarray, spec: BloomSpec) -> ShardedBloom:
     """Driver-side bloom build from an ALREADY-COLLECTED hash array.
 
-    The per-wave fold: callers that run one Arrow action to both
-    materialize the scheduled wave and stream its 8 B/row fingerprints
-    to the driver (plans/crawl.py rides the count along the fetch stats
-    agg; bench.py's wave replica collects once for count + delta +
-    lineage) reuse that array here instead of paying a second cache
-    scan through ``build_bloom_driver``."""
-    h = np.asarray(h, dtype=np.int64).view(np.uint64)
-    shards: dict[int, np.ndarray] = {}
-    if spec.n_shards == 1:
-        bits = _empty_bits(spec)
-        _add_to_bits(bits, h, spec)
-        shards[0] = bits
-    else:
-        shard_of = (h % np.uint64(spec.n_shards)).astype(np.int64)
-        for s in np.unique(shard_of):
-            bits = _empty_bits(spec)
-            _add_to_bits(bits, h[shard_of == s], spec)
-            shards[int(s)] = bits
-    for s in range(spec.n_shards):
-        shards.setdefault(s, _empty_bits(spec))
-    return ShardedBloom(spec, shards)
+    Callers that already hold a wave's 8 B/row fingerprints on the driver
+    (bench.py's wave replica collects once for count + delta + lineage)
+    reuse that array here instead of paying a second scan."""
+    bloom = ShardedBloom(spec, {s: _empty_bits(spec) for s in range(spec.n_shards)})
+    bloom.add(h)
+    return bloom
 
 
 # a delta smaller than this many rows is built driver-side (8 B/row ->
@@ -277,10 +251,17 @@ DRIVER_BLOOM_MAX_ROWS = 2_000_000
 def build_delta_bloom(
     df: DataFrame, spec: BloomSpec, n_rows: int | None = None, hash_col: str = "url_hash"
 ) -> ShardedBloom:
-    """Per-wave delta bloom: driver-side for small known row counts,
-    distributed partial-bitmap build otherwise."""
+    """Per-wave delta bloom of the cumulative filter's ``spec``.
+
+    For a small known row count the raw 8-byte hashes come to the driver
+    via Arrow (a few MB for a politeness-bounded wave) and their bits are
+    set there: for a delta whose bitmap is larger than its hash column
+    this moves less data than per-partition partial bitmaps, in one small
+    job instead of a coalesce + bitmap reduce. Larger deltas take the
+    distributed ``build_bloom``."""
     if n_rows is not None and n_rows <= DRIVER_BLOOM_MAX_ROWS:
-        return build_bloom_driver(df, hash_col, spec)
+        h = df.select(hash_col).toArrow().column(0).to_numpy()
+        return build_bloom_from_hashes(h, spec)
     return build_bloom(df, hash_col, spec=spec)
 
 
@@ -370,11 +351,6 @@ def dedupe_intra_wave(
         .agg(F.min_by(packed, ordering).alias("_row"))
     )
     return agged.select(hash_col, url_col, *[F.col(f"_row.{c}").alias(c) for c in others])
-
-
-def dedupe_emitted(items: DataFrame, already_emitted: DataFrame, url_col: str = "url") -> DataFrame:
-    """D4: emit-side dedup (DeDeuplicatorPipeline parity)."""
-    return items.join(already_emitted.select(url_col), url_col, "left_anti")
 
 
 def new_urls_diff(current: DataFrame, previous: DataFrame, url_col: str = "url") -> DataFrame:

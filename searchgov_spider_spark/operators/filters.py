@@ -23,19 +23,11 @@ the fetch stage (the structural analog of predicate pushdown — SURVEY.md §4).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import FILTER_EXTENSIONS
 from ..functions.urls import url_extension_col, url_host_col, url_query_col
-
-_URL_ENTRY = re.compile(r"^https?://.*$")
-_PORT_ENTRY = re.compile(r":\d+$")
-
-# Filter names in evaluation order; used for the metrics breakdown.
-FILTER_ORDER = ("offsite_domain", "offsite_path", "query_string", "deny_path", "extension", "depth")
 
 
 def normalize_job_rules(seeds: DataFrame) -> DataFrame:
@@ -121,9 +113,7 @@ def with_filter_verdict(candidates: DataFrame, job_rules: DataFrame) -> DataFram
     ``filter_reason`` — null when the row passes all pre-fetch filters,
     else the name of the FIRST failing filter (reference middleware order).
 
-    Expects candidates columns: url, depth, job. Computing the reason once
-    lets the engine both filter and emit a per-wave drop-reason metric from
-    a single pass.
+    Expects candidates columns: url, depth, job.
     """
     joined = candidates.join(F.broadcast(job_rules), "job", "left")
     url, host = F.col("url"), url_host_col("url")
@@ -144,12 +134,3 @@ def with_filter_verdict(candidates: DataFrame, job_rules: DataFrame) -> DataFram
 def apply_prefetch_filters(candidates: DataFrame, job_rules: DataFrame) -> DataFrame:
     """Rows surviving F1-F7, with rule columns attached (priority etc.)."""
     return with_filter_verdict(candidates, job_rules).filter(F.col("filter_reason").isNull()).drop("filter_reason")
-
-
-def drop_reason_counts(candidates: DataFrame, job_rules: DataFrame) -> DataFrame:
-    """Per-reason drop counts (metrics table input, A1)."""
-    return (
-        with_filter_verdict(candidates, job_rules)
-        .groupBy("filter_reason")
-        .agg(F.count("*").alias("n"))
-    )

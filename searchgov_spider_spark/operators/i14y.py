@@ -29,8 +29,6 @@ first-occurrence document order — the deterministic twin.
 
 from __future__ import annotations
 
-from datetime import UTC, datetime
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,12 +46,6 @@ _ALLOWED_CODES = sorted(ALLOWED_LANGUAGE_CODE)
 @F.pandas_udf(T.StringType())
 def separate_file_name_udf(names: pd.Series) -> pd.Series:
     return names.map(separate_file_name, na_action="ignore")
-
-
-def current_utc_iso() -> str:
-    """i14y_helper.current_utc_iso analog (call once per batch job and
-    pass in — keeps the plan deterministic and resume-idempotent)."""
-    return datetime.now(UTC).strftime("%Y-%m-%dT%H:%M:%S")
 
 
 def assemble_i14y(

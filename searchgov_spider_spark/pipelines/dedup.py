@@ -36,7 +36,6 @@ from .textstats import tokens_col, tokens_sql
 # MinHash defaults: 16 permutations in 4 bands of 4 rows.
 MINHASH_PERMS = 16
 MINHASH_BANDS = 4
-MINHASH_ROWS = MINHASH_PERMS // MINHASH_BANDS
 
 SIMHASH_BITS = 32
 SIMHASH_BANDS = 4
@@ -265,11 +264,6 @@ def minhash_lsh_pairs_sql(
         WHERE inter * 1000000 // (la + lb - inter) >= {int(round(threshold * 1_000_000))}
         ORDER BY doc_a, doc_b
     """
-
-
-def _seeded_input_sql(i: int) -> str:
-    """SQL expr for the seeded-hash input: '<i>|' || s"""
-    return f"'{i}|' || s"
 
 
 # ---------------------------------------------------------------------------
@@ -685,27 +679,6 @@ def dup_clusters(
     return all_nodes.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster", "doc_id").alias("cluster")
     )
-
-
-def dup_clusters_sql(pairs_cte: str, nodes_cte: str) -> str:
-    """DuckDB mirror via recursive transitive closure (exact for the
-    small clusters the oracle scale produces). ``pairs_cte`` must yield
-    (doc_a, doc_b); ``nodes_cte`` one doc_id column."""
-    return f"""
-        WITH RECURSIVE p AS ({pairs_cte}),
-        n AS ({nodes_cte}),
-        e AS (
-          SELECT doc_a AS src, doc_b AS dst FROM p
-          UNION SELECT doc_b, doc_a FROM p
-        ),
-        reach(src, dst) AS (
-          SELECT doc_id, doc_id FROM n
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src
-        )
-        SELECT src AS doc_id, min(dst) AS cluster
-        FROM reach GROUP BY src ORDER BY doc_id
-    """
 
 
 def overlap_join(docs: DataFrame, min_overlap: int = 30, text_col: str = "text") -> DataFrame:

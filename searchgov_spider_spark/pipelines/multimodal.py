@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 MODALITIES = ("image", "audio", "video")
 
-META_SCHEMA = "struct<modality:string,n_bytes:int,magic:string>"
 FEATURE_SCHEMA = (
     "doc_id long, modality string, n_bytes int, feat_dim int, "
     "width int, height int, duration_ms int, frames int"

@@ -152,23 +152,6 @@ def prune_files(zones: DataFrame, lo: int, hi: int) -> DataFrame:
     )
 
 
-def file_skipping_sql(data_sql: str, lo: int, hi: int) -> str:
-    return f"""
-        WITH data AS ({data_sql}),
-        zones AS (
-          SELECT file_id, count(*)::BIGINT AS n_rows,
-                 min(stat)::BIGINT AS min_stat, max(stat)::BIGINT AS max_stat
-          FROM data GROUP BY file_id
-        )
-        SELECT file_id, n_rows, min_stat, max_stat,
-               (max_stat >= {lo} AND min_stat <= {hi}) AS kept,
-               (CASE WHEN max_stat >= {lo} AND min_stat <= {hi}
-                     THEN n_rows ELSE 0 END)::BIGINT AS rows_read
-        FROM zones
-        ORDER BY file_id
-    """
-
-
 def scd2_intervals_sql(
     table: str = "events",
     key: str = "user_id",

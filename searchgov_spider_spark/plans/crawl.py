@@ -95,7 +95,6 @@ class CrawlEngine:
         robots: DataFrame | None = None,
         config: CrawlConfig = DEFAULT_CONFIG,
         state_dir: str | None = None,
-        user_agent: str = "usasearch",
         use_bloom_over: int = 50_000,
         seen_filter: str = "bloom",
     ):
@@ -111,7 +110,6 @@ class CrawlEngine:
         self.config = config
         self.state_dir = Path(state_dir) if state_dir else None
         self.store = ParquetStateStore(spark, state_dir) if state_dir else None
-        self.user_agent = user_agent
         self.use_bloom_over = use_bloom_over
         self.seen_filter = seen_filter
         self._bloom = None
@@ -190,7 +188,7 @@ class CrawlEngine:
             "url_hash", url_hash_col("canon_url")
         ).withColumn("domain", url_host_col("canon_url"))
         if self.robots is not None:
-            withc = apply_robots(withc, self.robots, self.user_agent, host_col="domain")
+            withc = apply_robots(withc, self.robots, self.config.user_agent, host_col="domain")
         else:
             withc = withc.withColumn("crawl_delay", F.lit(None).cast("double"))
         return withc

@@ -7,19 +7,22 @@ Reference behaviors:
 - O2 endpoint — pipelines.py:105-109,143-167: accumulate URLs until the
   summed byte length reaches 100 KB (``MAX_URL_BATCH_SIZE_BYTES``), POST
   ``{"urls": [...]}``, flush the remainder on close.
-- O3 Elasticsearch bulk — es_batch_upload.py:25-134: 50-doc batches,
-  ``_id`` = sha256(url). In-sandbox the ES cluster is replaced by the
-  ``documents`` table write (bucketed parquet = the Iceberg layout).
-- O4 JSON feed — test_full_crawl.py:156 (scrapy FEEDS) → ``write.json``.
+- O3 Elasticsearch bulk — es_batch_upload.py:25-134 uploads 50-doc
+  batches with ``_id`` = sha256(url). Here the ES cluster is replaced by
+  the ``documents`` table: ``write_documents`` appends the whole frame in
+  one parquet write (partitioned by wave and bucket(url), the Iceberg
+  layout), with no batching; ``doc_id`` = sha256(url) keeps ``_id``.
+- O4 JSON feed — test_full_crawl.py:156 (scrapy FEEDS) is a plain
+  ``DataFrame.write.json``; it needs no sink of its own.
 - O5 JSON logs / lineage — extensions/json_logging.py:14-141 → a
   ``lineage`` table with per-partition row counts + per-wave metrics.
 
 Scale notes: batch ids come from a running byte-sum window *per domain
 partition* (a global Window.orderBy would serialize the sink on one
 task); file rotation maps to ``maxRecordsPerFile``, which Spark enforces
-per task without any shuffle. The POST itself is stubbed behind an
-import-try (no network in this sandbox) with an outbox-table fallback —
-the real deployment point is ``foreachPartition`` + requests.Session.
+per task without any shuffle. The POST itself runs in
+``foreachPartition`` with a requests.Session and needs ``requests``;
+without it, write the payloads table out for an external uploader.
 """
 
 from __future__ import annotations
@@ -33,7 +36,6 @@ from pyspark.sql import functions as F
 from ..functions.urls import url_sha256_col
 
 MAX_URL_BATCH_SIZE_BYTES = 100 * 1024  # pipelines.py:34
-ES_BATCH_DOCS = 50                     # es_batch_upload.py:28
 
 
 # ---------------------------------------------------------------------------
@@ -119,7 +121,7 @@ def write_urls_csv(
 
 
 # ---------------------------------------------------------------------------
-# O2: endpoint POST (stubbed) / outbox
+# O2: endpoint POST
 # ---------------------------------------------------------------------------
 
 def post_endpoint_batches(payloads: DataFrame, endpoint_url: str) -> None:
@@ -132,19 +134,14 @@ def post_endpoint_batches(payloads: DataFrame, endpoint_url: str) -> None:
             import requests  # noqa: F401  (absent in sandbox)
         except ImportError as exc:  # pragma: no cover - sandbox path
             raise NotImplementedError(
-                "endpoint POST requires the 'requests' library; in-sandbox use "
-                "write_outbox() and drain the outbox table externally"
+                "endpoint POST requires the 'requests' library; without it, "
+                "write the payloads table out and drain it externally"
             ) from exc
         with requests.Session() as session:
             for row in rows:
                 session.post(endpoint_url, data=row["payload"], timeout=15)
 
     payloads.foreachPartition(send)
-
-
-def write_outbox(payloads: DataFrame, path: str) -> None:
-    """O2 sandbox sink: persist batches for an external uploader."""
-    payloads.write.mode("append").parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -163,11 +160,6 @@ def write_documents(
     out = out.withColumn("bucket", F.pmod(F.xxhash64(url_col), F.lit(n_buckets)))
     cols = ["wave", "bucket"] if "wave" in out.columns else ["bucket"]
     out.write.mode("append").partitionBy(*cols).parquet(path)
-
-
-def write_json_feed(docs: DataFrame, path: str) -> None:
-    """O4: JSON-lines feed of emitted items."""
-    docs.write.mode("overwrite").json(path)
 
 
 # ---------------------------------------------------------------------------

@@ -367,7 +367,7 @@ def _sim_filter_reason(url: str, depth: int, job: SimJob) -> str | None:
     return None
 
 
-def _sim_robots(robots_rows, user_agent="usasearch"):
+def _sim_robots(robots_rows, user_agent: str):
     by_domain: dict[str, dict] = {}
     for (dom, ua, allow, deny, delay, _sm) in robots_rows:
         cur = by_domain.get(dom)
@@ -412,12 +412,11 @@ def simulate_crawl(
     graph: dict,
     config: CrawlConfig = CrawlConfig(wave_seconds=30.0),
     max_waves: int = 32,
-    user_agent: str = "usasearch",
 ) -> SimResult:
     """Sequential golden-oracle crawl, semantics-equal to plans.crawl.CrawlEngine."""
     pages_by_canon = {p.canon_url: p for p in graph["pages"]}
     jobs = {j.name: j for j in _sim_jobs(graph["seeds_rows"])}
-    robots = _sim_robots(graph["robots_rows"], user_agent)
+    robots = _sim_robots(graph["robots_rows"], config.user_agent)
     res = SimResult()
 
     # frontier: canon -> entry dict; ordering key (priority, depth, disc, job, url)

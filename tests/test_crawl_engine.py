@@ -94,6 +94,29 @@ def test_robots_blocked_never_fetched(crawl_outputs):
     assert result.seen.filter(F.col("canon_url").contains("/private/")).count() == 0
 
 
+def test_robots_rules_follow_config_user_agent(spark, graph):
+    """Robots groups are picked for ``CrawlConfig.user_agent``: crawling as
+    ``otherbot`` never schedules a path that ``*`` allows but otherbot's
+    group disallows, and the simulator, reading the same setting, agrees
+    wave by wave."""
+    g = {**graph, "robots_rows": [
+        ("hot.example.gov", "*", [], [], 1.0, []),
+        ("hot.example.gov", "otherbot", [], ["/private/"], 1.0, []),
+    ]}
+    # under the default agent the `*` group lets the crawl reach /private/
+    assert any("/private/" in u for u in simulate_crawl(g, CFG, max_waves=3).seen)
+    cfg = CrawlConfig(wave_seconds=30.0, salt_buckets=4, user_agent="otherbot")
+    pages_df, seeds_df, robots_df = graph_to_dfs(spark, g)
+    res = CrawlEngine(
+        spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df, config=cfg
+    ).run(max_waves=3)
+    sim = simulate_crawl(g, cfg, max_waves=3)
+    seen = {r["canon_url"] for r in res.seen.collect()}
+    assert not any("/private/" in u for u in seen)
+    assert seen == sim.seen
+    assert res.scheduled_per_wave == sim.scheduled_per_wave
+
+
 def test_deny_and_offsite_never_seen(crawl_outputs):
     result, _ = crawl_outputs
     seen = result.seen
@@ -204,6 +227,25 @@ def test_resume_classmethod_and_state_store(spark, graph, tmp_path):
     assert [w.scheduled for w in r1.waves] + [w.scheduled for w in r2.waves] == sim.scheduled_per_wave
 
     store = ParquetStateStore(spark, state)
+    # D4 emit dedup: each canonical URL is scheduled once (D1), so no
+    # document is emitted twice across run + resume, not even a page that
+    # several parents link under two raw spellings (plain and #fragment)
+    from searchgov_spider_spark.functions.urls import canonicalize_url
+
+    docs = store.read_accumulated("documents").select("doc_id", "url").collect()
+    canon = [canonicalize_url(r["url"]) for r in docs]
+    assert len(docs) == sim.documents
+    assert len({r["doc_id"] for r in docs}) == len(docs)
+    assert len(set(canon)) == len(docs)
+    links: dict[str, set] = {}
+    for p in graph["pages"]:
+        for link in p.out_links:
+            links.setdefault(canonicalize_url(link), set()).add((p.url, link))
+    assert any(
+        len({raw for _, raw in links.get(c, ())}) >= 2 and len({src for src, _ in links[c]}) >= 2
+        for c in canon
+    )
+
     waves = store.committed_waves("seen")
     assert len(waves) >= 2
     # seen is delta-per-wave: compaction merges deltas without data loss

@@ -342,17 +342,13 @@ class TestCanonicalizeNative:
         None,
     ]
 
-    def test_with_canonical_both_modes(self, spark):
+    def test_with_canonical_matches_canonicalize_url(self, spark):
         from searchgov_spider_spark.functions import urls as u
 
         df = spark.createDataFrame(
             [(i, c) for i, c in enumerate(self.CASES)], "i long, url string"
         )
         want = {i: u.canonicalize_url(c) for i, c in enumerate(self.CASES)}
-        for cheap in (False, True):
-            got = {
-                r["i"]: r["canon_url"]
-                for r in u.with_canonical(df, rescan_cheap=cheap).collect()
-            }
-            assert got == want, f"rescan_cheap={cheap}"
+        got = {r["i"]: r["canon_url"] for r in u.with_canonical(df).collect()}
+        assert got == want
 

@@ -327,29 +327,31 @@ def test_bloom_scatter_dense_sparse_bit_identical():
 
 
 def test_delta_bloom_driver_path_equivalent(spark):
-    """build_delta_bloom's driver-side small path must produce the exact
-    same bitmap as the distributed partial-bitmap build."""
+    """The distributed partial-bitmap build, build_delta_bloom's
+    driver-side small path and the build from pre-collected hashes
+    (bench.py's wave) must produce the same bitmaps, bit for bit, with
+    one shard and with several."""
     from pyspark.sql import functions as F
 
     from searchgov_spider_spark.operators.dedup import (
-        BloomSpec, build_bloom, build_bloom_driver,
+        BloomSpec, build_bloom, build_bloom_from_hashes, build_delta_bloom,
     )
 
     df = spark.range(5000).select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
-    spec = BloomSpec.for_capacity(100_000, 0.01, n_shards=2)
-    a = build_bloom(df, spec=spec)
-    b = build_bloom_driver(df, spec=spec)
-    assert a.spec == b.spec
-    for s in range(spec.n_shards):
-        assert (a.shards[s] == b.shards[s]).all()
-    # the folded-action path (pre-collected hashes, bench.py's wave) must
-    # match the DataFrame driver path bit-for-bit too
-    from searchgov_spider_spark.operators.dedup import build_bloom_from_hashes
-
     h = df.toPandas()["url_hash"].to_numpy()
-    c = build_bloom_from_hashes(h, spec)
-    for s in range(spec.n_shards):
-        assert (b.shards[s] == c.shards[s]).all()
+    for n_shards in (1, 4):
+        spec = BloomSpec.for_capacity(100_000, 0.01, n_shards=n_shards)
+        blooms = [
+            build_bloom(df, spec=spec),
+            build_delta_bloom(df, spec, n_rows=len(h)),
+            build_bloom_from_hashes(h, spec),
+        ]
+        assert all(blooms[0].shards[s].any() for s in range(n_shards))
+        for b in blooms:
+            assert b.spec == spec
+            assert sorted(b.shards) == list(range(n_shards))
+            for s in range(n_shards):
+                assert (b.shards[s] == blooms[0].shards[s]).all(), (n_shards, s)
 
 
 def test_drain_report_ceil_div_and_eta(spark):

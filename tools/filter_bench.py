@@ -22,12 +22,7 @@ import numpy as np
 sys.path.insert(0, ".")
 
 from searchgov_spider_spark.operators.cuckoo import CuckooFilter  # noqa: E402
-from searchgov_spider_spark.operators.dedup import (  # noqa: E402
-    BloomSpec,
-    ShardedBloom,
-    _add_to_bits,
-    _empty_bits,
-)
+from searchgov_spider_spark.operators.dedup import BloomSpec, ShardedBloom  # noqa: E402
 
 
 def bench(n_keys: int) -> None:
@@ -37,13 +32,13 @@ def bench(n_keys: int) -> None:
 
     # -- bloom (the engine default: fpp 2%, single shard here) --------------
     spec = BloomSpec.for_capacity(n_keys, fpp=0.02)
-    bits = _empty_bits(spec)
+    bloom = ShardedBloom(spec, {})
     t0 = time.monotonic()
     # same batching as build_bloom's executor-side partial builder
     for lo in range(0, n_keys, 4_000_000):
-        _add_to_bits(bits, keys[lo : lo + 4_000_000], spec)
+        bloom.add(keys[lo : lo + 4_000_000])
     t_build = time.monotonic() - t0
-    bloom = ShardedBloom(spec, {0: bits})
+    bits = bloom.shards[0]
     t0 = time.monotonic()
     hits = bloom.contains(probes_neg)
     t_probe = time.monotonic() - t0

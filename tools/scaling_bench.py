@@ -1,10 +1,12 @@
 """Scaling-efficiency evidence for the north_rule (>= 0.8 at 4N vs N).
 
 No real cluster exists in this sandbox, so the same bench job runs at two
-parallelism levels on identical input — local[8] (N) and local[32] (4N) —
-in separate JVMs. Strong-scaling efficiency = (T_8 / T_32) / 4.
+parallelism levels on identical input — local[4] (N) and local[16] (4N) by
+default — in separate JVMs. Strong-scaling efficiency = (T_N / T_4N) / 4.
 
-Writes BENCH.md with throughput at both sizes plus per-query timings.
+Prints one JSON object: the crawl-wave seconds at both sizes, the
+efficiency and each leg's full bench.py result (throughput, per-query
+timings, steal). It writes no file; curate BENCH.md by hand from it.
 
 Usage: python tools/scaling_bench.py [frontier_n]
 """
@@ -54,54 +56,24 @@ def main():
     # default pairing is local[4] vs local[16]: same 4x ratio, neither leg
     # oversubscribed -- the honest single-box analog of adding executors.
     n_small, n_big = (int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_LEGS", "4,16").split(","))
-    r8 = r32 = None
+    small = big = None
     for _ in range(rounds):
         a = run_bench(n_small, frontier_n, sf_dir)
         b = run_bench(n_big, frontier_n, sf_dir)
-        if r8 is None or a["queries"]["crawl_wave"] < r8["queries"]["crawl_wave"]:
-            r8 = a
-        if r32 is None or b["queries"]["crawl_wave"] < r32["queries"]["crawl_wave"]:
-            r32 = b
-    t8, t32 = r8["queries"]["crawl_wave"], r32["queries"]["crawl_wave"]
-    ratio = n_big / n_small
-    eff = (t8 / t32) / ratio
-
-    lines = [
-        "# BENCH — measured throughput + scaling efficiency",
-        "",
-        f"Generated by tools/scaling_bench.py (wall {time.time()-t0:.0f}s). Same job, same",
-        f"deterministic synthetic .gov frontier ({frontier_n:,} URLs over 1,759 domains with a",
-        "25%-hot domain), identical input at both parallelism levels; separate JVMs.",
-        "This sandbox is a shared microVM (measured CPU steal "
-        f"{r8.get('steal_pct')}% / {r32.get('steal_pct')}% during the two legs); each leg",
-        "reports the minimum of its wave trials to factor out host interference.",
-        "",
-        "| parallelism | crawl-wave sec (min) | trials | URLs/sec |",
-        "|---|---|---|---|",
-        f"| local[{n_small}]  (N)  | {t8:.2f} | {r8.get('wave_trials')} | {r8['value']:,.0f} |",
-        f"| local[{n_big}] (4N) | {t32:.2f} | {r32.get('wave_trials')} | {r32['value']:,.0f} |",
-        "",
-        f"**Strong-scaling efficiency (4N vs N) = (T_N / T_4N) / 4 = {eff:.3f}**"
-        + ("  — meets the >= 0.8 north-rule target." if eff >= 0.8 else "  — below 0.8 target; see notes."),
-        "",
-        "Per-query seconds at local[32], sf=" + str(r32.get("sf")) + ":",
-        "",
-        "| query | sec |",
-        "|---|---|",
-    ]
-    for name, sec in sorted(r32["queries"].items()):
-        lines.append(f"| {name} | {sec} |")
-    lines += [
-        "",
-        "Raw JSON:",
-        "```json",
-        json.dumps(r8),
-        json.dumps(r32),
-        "```",
-    ]
-    with open(os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(json.dumps({"t8": t8, "t32": t32, "efficiency": round(eff, 3)}))
+        if small is None or a["queries"]["crawl_wave"] < small["queries"]["crawl_wave"]:
+            small = a
+        if big is None or b["queries"]["crawl_wave"] < big["queries"]["crawl_wave"]:
+            big = b
+    t_small, t_big = small["queries"]["crawl_wave"], big["queries"]["crawl_wave"]
+    eff = (t_small / t_big) / (n_big / n_small)
+    print(json.dumps({
+        "frontier_n": frontier_n,
+        "cpus": [n_small, n_big],
+        "crawl_wave_s": [t_small, t_big],
+        "efficiency": round(eff, 3),
+        "wall_s": round(time.time() - t0),
+        "runs": [small, big],
+    }))
 
 
 if __name__ == "__main__":
