@@ -36,6 +36,8 @@ and the revalidation join co-partitions with the frontier's url-hash layout.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -414,6 +416,37 @@ def warc_records_sql(fetch_log_cte: str, body_expr: str = "body", n_files: int =
     """
 
 
+@contextlib.contextmanager
+def _attempt_files(out_dir: str):
+    """Commit protocol for one task attempt's shard files. The block gets
+    an ``open_shard(name)`` that opens a temp path unique to this attempt;
+    when the block completes, each file is renamed onto its final name
+    with ``os.replace`` (atomic on POSIX). An attempt that fails or is
+    killed mid-partition removes its temps, so a retried, duplicate or
+    speculative attempt never leaves a torn shard behind: the final name
+    always holds one complete copy, or nothing."""
+    import os
+    import uuid
+
+    attempt = uuid.uuid4().hex
+    pending: list[tuple[str, str]] = []
+
+    def open_shard(name: str):
+        tmp = os.path.join(out_dir, f".{name}.{attempt}.tmp")
+        pending.append((tmp, os.path.join(out_dir, name)))
+        return open(tmp, "wb")
+
+    try:
+        yield open_shard
+    except BaseException:
+        for tmp, _ in pending:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+        raise
+    for tmp, final in pending:
+        os.replace(tmp, final)
+
+
 def write_warc_files(records: DataFrame, out_dir: str) -> None:
     """Physically write :func:`warc_records` output as .warc files whose
     byte layout matches the manifest exactly: seek(offset) + read
@@ -422,9 +455,11 @@ def write_warc_files(records: DataFrame, out_dir: str) -> None:
     Distributed shape: one hash exchange on ``warc_file`` (reused from
     the operator's window), records sorted inside each partition, then
     a per-partition streaming writer that appends each file's records
-    in manifest order — no driver collect, O(1) memory per task. The
-    sandbox writer targets a POSIX path; on a cluster the same pattern
-    writes through the Hadoop FileSystem API.
+    in manifest order — no driver collect, O(1) memory per task. Each
+    task attempt writes its files under temp names and renames them when
+    its partition is complete (:func:`_attempt_files`). The sandbox writer
+    targets a POSIX path; on a cluster the same pattern writes through
+    the Hadoop FileSystem API.
     """
     import os
 
@@ -434,18 +469,19 @@ def write_warc_files(records: DataFrame, out_dir: str) -> None:
     ).sortWithinPartitions("warc_file", "offset")
 
     def _write(rows):
-        cur_name, handle = None, None
-        try:
-            for r in rows:
-                if r["warc_file"] != cur_name:
-                    if handle is not None:
-                        handle.close()
-                    cur_name = r["warc_file"]
-                    handle = open(os.path.join(out_dir, cur_name), "wb")
-                handle.write(r["record"].encode("UTF-8"))
-        finally:
-            if handle is not None:
-                handle.close()
+        with _attempt_files(out_dir) as open_shard:
+            cur_name, handle = None, None
+            try:
+                for r in rows:
+                    if r["warc_file"] != cur_name:
+                        if handle is not None:
+                            handle.close()
+                        cur_name = r["warc_file"]
+                        handle = open_shard(cur_name)
+                    handle.write(r["record"].encode("UTF-8"))
+            finally:
+                if handle is not None:
+                    handle.close()
 
     placed.foreachPartition(_write)
 
@@ -466,6 +502,8 @@ def write_warc_gz_files(records: DataFrame, out_dir: str) -> DataFrame:
     semantics make the whole file a valid stream (members concatenate)
     while any single record is readable via seek(offset)+read(length) —
     exactly how CDX consumers fetch one capture from a 1 GB archive.
+
+    Files are committed per task attempt, as in :func:`write_warc_files`.
 
     Scale shape: one exchange (reusing the operator's warc_file key),
     O(1) writer memory per task, manifest rows stream back as the
@@ -494,32 +532,33 @@ def write_warc_gz_files(records: DataFrame, out_dir: str) -> DataFrame:
 
         import pandas as pd
 
-        cur_name, handle, pos = None, None, 0
-        try:
-            for pdf in batches:
-                rows = []
-                for r in pdf.itertuples(index=False):
-                    if r.warc_file != cur_name:
-                        if handle is not None:
-                            handle.close()
-                        cur_name = r.warc_file
-                        handle = open(os.path.join(out_dir, cur_name + ".gz"), "wb")
-                        pos = 0
-                    member = gzip.compress(r.record.encode("UTF-8"), mtime=0)
-                    handle.write(member)
-                    rows.append(
-                        (cur_name, pos, len(member), r.surt, r.fetch_ts, r.url, r.digest)
+        with _attempt_files(out_dir) as open_shard:
+            cur_name, handle, pos = None, None, 0
+            try:
+                for pdf in batches:
+                    rows = []
+                    for r in pdf.itertuples(index=False):
+                        if r.warc_file != cur_name:
+                            if handle is not None:
+                                handle.close()
+                            cur_name = r.warc_file
+                            handle = open_shard(cur_name + ".gz")
+                            pos = 0
+                        member = gzip.compress(r.record.encode("UTF-8"), mtime=0)
+                        handle.write(member)
+                        rows.append(
+                            (cur_name, pos, len(member), r.surt, r.fetch_ts, r.url, r.digest)
+                        )
+                        pos += len(member)
+                    yield pd.DataFrame(
+                        rows,
+                        columns=[
+                            "warc_file", "offset", "length", "surt",
+                            "fetch_ts", "url", "digest",
+                        ],
                     )
-                    pos += len(member)
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "warc_file", "offset", "length", "surt",
-                        "fetch_ts", "url", "digest",
-                    ],
-                )
-        finally:
-            if handle is not None:
-                handle.close()
+            finally:
+                if handle is not None:
+                    handle.close()
 
     return placed.mapInPandas(_write, out_schema)

@@ -108,14 +108,11 @@ def _depth_ok(depth: Column, depth_limit: Column) -> Column:
     return depth <= depth_limit
 
 
-def with_filter_verdict(candidates: DataFrame, job_rules: DataFrame) -> DataFrame:
-    """Join candidates to their job's rules (broadcast) and add
-    ``filter_reason`` — null when the row passes all pre-fetch filters,
-    else the name of the FIRST failing filter (reference middleware order).
-
-    Expects candidates columns: url, depth, job.
-    """
-    joined = candidates.join(F.broadcast(job_rules), "job", "left")
+def filter_reason_col() -> Column:
+    """Over a candidate row joined to its job's rules: null when the row
+    passes all pre-fetch filters, else the name of the FIRST failing
+    filter (reference middleware order). The tree is a few thousand py4j
+    calls to build, so a wave loop builds it once and passes it in."""
     url, host = F.col("url"), url_host_col("url")
     checks = [
         ("offsite_domain", _offsite_domain_ok(host, F.col("allowed_hosts"))),
@@ -128,9 +125,27 @@ def with_filter_verdict(candidates: DataFrame, job_rules: DataFrame) -> DataFram
     reason = F.lit(None).cast("string")
     for name, ok in reversed(checks):
         reason = F.when(~F.coalesce(ok, F.lit(False)), F.lit(name)).otherwise(reason)
-    return joined.withColumn("filter_reason", reason)
+    return reason
 
 
-def apply_prefetch_filters(candidates: DataFrame, job_rules: DataFrame) -> DataFrame:
+def with_filter_verdict(
+    candidates: DataFrame, job_rules: DataFrame, reason: Column | None = None
+) -> DataFrame:
+    """Join candidates to their job's rules (broadcast) and add
+    ``filter_reason`` (:func:`filter_reason_col`, or ``reason`` if given).
+
+    Expects candidates columns: url, depth, job.
+    """
+    joined = candidates.join(F.broadcast(job_rules), "job", "left")
+    return joined.withColumn("filter_reason", filter_reason_col() if reason is None else reason)
+
+
+def apply_prefetch_filters(
+    candidates: DataFrame, job_rules: DataFrame, reason: Column | None = None
+) -> DataFrame:
     """Rows surviving F1-F7, with rule columns attached (priority etc.)."""
-    return with_filter_verdict(candidates, job_rules).filter(F.col("filter_reason").isNull()).drop("filter_reason")
+    return (
+        with_filter_verdict(candidates, job_rules, reason)
+        .filter(F.col("filter_reason").isNull())
+        .drop("filter_reason")
+    )

@@ -94,25 +94,42 @@ def robots_allowed_col(path: Column, allow_prefixes: Column, disallow_prefixes: 
     return (deny_len == 0) | (allow_len >= deny_len)
 
 
+def robots_keep_col() -> Column:
+    """Over a candidate row joined to its domain's agent rules: true when
+    the domain has no rules row or its rules allow the URL's path. Built
+    once per wave loop, like the rules themselves."""
+    allowed = robots_allowed_col(url_path_col("url"), F.col("allow_prefixes"), F.col("disallow_prefixes"))
+    return F.col("allow_prefixes").isNull() | allowed
+
+
+def apply_agent_rules(
+    candidates: DataFrame,
+    rules: DataFrame,
+    host_col: str | None = None,
+    keep: Column | None = None,
+) -> DataFrame:
+    """Drop candidates disallowed by their domain's row of ``rules`` (the
+    output of :func:`select_agent_rules`) and attach ``crawl_delay``
+    (politeness floor). Missing rules row ⇒ allowed, null delay.
+    ``keep`` is a prebuilt :func:`robots_keep_col`."""
+    host = F.col(host_col) if host_col else url_host_col("url")
+    joined = candidates.withColumn("_host", host).join(
+        F.broadcast(rules.withColumnRenamed("domain", "_host")), "_host", "left"
+    )
+    return joined.filter(robots_keep_col() if keep is None else keep).drop(
+        "_host", "allow_prefixes", "disallow_prefixes", "sitemap_urls"
+    )
+
+
 def apply_robots(
     candidates: DataFrame,
     robots: DataFrame,
     user_agent: str = "usasearch",
     host_col: str | None = None,
 ) -> DataFrame:
-    """Drop candidates disallowed by their domain's robots rules and attach
-    ``crawl_delay`` (politeness floor). Missing robots row ⇒ allowed, null
-    delay."""
-    rules = select_agent_rules(robots, user_agent)
-    host = F.col(host_col) if host_col else url_host_col("url")
-    joined = candidates.withColumn("_host", host).join(
-        F.broadcast(rules.withColumnRenamed("domain", "_host")), "_host", "left"
-    )
-    allowed = robots_allowed_col(url_path_col("url"), F.col("allow_prefixes"), F.col("disallow_prefixes"))
-    return (
-        joined.filter(F.col("allow_prefixes").isNull() | allowed)
-        .drop("_host", "allow_prefixes", "disallow_prefixes", "sitemap_urls")
-    )
+    """:func:`apply_agent_rules` over the ``robots`` table's rules for
+    ``user_agent``."""
+    return apply_agent_rules(candidates, select_agent_rules(robots, user_agent), host_col)
 
 
 # ---------------------------------------------------------------------------

@@ -38,7 +38,7 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, DISCOVERY_STRIDE, CrawlConfig, UNWANTED_HTTP_CODES
@@ -46,9 +46,9 @@ from ..functions.urls import url_hash_col, url_host_col, url_sha256_col, with_ca
 from ..operators.cuckoo import build_cuckoo
 from ..operators.dedup import build_bloom, build_delta_bloom, dedupe_against_seen, dedupe_intra_wave
 from ..operators.extraction import extract_spans
-from ..operators.filters import apply_prefetch_filters, normalize_job_rules
+from ..operators.filters import apply_prefetch_filters, filter_reason_col, normalize_job_rules
 from ..operators.politeness import schedule_wave
-from ..operators.robots import apply_robots
+from ..operators.robots import apply_agent_rules, robots_keep_col, select_agent_rules
 
 INTRA_WAVE_ORDER = ("depth", "discovery_idx", "job", "url")
 SEEN_COLS = ("url_hash", "canon_url")
@@ -104,9 +104,7 @@ class CrawlEngine:
             raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
 
         self.spark = spark
-        self.rules = normalize_job_rules(seeds).cache()
         self.fetcher = fetcher
-        self.robots = robots
         self.config = config
         self.state_dir = Path(state_dir) if state_dir else None
         self.store = ParquetStateStore(spark, state_dir) if state_dir else None
@@ -115,15 +113,39 @@ class CrawlEngine:
         self._bloom = None
         self._bloom_capacity = 0
 
+        # Loop invariants, built once: every wave reuses these relations
+        # and Column trees instead of re-planning them. The job rules and
+        # the agent's robots rules are driver-local, so no wave re-scans
+        # their sources or re-aggregates the robots table.
+        self.rules = _driver_local(normalize_job_rules(seeds))
+        self.agent_rules = (
+            None if robots is None else _driver_local(select_agent_rules(robots, config.user_agent))
+        )
+        self._filter_reason = filter_reason_col()
+        self._robots_keep = robots_keep_col()
+        self._emit_ok = is_valid_content_type_for_target(F.col("content_type"), F.col("output_target"))
+        self._wave_budget = self._budget_col()
+        ok = F.col("http_status") == 200
+        self._fetch_stats = (
+            F.sum(ok.cast("int")).alias("n_ok"),
+            F.sum((~ok).cast("int")).alias("n_err"),
+            F.sum(F.col("http_status").isin(*UNWANTED_HTTP_CODES).cast("int")).alias("n_unwanted"),
+        )
+
     # -- plumbing -----------------------------------------------------------
 
-    def _checkpoint(self, df: DataFrame, name: str, wave: int) -> DataFrame:
-        """Truncate lineage between waves. With a state store, persist as
-        the wave's snapshot (parquet — the Iceberg-snapshot analog) and
-        read back; else localCheckpoint."""
+    def _persist(self, df: DataFrame, name: str, wave: int, delta: bool = False) -> tuple[DataFrame, int]:
+        """Truncate lineage between waves and count the rows, in one action.
+        With a state store, commit ``df`` as the wave's snapshot (or delta;
+        parquet — the Iceberg-snapshot analog) and read it back; its rows
+        come from the written files' footers. Else localCheckpoint it,
+        counted by an observation on the same job."""
         if self.store is None:
-            return df.localCheckpoint(eager=True)
-        return self.store.write(df, name, wave)
+            obs = Observation()
+            out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+            return out, obs.get["rows"]
+        write = self.store.write_delta if delta else self.store.write
+        return write(df, name, wave), self.store.rows(name, wave)
 
     def _empty_seen(self) -> DataFrame:
         """The seen set before any delta, with no partitions: a
@@ -163,12 +185,16 @@ class CrawlEngine:
         wave = fw if sw is None else min(fw, sw)
         frontier = store.read("frontier", wave)
         if sw is None:
-            seen = engine._empty_seen()
+            seen, seen_rows = engine._empty_seen(), 0
         else:
             # union of per-wave deltas up to the resume wave; later deltas
             # (torn state) are excluded and re-marked by wave replay
             seen = store.read_accumulated("seen", up_to=wave).select("url_hash", "canon_url")
-        return engine.run_from(frontier, seen, start_wave=wave)
+            seen_rows = sum(rec["rows"] for rec in store.lineage("seen") if rec["wave"] <= wave)
+        return engine.run_from(
+            frontier, seen, start_wave=wave,
+            frontier_rows=store.rows("frontier", wave), seen_rows=seen_rows,
+        )
 
     def _prepare_candidates(self, cand: DataFrame) -> DataFrame:
         """filters → robots → canonical identity; candidates must arrive with
@@ -177,7 +203,7 @@ class CrawlEngine:
         §3.3) rides along; absent ⇒ false."""
         if "prevent_follow" not in cand.columns:
             cand = cand.withColumn("prevent_follow", F.lit(False))
-        filtered = apply_prefetch_filters(cand, self.rules).select(
+        filtered = apply_prefetch_filters(cand, self.rules, self._filter_reason).select(
             "job", "url", "depth", "discovery_idx", "priority", "prevent_follow",
             "needs_js",  # S4 routing: per-job handle_javascript flag
         )
@@ -187,8 +213,8 @@ class CrawlEngine:
         withc = with_canonical(filtered, "url", "canon_url").withColumn(
             "url_hash", url_hash_col("canon_url")
         ).withColumn("domain", url_host_col("canon_url"))
-        if self.robots is not None:
-            withc = apply_robots(withc, self.robots, self.config.user_agent, host_col="domain")
+        if self.agent_rules is not None:
+            withc = apply_agent_rules(withc, self.agent_rules, host_col="domain", keep=self._robots_keep)
         else:
             withc = withc.withColumn("crawl_delay", F.lit(None).cast("double"))
         return withc
@@ -202,12 +228,13 @@ class CrawlEngine:
         )
         return dedupe_intra_wave(self._prepare_candidates(starts), order_cols=INTRA_WAVE_ORDER)
 
-    def _maintain_bloom(self, seen: DataFrame, seen_count: int, scheduled: DataFrame, n_scheduled: int | None = None):
+    def _maintain_bloom(self, seen: DataFrame, seen_count: int, seen_delta: DataFrame, n_delta: int | None = None):
         """Incremental bloom maintenance (the Redis-SADD analog): per wave,
-        build a delta bloom from just the newly scheduled fingerprints and
-        OR it into the cumulative filter. A full rebuild happens only on
-        first use (or resume) and when the seen set outgrows the spec's
-        design capacity — O(seen) work amortized, not per wave."""
+        build a delta bloom from just the newly scheduled fingerprints (the
+        wave's ``seen_delta``) and OR it into the cumulative filter. A full
+        rebuild happens only on first use (or resume) and when the seen set
+        outgrows the spec's design capacity — O(seen) work amortized, not
+        per wave."""
         cfg = self.config
         if seen_count <= self.use_bloom_over:
             return None
@@ -225,11 +252,11 @@ class CrawlEngine:
             # O(delta) driver-side insert (Arrow transfer of just the wave's
             # 8 B/row fingerprints) — cuckoo tables aren't OR-mergeable like
             # bloom bitmaps, so the delta lands as inserts instead of a merge
-            for b in scheduled.select("url_hash").toArrow().to_batches(max_chunksize=4_000_000):
+            for b in seen_delta.select("url_hash").toArrow().to_batches(max_chunksize=4_000_000):
                 self._bloom.add(b.column(0).to_numpy(zero_copy_only=False))
         else:
             delta = build_delta_bloom(
-                scheduled.select("url_hash"), self._bloom.spec, n_rows=n_scheduled,
+                seen_delta.select("url_hash"), self._bloom.spec, n_rows=n_delta,
             )
             self._bloom.merge(delta)
         return self._bloom
@@ -275,9 +302,10 @@ class CrawlEngine:
     # -- the loop ------------------------------------------------------------
 
     def run(self, max_waves: int | None = None) -> CrawlResult:
-        frontier = self._checkpoint(self.initial_frontier(), "frontier", 0)
-        seen = self._empty_seen()
-        return self.run_from(frontier, seen, start_wave=0, max_waves=max_waves)
+        frontier, frontier_rows = self._persist(self.initial_frontier(), "frontier", 0)
+        return self.run_from(
+            frontier, self._empty_seen(), start_wave=0, max_waves=max_waves, frontier_rows=frontier_rows
+        )
 
     def run_from(
         self,
@@ -285,10 +313,14 @@ class CrawlEngine:
         seen: DataFrame,
         start_wave: int = 0,
         max_waves: int | None = None,
+        frontier_rows: int | None = None,
+        seen_rows: int | None = None,
     ) -> CrawlResult:
         """Continue a crawl from persisted (frontier, seen) state — resume
         semantics (P4): re-running a wave is idempotent because scheduling
-        dedups against `seen` and dedup absorbs replays."""
+        dedups against `seen` and dedup absorbs replays. ``frontier_rows``
+        and ``seen_rows`` are the inputs' row counts when the caller knows
+        them (state-store manifests); else they are counted here."""
         cfg = self.config
         max_waves = max_waves or cfg.max_waves
         result = CrawlResult()
@@ -298,55 +330,51 @@ class CrawlEngine:
         if "needs_js" not in frontier.columns:
             frontier = frontier.withColumn("needs_js", F.lit(False))
 
-        # Driver-action budget: the serial floor between waves is what
-        # caps scaling efficiency, so per-wave actions are folded —
-        # frontier_size carries over from the previous wave's post-
-        # checkpoint count, and the seen cardinality is tracked as a
-        # running counter (every scheduled row is provably unseen).
-        frontier_size = frontier.count()
-        seen_count = seen.count() if start_wave > 0 else 0
+        # Driver-action budget: a small wave's cost is fixed per-job
+        # overhead, so a wave runs only the actions that do real work —
+        # with a state store, exactly three: the seen-delta, documents and
+        # frontier writes. Every count the wave reports rides on them:
+        # scheduled/emitted/new rows from the written files' footers, the
+        # fetch stats and candidate count from observations on plans those
+        # writes run. The seen cardinality is a running counter (every
+        # scheduled row is provably unseen); the entry counts come from the
+        # caller when it knows them.
+        frontier_size = frontier.count() if frontier_rows is None else frontier_rows
+        seen_count = 0 if start_wave == 0 else seen.count() if seen_rows is None else seen_rows
         for wave in range(start_wave, max_waves):
             t0 = time.monotonic()
             if frontier_size == 0:
                 break
 
-            budgeted = frontier.withColumn("wave_budget", self._budget_col())
+            budgeted = frontier.withColumn("wave_budget", self._wave_budget)
             scheduled, deferred = schedule_wave(budgeted, "wave_budget", cfg.salt_buckets)
-            scheduled = scheduled.drop("wave_budget").cache()
+            fetched = self.fetcher.fetch(scheduled.drop("wave_budget")).cache()
 
             # fingerprints are recorded at schedule time, like the reference's
             # dupefilter SADD at enqueue (job_state/dupefilter.py:8-25).
             # Persistence is INCREMENTAL: only this wave's delta is written
             # (O(delta) I/O, the Redis-SADD / Iceberg-append analog); the
-            # in-memory seen set is a union of materialized deltas. This
-            # write is also what materializes the `scheduled` cache — no
-            # separate count() job.
-            seen_delta = scheduled.select(*SEEN_COLS)
-            if self.store is not None:
-                seen_delta = self.store.write_delta(seen_delta, "seen", wave + 1)
-            else:
-                seen_delta = seen_delta.localCheckpoint(eager=True)
+            # in-memory seen set is a union of materialized deltas. Every
+            # scheduled row yields exactly one fetched row (left join /
+            # disjoint routing union), so the delta is written from
+            # `fetched`: the write materializes the fetch cache, and the
+            # fetch stats are observed at its root, where no empty-relation
+            # pruning can drop them.
+            fetch_obs = Observation()
+            seen_delta, n_scheduled = self._persist(
+                fetched.observe(fetch_obs, *self._fetch_stats).select(*SEEN_COLS),
+                "seen", wave + 1, delta=True,
+            )
+            stats = fetch_obs.get
             seen = seen.unionByName(seen_delta)
-
-            fetched = self.fetcher.fetch(scheduled).cache()
-            ok = F.col("http_status") == 200
-            # every scheduled row yields exactly one fetched row (left join /
-            # disjoint routing union), so the scheduled count rides along in
-            # the stats agg instead of a dedicated count() job per wave.
-            stats = fetched.agg(
-                F.count(F.lit(1)).alias("n_sched"),
-                F.sum(ok.cast("int")).alias("n_ok"),
-                F.sum((~ok).cast("int")).alias("n_err"),
-                F.sum(F.col("http_status").isin(*UNWANTED_HTTP_CODES).cast("int")).alias("n_unwanted"),
-            ).first()
-            n_scheduled = int(stats["n_sched"] or 0)
             seen_count += n_scheduled
 
             # emit: valid content type per job target (F6) → documents rows
+            ok = F.col("http_status") == 200
             emit_ready = (
                 fetched.filter(ok)
                 .join(F.broadcast(self.rules.select("job", "output_target")), "job")
-                .filter(is_valid_content_type_for_target(F.col("content_type"), F.col("output_target")))
+                .filter(self._emit_ok)
             )
             # L1/L4: HTML pages AND PDFs flow through extraction (per-row
             # content-type dispatch); only HTML feeds the next frontier —
@@ -355,6 +383,8 @@ class CrawlEngine:
             parseable = F.col("content_type").startswith("text/html") | F.col(
                 "content_type"
             ).startswith("application/pdf")
+            follow = ~F.col("prevent_follow") & F.col("content_type").startswith("text/html")
+            links_obs = Observation()
             parsed = extract_spans(
                 fetched.filter(ok & parseable),
                 keep_cols=[
@@ -362,6 +392,9 @@ class CrawlEngine:
                     "fetch_rank", "priority", "prevent_follow", "content_type",
                 ],
                 ctype_col="content_type",
+            ).observe(
+                # an upper bound on the wave's candidates, for the dedup hint
+                links_obs, F.sum(F.when(follow, F.greatest(F.size("out_links"), F.lit(0)))).alias("n"),
             ).cache()
 
             docs_wave = (
@@ -394,20 +427,14 @@ class CrawlEngine:
             # localCheckpoint) so the accumulated documents plan is a union
             # of materialized waves, not an O(waves)-deep lineage over
             # unpersisted caches
-            if self.store is not None:
-                docs_wave = self.store.write_delta(docs_wave, "documents", wave)
-            else:
-                docs_wave = docs_wave.localCheckpoint(eager=True)
-            n_emitted = docs_wave.count()
+            docs_wave, n_emitted = self._persist(docs_wave, "documents", wave, delta=True)
             documents = docs_wave if documents is None else documents.unionByName(docs_wave)
 
             # next-wave candidates: explode out-links with deterministic order
             # (prevent_follow rows — sitemap-discovered URLs — emit documents
             # but never feed the frontier, matching prevent_follow=True +
             # depth_limit=1 crawls at sitemap_monitor.py:304-325)
-            links = parsed.filter(
-                ~F.col("prevent_follow") & F.col("content_type").startswith("text/html")
-            ).select(
+            links = parsed.filter(follow).select(
                 F.col("job"),
                 (F.col("depth") + 1).alias("depth"),
                 F.col("fetch_rank"),
@@ -417,29 +444,37 @@ class CrawlEngine:
                 (F.col("fetch_rank").cast("long") * DISCOVERY_STRIDE + F.col("pos")).cast("long"),
             ).drop("fetch_rank", "pos")
 
-            # cache: the candidate metric count and the frontier checkpoint
-            # both consume candidates — without the cache the canonicalize
-            # UDF would run twice
-            candidates = self._prepare_candidates(links).cache()
-            n_candidates = candidates.count()
-            deduped = dedupe_intra_wave(candidates, order_cols=INTRA_WAVE_ORDER)
+            # cache: the bloom path reads candidates twice (definite-new and
+            # suspect branches) — without the cache the canonicalize UDF
+            # would run twice. The count is observed inside the cached plan.
+            cand_obs = Observation()
+            candidates = self._prepare_candidates(links).observe(
+                cand_obs, F.count(F.lit(1)).alias("n")
+            ).cache()
 
-            bloom = self._maintain_bloom(seen, seen_count, scheduled, n_scheduled)
-            # n_candidates (already counted for metrics) upper-bounds the
-            # suspect set and seen_count tracks the big side, letting
-            # steady-state waves take the broadcast-probe path that never
-            # shuffles the growing `seen` table
+            bloom = self._maintain_bloom(seen, seen_count, seen_delta, n_scheduled)
+            # with a bloom, the out-link count (observed by the documents
+            # write) upper-bounds the suspect set and seen_count tracks the
+            # big side, letting steady-state waves take the broadcast-probe
+            # path that never shuffles the growing `seen` table
+            n_links = None
+            if bloom is not None and (observed := _observed(links_obs)) is not None:
+                n_links = observed["n"] or 0
+            # one intra-wave dedupe: the anti-join against `seen` is by key,
+            # so it commutes with keeping each URL's minimum-order copy, and
+            # the dedupe over deferred ∪ new keeps that copy
             new_urls = dedupe_against_seen(
-                deduped, seen, bloom,
-                candidates_hint_rows=n_candidates, seen_hint_rows=seen_count,
+                candidates, seen, bloom, candidates_hint_rows=n_links, seen_hint_rows=seen_count,
             )
-
             frontier_next = dedupe_intra_wave(
                 deferred.drop("wave_budget").unionByName(new_urls), order_cols=INTRA_WAVE_ORDER
             )
-            frontier = self._checkpoint(frontier_next, "frontier", wave + 1)
-            n_new = frontier.count()
-            next_frontier_size = n_new
+            frontier, n_new = self._persist(frontier_next, "frontier", wave + 1)
+            # AQE drops an empty-result subtree, and the observation in it
+            # (e.g. every candidate already seen and nothing deferred): then
+            # count the cache the frontier write built
+            observed = _observed(cand_obs)
+            n_candidates = observed["n"] if observed is not None else candidates.count()
 
             metrics = WaveMetrics(
                 wave=wave,
@@ -455,16 +490,33 @@ class CrawlEngine:
             )
             result.waves.append(metrics)
             self._commit_wave(wave, metrics)
-            scheduled.unpersist()
             parsed.unpersist()
             fetched.unpersist()
             candidates.unpersist()
-            frontier_size = next_frontier_size
+            frontier_size = n_new
 
         result.documents = documents
         result.seen = seen
         result.frontier = frontier
         return result
+
+
+def _driver_local(df: DataFrame) -> DataFrame:
+    """``df`` collected once and re-planned as a driver-local relation
+    (``createDataFrame`` of an Arrow table is a LocalRelation). A plan that
+    reads it re-runs nothing of ``df``'s plan: no aggregate, and no
+    Python-RDD scan of a ``createDataFrame(list)`` source."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
+
+
+def _observed(obs: Observation) -> dict | None:
+    """``obs``'s metrics, or None when the action that ran its plan reported
+    none: Spark completes an observation with an empty row when AQE
+    replaced the observed subtree by an empty relation. Call only after an
+    action whose plan contains ``obs`` (else this waits forever)."""
+    if obs._jo.getRow().length() == 0:
+        return None
+    return obs.get
 
 
 def is_valid_content_type_for_target(ctype, target):

@@ -19,6 +19,17 @@ canonicalize) as 32 tasks of ~4 rows, and each Python task costs a fixed
 those frames by their bytes: one partition for a small wave, as many as a
 production wave needs. No crawl operator depends on a cached frame's
 partition count (tests/test_crawl_engine.py pins both properties).
+
+The generated-code cache holds 1,000 classes
+(``spark.sql.codegen.cache.maxEntries``, a static conf, so a builder
+option). Spark's default of 100 is smaller than one unit of this engine's
+work: the first crawl wave of a process compiles ~155 distinct classes
+and a pass of the 15 headline analytics queries ~216 (4-vCPU box). With
+the default, each wave evicted classes the next wave needed, and Janino
+recompiled ~140 of them per 120-URL crawl wave and ~200 per warm
+analytics pass. At 1,000 entries a process compiles a class about once:
+a warm crawl wave compiles 16-22, a warm analytics pass 0-8 (BENCH.md
+"A wave pays only for its data").
 """
 
 from __future__ import annotations
@@ -70,6 +81,9 @@ def get_spark(
         # bytes need, not shuffle.partitions, so small waves stop paying
         # the fixed per-task Python cost once per empty-ish partition
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        # hold a whole wave's (and analytics pass's) generated classes, so
+        # each is compiled once per process, not once per wave (docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

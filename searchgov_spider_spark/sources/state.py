@@ -10,8 +10,8 @@ contract.
 
 The store interface is what ``ParquetStateStore`` implements; the wave
 loop (plans/crawl.py) calls write(df, name, wave), write_delta(df, name,
-wave), read(name, wave), read_accumulated(name, up_to) and
-latest_wave(name).
+wave), rows(name, wave), read(name, wave), read_accumulated(name, up_to),
+lineage(name) and latest_wave(name).
 """
 
 from __future__ import annotations
@@ -97,6 +97,11 @@ class ParquetStateStore:
             {"wave": w, **json.loads(self._manifest(name, w).read_text())["stats"]}
             for w in self.committed_waves(name)
         ]
+
+    def rows(self, name: str, wave: int) -> int:
+        """Rows committed for ``name`` at ``wave``, from its manifest's
+        footer stats: a count that runs no Spark job."""
+        return json.loads(self._manifest(name, wave).read_text())["stats"]["rows"]
 
     def _schema(self, name: str, wave: int) -> StructType:
         meta = json.loads(self._manifest(name, wave).read_text())

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from searchgov_spider_spark.operators.archive import (
@@ -478,3 +479,53 @@ def test_assign_workers_balanced_bounds_skew(spark):
     for r in out:
         counts[r["worker"]] = counts.get(r["worker"], 0) + 1
     assert set(counts.values()) == {100}
+
+
+def test_warc_writers_commit_each_attempt_whole(spark, tmp_path):
+    """Each WARC writer task commits its shard files only when its partition
+    is complete. Running the same partition twice leaves one copy of it,
+    not two. A second attempt that dies mid-partition (a record that cannot
+    be serialized; a killed speculative attempt looks the same to the file
+    system) leaves the first attempt's complete shard and no temp files,
+    not a truncated shard."""
+    import gzip
+    import os
+
+    from searchgov_spider_spark.operators.archive import warc_records, write_warc_files, write_warc_gz_files
+
+    log = spark.createDataFrame(
+        [(f"https://a.gov/p/{i}", i, 200, "text/html", f"d{i}", f"body-{i}") for i in range(12)],
+        "url string, fetch_ts long, http_status long, mime string, digest string, body string",
+    )
+    recs = warc_records(log, n_files=1).cache()
+    rows = sorted(recs.collect(), key=lambda r: r["offset"])
+    whole = "".join(r["record"] for r in rows).encode("UTF-8")
+    # the same partition with its last record unserializable: the writer
+    # has written the first 11 records when it fails
+    last = rows[-1]
+    broken = recs.withColumn(
+        "record",
+        F.when((F.col("url") == last["url"]) & (F.col("fetch_ts") == last["fetch_ts"]), None)
+        .otherwise(F.col("record")),
+    )
+
+    out = str(tmp_path / "warc")
+    for _ in range(2):
+        write_warc_files(recs, out)
+    shard = os.path.join(out, last["warc_file"])
+    assert open(shard, "rb").read() == whole
+    with pytest.raises(Exception):
+        write_warc_files(broken, out)
+    assert open(shard, "rb").read() == whole
+    assert os.listdir(out) == [last["warc_file"]]
+
+    out_gz = str(tmp_path / "warcgz")
+    for _ in range(2):
+        assert write_warc_gz_files(recs, out_gz).count() == len(rows)
+    shard_gz = os.path.join(out_gz, last["warc_file"] + ".gz")
+    data = open(shard_gz, "rb").read()
+    assert gzip.decompress(data) == whole
+    with pytest.raises(Exception):
+        write_warc_gz_files(broken, out_gz).count()
+    assert open(shard_gz, "rb").read() == data
+    assert os.listdir(out_gz) == [last["warc_file"] + ".gz"]

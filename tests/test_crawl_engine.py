@@ -8,6 +8,7 @@ seen-set, emitted-URL set, per-wave scheduled counts and crawl ordering."""
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 from functools import partial
 
 import pytest
@@ -387,7 +388,7 @@ def test_js_routing_fetcher(spark, graph):
     eng = CrawlEngine(spark, seeds_js, routing, robots=robots_df, config=CFG)
 
     # run one wave manually through the fetch path
-    frontier = eng._checkpoint(eng.initial_frontier(), "frontier", 0)
+    frontier, _ = eng._persist(eng.initial_frontier(), "frontier", 0)
     fetched = routing.fetch(frontier.withColumn("fetch_rank", F.lit(1)))
     rows = fetched.collect()
     by_job = {}
@@ -493,3 +494,101 @@ def test_small_wave_stages_fit_default_parallelism(spark, tmp_path):
     assert ran
     wide = [(st.numTasks, st.name) for st in ran if st.numTasks > sc.defaultParallelism]
     assert not wide
+
+
+# Per-wave candidates of the test web's crawl, as the engine counted them
+# with a dedicated count() before the count rode on the frontier write.
+CANDIDATES_PER_WAVE = [16, 63, 136, 12, 1]
+
+
+def _sans_seconds(waves):
+    return [dataclasses.replace(w, seconds=0.0) for w in waves]
+
+
+def test_wave_metrics_match_committed_state(spark, graph, tmp_path, crawl_outputs):
+    """Every count a wave reports rides on an action it already runs
+    (footer rows of its writes, observations on their plans), and each
+    matches what was committed: over run + resume, a wave's scheduled
+    count is its seen delta's rows and the simulator's count, its fetched
+    rows split into ok and errors, its emitted count is its documents
+    delta's rows and its new URLs are the next frontier's rows. The run
+    without a state store reports identical metrics."""
+    from searchgov_spider_spark.sources.state import ParquetStateStore
+
+    pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
+    state = str(tmp_path / "state")
+    r1 = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df,
+                     config=CFG, state_dir=state).run(max_waves=2)
+    r2 = CrawlEngine.resume(spark, seeds_df, TablePageFetcher(pages_df), state,
+                            robots=robots_df, config=dataclasses.replace(CFG, max_waves=12))
+    waves = r1.waves + r2.waves
+    sim = simulate_crawl(graph, CFG, max_waves=12)
+    store = ParquetStateStore(spark, state)
+
+    assert [w.scheduled for w in waves] == sim.scheduled_per_wave
+    assert sum(w.fetched_ok for w in waves) == sim.fetched_ok
+    assert [w.candidates for w in waves] == CANDIDATES_PER_WAVE
+    for w in waves:
+        assert w.scheduled == store.read("seen", w.wave + 1).count()
+        assert w.fetched_ok + w.http_errors == w.scheduled
+        assert w.emitted == store.read("documents", w.wave).count()
+        assert w.new_urls == store.read("frontier", w.wave + 1).count()
+    assert waves[-1].new_urls == 0  # the crawl ran to its end
+
+    store_off, _ = crawl_outputs
+    assert _sans_seconds(store_off.waves) == _sans_seconds(waves)
+
+
+@pytest.mark.parametrize("store", [True, False], ids=["store", "no-store"])
+def test_wave_without_parseable_pages_completes(spark, tmp_path, store):
+    """A wave whose fetches yield no page to parse (a 404 and a non-HTML
+    body) ends the crawl with zero candidates: no observation the wave
+    reads is left waiting on a plan that never ran."""
+    from searchgov_spider_spark.testing.graph import PAGES_SCHEMA, SEEDS_SCHEMA
+
+    pages = spark.createDataFrame(
+        [("https://a.gov/data", "a.gov", 200, "text/plain", None, [], [], b"x",
+          "https://a.gov/data")],
+        PAGES_SCHEMA,
+    )
+    seeds = spark.createDataFrame(
+        [("a", "a.gov", "https://a.gov/missing,https://a.gov/data", False, False, "csv", 3,
+          None, 1)],
+        SEEDS_SCHEMA,
+    )
+    engine = CrawlEngine(spark, seeds, TablePageFetcher(pages), config=CFG,
+                         state_dir=str(tmp_path / "state") if store else None)
+    res = engine.run(max_waves=3)
+    assert [(w.scheduled, w.fetched_ok, w.http_errors, w.candidates, w.new_urls)
+            for w in res.waves] == [(2, 1, 1, 0, 0)]
+
+
+def test_warm_wave_compiles_little_and_runs_few_jobs(spark, graph, tmp_path):
+    """A wave after the first in the process reuses the generated classes
+    of the waves before it (the session's codegen cache holds a wave) and
+    runs few Spark jobs: its three state writes are its only actions, and
+    nothing is re-derived per wave that the engine could build once. Wave
+    2 of the test web,
+    with the state store on, is measured as the difference between
+    resuming at wave 2 for one wave and for none, so the engine's set-up
+    cancels out."""
+    pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
+    state = str(tmp_path / "state")
+    CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df,
+                config=CFG, state_dir=state).run(max_waves=2)
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def resume(max_waves):
+        before = compiled.getCount()
+        res, jobs = _run_in_job_group(
+            spark, f"test-warm-wave-{max_waves}",
+            partial(CrawlEngine.resume, spark, seeds_df, TablePageFetcher(pages_df), state,
+                    robots=robots_df, config=dataclasses.replace(CFG, max_waves=max_waves)),
+        )
+        return [w.wave for w in res.waves], len(jobs), compiled.getCount() - before
+
+    none, jobs0, compiles0 = resume(2)
+    one, jobs1, compiles1 = resume(3)
+    assert (none, one) == ([], [2])
+    assert compiles1 - compiles0 < 40
+    assert jobs1 - jobs0 <= 20
