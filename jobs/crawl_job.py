@@ -24,8 +24,9 @@ In-sandbox smoke (replay fetcher, local master comes from spark-submit):
 The session factory leaves the master to spark-submit (it only defaults
 to local[N] when no gateway JVM exists), so the same script runs
 unchanged on YARN / k8s / standalone. State (frontier snapshots, seen
-deltas, per-wave metrics) commits under --state-dir each wave; rerunning
-with --resume continues from the latest committed snapshot (P4).
+and documents deltas, per-wave metrics) commits under --state-dir as one
+record per wave; rerunning with --resume continues from the newest
+commit (P4).
 """
 
 from __future__ import annotations

@@ -4,10 +4,11 @@ fetched and emitted once.
 
 D1 — URL-seen dedup (the scaling-critical operator). Two stages:
   1. probabilistic pre-filter: a sharded numpy Bloom filter built
-     distributedly (one partial bitmap per shard via applyInPandas, OR'd on
+     distributedly (one partial bitmap per shard via mapInPandas, OR'd on
      the driver) and broadcast; membership is checked in a vectorized
-     pandas UDF. At 10^10 URLs the bloom keeps ~99% of already-seen
-     candidates out of the exact join's shuffle.
+     pandas UDF. Bloom negatives are definitely new and skip the exact
+     join; only the suspects (the already-seen candidates plus the
+     filter's false positives) go into it.
   2. exact ``left_anti`` join on (url_hash, canon_url) — joining on the
      64-bit hash alone would drop distinct URLs on hash collisions
      (expected ≈3 collisions at 10^10 rows), so canon_url equality rides
@@ -219,17 +220,10 @@ def build_bloom(
     # batches — ~2x faster driver transfer than py4j row collection
     parts = hashes.mapInPandas(partial_bits, schema="shard int, bits binary").toPandas()
     # driver-side OR-reduce: n_partitions x n_shards bitmaps, never row data
-    shards: dict[int, np.ndarray] = {}
-    for s_raw, bits_raw in zip(parts["shard"], parts["bits"]):
-        s = int(s_raw)
-        part = np.frombuffer(bits_raw, dtype=np.uint8)
-        if s in shards:
-            np.bitwise_or(shards[s], part, out=shards[s])
-        else:
-            shards[s] = part.copy()
-    for s in range(spec.n_shards):
-        shards.setdefault(s, _empty_bits(spec))
-    return ShardedBloom(spec, shards)
+    bloom = ShardedBloom(spec, {s: _empty_bits(spec) for s in range(spec.n_shards)})
+    for s, bits in zip(parts["shard"], parts["bits"]):
+        bloom.merge(ShardedBloom(spec, {int(s): np.frombuffer(bits, dtype=np.uint8)}))
+    return bloom
 
 
 def build_bloom_from_hashes(h: np.ndarray, spec: BloomSpec) -> ShardedBloom:

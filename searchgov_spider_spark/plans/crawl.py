@@ -8,10 +8,11 @@ Spark restatement of the reference crawl lifecycle (SURVEY.md §3.1):
     --(canonicalize L2, explode, dedup D1 bloom + anti-join)--> frontier_{w+1}
 
 Wave = BFS level (DEPTH_PRIORITY=1 + FIFO ⇒ breadth-first in the reference,
-settings.py:61-64). Per wave the engine appends to `seen`, `documents`,
-`metrics`, and (when a state_dir is given) commits a checkpoint — the
-parquet stand-in for an Iceberg snapshot-per-wave; resume reads the last
-committed wave (P4, job_state/scheduler.py:18-47 semantics).
+settings.py:61-64). Per wave the engine appends to `seen` and `documents`,
+replaces `frontier`, and (when a state_dir is given) commits the three
+writes and the wave's metrics as one record — the parquet stand-in for an
+Iceberg snapshot-per-wave; resume reads the newest commit (P4,
+job_state/scheduler.py:18-47 semantics).
 
 Scale contract:
 - frontier/seen are hash-identified by ``url_hash = xxhash64(canon_url)``;
@@ -22,9 +23,10 @@ Scale contract:
 - the politeness window is salted two-phase top-k — operators/politeness.py.
 - filters/robots are broadcast joins + codegen predicates, always upstream
   of the fetch stage (filter-before-fetch, SURVEY.md §4).
-- per-wave lineage: every wave appends a metrics row (fetch/dedup/error
-  counts) and documents rows carry (wave, job); each state table's
-  manifest records the wave's rows/bytes/files (``store.lineage(name)``).
+- per-wave lineage: every wave reports a metrics row (fetch/dedup/error
+  counts) and documents rows carry (wave, job); each commit record holds
+  the wave's metrics and names every state file with its rows and bytes
+  (``store.record(wave)``).
 
 Determinism: ordering is (priority, depth, discovery_idx, canon_url); child
 discovery_idx = parent_fetch_rank * 65536 + link_position. The pure-Python
@@ -33,10 +35,8 @@ oracle (testing/graph.simulate_crawl) reproduces the identical crawl.
 
 from __future__ import annotations
 
-import json
 import time
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -106,7 +106,6 @@ class CrawlEngine:
         self.spark = spark
         self.fetcher = fetcher
         self.config = config
-        self.state_dir = Path(state_dir) if state_dir else None
         self.store = ParquetStateStore(spark, state_dir) if state_dir else None
         self.use_bloom_over = use_bloom_over
         self.seen_filter = seen_filter
@@ -136,16 +135,16 @@ class CrawlEngine:
 
     def _persist(self, df: DataFrame, name: str, wave: int, delta: bool = False) -> tuple[DataFrame, int]:
         """Truncate lineage between waves and count the rows, in one action.
-        With a state store, commit ``df`` as the wave's snapshot (or delta;
-        parquet — the Iceberg-snapshot analog) and read it back; its rows
-        come from the written files' footers. Else localCheckpoint it,
-        counted by an observation on the same job."""
+        With a state store, write ``df`` as table ``name``'s snapshot (or
+        delta) for commit ``wave`` and read it back; its rows come from the
+        written files' footers. Else localCheckpoint it, counted by an
+        observation on the same job."""
         if self.store is None:
             obs = Observation()
             out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
             return out, obs.get["rows"]
         write = self.store.write_delta if delta else self.store.write
-        return write(df, name, wave), self.store.rows(name, wave)
+        return write(df, name, wave)
 
     def _empty_seen(self) -> DataFrame:
         """The seen set before any delta, with no partitions: a
@@ -154,15 +153,6 @@ class CrawlEngine:
         return self.spark.createDataFrame(
             self.spark.sparkContext.emptyRDD(), "url_hash long, canon_url string"
         )
-
-    def _commit_wave(self, wave: int, metrics: WaveMetrics) -> None:
-        """The wave's commit record: written only after frontier+seen
-        snapshots landed, so resume never sees a half-written wave."""
-        if self.state_dir is None:
-            return
-        manifest = self.state_dir / "manifests" / f"wave={wave}.json"
-        manifest.parent.mkdir(parents=True, exist_ok=True)
-        manifest.write_text(json.dumps(metrics.__dict__))
 
     @classmethod
     def resume(
@@ -173,27 +163,18 @@ class CrawlEngine:
         state_dir: str,
         **kwargs,
     ) -> CrawlResult:
-        """P4: continue a crawl from the latest committed wave snapshot."""
-        from ..sources.state import ParquetStateStore
-
+        """P4: continue a crawl from its newest commit: that record's
+        frontier, seen set and row counts. Writes of a wave that never
+        committed are named by no record, so the wave replays."""
         engine = cls(spark, seeds, fetcher, state_dir=state_dir, **kwargs)
-        store: ParquetStateStore = engine.store
-        fw = store.latest_wave("frontier")
-        sw = store.latest_wave("seen")
-        if fw is None:
-            raise FileNotFoundError("no committed frontier snapshot to resume from")
-        wave = fw if sw is None else min(fw, sw)
-        frontier = store.read("frontier", wave)
-        if sw is None:
-            seen, seen_rows = engine._empty_seen(), 0
-        else:
-            # union of per-wave deltas up to the resume wave; later deltas
-            # (torn state) are excluded and re-marked by wave replay
-            seen = store.read_accumulated("seen", up_to=wave).select("url_hash", "canon_url")
-            seen_rows = sum(rec["rows"] for rec in store.lineage("seen") if rec["wave"] <= wave)
+        store = engine.store
+        wave = store.newest()
+        if wave is None:
+            raise FileNotFoundError(f"no committed wave under {state_dir} to resume from")
+        seen = store.read_accumulated("seen", wave).select(*SEEN_COLS) if wave else engine._empty_seen()
         return engine.run_from(
-            frontier, seen, start_wave=wave,
-            frontier_rows=store.rows("frontier", wave), seen_rows=seen_rows,
+            store.read("frontier", wave), seen, start_wave=wave,
+            frontier_rows=store.rows("frontier", wave), seen_rows=store.rows("seen", wave) if wave else 0,
         )
 
     def _prepare_candidates(self, cand: DataFrame) -> DataFrame:
@@ -303,6 +284,8 @@ class CrawlEngine:
 
     def run(self, max_waves: int | None = None) -> CrawlResult:
         frontier, frontier_rows = self._persist(self.initial_frontier(), "frontier", 0)
+        if self.store is not None:
+            self.store.commit(0)
         return self.run_from(
             frontier, self._empty_seen(), start_wave=0, max_waves=max_waves, frontier_rows=frontier_rows
         )
@@ -316,11 +299,11 @@ class CrawlEngine:
         frontier_rows: int | None = None,
         seen_rows: int | None = None,
     ) -> CrawlResult:
-        """Continue a crawl from persisted (frontier, seen) state — resume
-        semantics (P4): re-running a wave is idempotent because scheduling
-        dedups against `seen` and dedup absorbs replays. ``frontier_rows``
-        and ``seen_rows`` are the inputs' row counts when the caller knows
-        them (state-store manifests); else they are counted here."""
+        """Continue a crawl from (frontier, seen) state before wave
+        ``start_wave`` — resume semantics (P4). With a state store, wave
+        ``w`` commits as record ``w + 1`` on top of record ``w``, which the
+        store must hold. ``frontier_rows`` and ``seen_rows`` are the inputs'
+        row counts when the caller knows them; else they are counted here."""
         cfg = self.config
         max_waves = max_waves or cfg.max_waves
         result = CrawlResult()
@@ -427,7 +410,7 @@ class CrawlEngine:
             # localCheckpoint) so the accumulated documents plan is a union
             # of materialized waves, not an O(waves)-deep lineage over
             # unpersisted caches
-            docs_wave, n_emitted = self._persist(docs_wave, "documents", wave, delta=True)
+            docs_wave, n_emitted = self._persist(docs_wave, "documents", wave + 1, delta=True)
             documents = docs_wave if documents is None else documents.unionByName(docs_wave)
 
             # next-wave candidates: explode out-links with deterministic order
@@ -489,7 +472,8 @@ class CrawlEngine:
                 seconds=time.monotonic() - t0,
             )
             result.waves.append(metrics)
-            self._commit_wave(wave, metrics)
+            if self.store is not None:
+                self.store.commit(wave + 1, metrics.__dict__)
             parsed.unpersist()
             fetched.unpersist()
             candidates.unpersist()

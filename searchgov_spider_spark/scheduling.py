@@ -25,7 +25,7 @@ reruns it under ``Rerun::{job_id}``), or entry removed after completion
 completion and entry removal — is the same window the reference has,
 and is harmless here because the crawl job itself is idempotent: its
 wave checkpoints under ``state_root/{job_id}`` make a rerun RESUME the
-crawl (P4, plans/crawl.py:166), not duplicate its output.
+crawl (P4, ``CrawlEngine.resume``), not duplicate its output.
 """
 
 from __future__ import annotations
@@ -147,22 +147,20 @@ def engine_runner(spark, fetcher, robots=None, max_waves: int | None = None):
     state_root/{job_id} so a Rerun:: replay RESUMES an interrupted crawl
     instead of duplicating it.
 
-    Resume is decided by the state dir itself: a committed frontier
-    snapshot means a previous boot died mid-crawl (its pending entry is
-    what routed us here), so continue from the latest committed wave
-    (P4, plans/crawl.py:142). A completed-then-killed-before-unlink job
+    Resume is decided by the state dir itself, before any engine is
+    built: a commit means a previous boot died mid-crawl (its pending
+    entry is what routed us here), so continue from the newest commit
+    (P4, ``CrawlEngine.resume``). A completed-then-killed-before-unlink job
     resumes from its drained frontier and terminates immediately — the
     at-least-once window degrades to a no-op, never duplicate output."""
     from .plans.crawl import CrawlEngine
+    from .sources.state import ParquetStateStore
 
     def run(site: CrawlSite, run_id: str, state_dir: str | Path | None = None):
         seeds = CrawlSites([site]).to_seeds_df(spark)
         sd = str(state_dir) if state_dir else None
-        engine = CrawlEngine(spark, seeds, fetcher, robots=robots, state_dir=sd)
-        if sd and engine.store.latest_wave("frontier") is not None:
-            return CrawlEngine.resume(
-                spark, seeds, fetcher, robots=robots, state_dir=sd
-            )
-        return engine.run(max_waves=max_waves)
+        if sd and ParquetStateStore(spark, sd).newest() is not None:
+            return CrawlEngine.resume(spark, seeds, fetcher, robots=robots, state_dir=sd)
+        return CrawlEngine(spark, seeds, fetcher, robots=robots, state_dir=sd).run(max_waves=max_waves)
 
     return run

@@ -192,16 +192,13 @@ def test_resume_from_checkpoint(spark, graph, tmp_path):
     e1 = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df,
                      config=CFG, state_dir=state)
     r1 = e1.run(max_waves=2)
-    # resume: rebuild engine, reload persisted frontier + accumulated
-    # seen deltas (seen is stored incrementally — one delta dir per wave)
+    # resume: rebuild engine, reload the frontier before wave 2 and the
+    # seen set after 2 waves (seen is stored incrementally — one delta per wave)
     from searchgov_spider_spark.sources.state import ParquetStateStore
 
-    frontier = spark.read.parquet(f"{state}/frontier/wave=2").drop("bucket")
-    seen = (
-        ParquetStateStore(spark, state)
-        .read_accumulated("seen", up_to=2)
-        .select("url_hash", "canon_url")
-    )
+    store = ParquetStateStore(spark, state)
+    frontier = store.read("frontier", 2)
+    seen = store.read_accumulated("seen", up_to=2).select("url_hash", "canon_url")
     e2 = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df, config=CFG)
     r2 = e2.run_from(frontier, seen, start_wave=2, max_waves=12)
     sim = simulate_crawl(graph, CFG, max_waves=12)
@@ -211,8 +208,9 @@ def test_resume_from_checkpoint(spark, graph, tmp_path):
 
 
 def test_resume_classmethod_and_state_store(spark, graph, tmp_path):
-    """CrawlEngine.resume picks up from the latest committed snapshot via
-    ParquetStateStore; snapshot expiry keeps only recent waves."""
+    """CrawlEngine.resume picks up from the newest commit via
+    ParquetStateStore, which holds one commit record per wave; compaction
+    and snapshot expiry keep the committed content."""
     from searchgov_spider_spark.sources.state import ParquetStateStore
 
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
@@ -247,43 +245,31 @@ def test_resume_classmethod_and_state_store(spark, graph, tmp_path):
         for c in canon
     )
 
-    waves = store.committed_waves("seen")
-    assert len(waves) >= 2
+    # one commit record per wave (commit 0 holds the initial frontier),
+    # each holding its wave's metrics, and no per-table manifests
+    n = len(r1.waves) + len(r2.waves)
+    root = tmp_path / "state"
+    assert sorted(p.name for p in (root / "commits").iterdir()) == sorted(
+        f"wave={c}.json" for c in range(n + 1)
+    )
+    assert not (root / "manifests").exists()
+    assert [store.record(c)["metrics"]["scheduled"] for c in range(1, n + 1)] == sim.scheduled_per_wave
+    # per-wave lineage: the newest record names every seen delta with its
+    # footer rows and bytes, and they sum to the table's row count
+    files = store.record()["tables"]["seen"]["files"]
+    assert sorted({f["wave"] for f in files}) == list(range(1, n + 1))
+    assert all(f["rows"] > 0 and f["bytes"] > 0 for f in files)
+    assert sum(f["rows"] for f in files) == store.rows("seen") == len(sim.seen)
     # seen is delta-per-wave: compaction merges deltas without data loss
-    merged = store.compact("seen")
-    assert merged == len(waves) - 1
-    assert store.committed_waves("seen") == [waves[-1]]
+    assert store.compact("seen") == len(files)
+    assert len({f["path"].rsplit("/", 1)[0] for f in store.record()["tables"]["seen"]["files"]}) == 1
     assert store.read_accumulated("seen").count() == len(sim.seen)
-    # per-wave lineage: every committed wave records rows/bytes/files in
-    # its manifest, and they sum to the table's row count
-    lineage = store.lineage("seen")
-    assert lineage and all(rec["rows"] > 0 and rec["bytes"] > 0 for rec in lineage)
-    assert sum(rec["rows"] for rec in lineage) == len(sim.seen)
-    # frontier is snapshot-per-wave: expiry drops superseded snapshots
-    fwaves = store.committed_waves("frontier")
-    removed = store.expire("frontier", keep_last=1)
-    assert removed == len(fwaves) - 1
-    assert store.read("frontier").count() >= 0
-
-
-def test_compact_up_to_preserves_torn_state_cut(spark, tmp_path):
-    """Compaction bounded by a sibling's latest wave must not fold a torn
-    delta (committed past the resume cut) into an older wave."""
-    from searchgov_spider_spark.sources.state import ParquetStateStore
-
-    store = ParquetStateStore(spark, str(tmp_path / "state"), n_buckets=4)
-    for w, lo in [(1, 0), (2, 10), (3, 20)]:  # wave 3 = torn (no frontier commit)
-        delta = spark.range(lo, lo + 10).selectExpr(
-            "id as url_hash", "concat('https://a.gov/', id) as canon_url"
-        )
-        store.write_delta(delta, "seen", w)
-    merged = store.compact("seen", up_to=2)
-    assert merged == 1
-    assert store.committed_waves("seen") == [2, 3]
-    # the resume cut at wave 2 still sees exactly waves 1-2's rows ...
-    assert store.read_accumulated("seen", up_to=2).count() == 20
-    # ... and the torn wave-3 delta remains excluded until its wave replays
-    assert store.read_accumulated("seen").count() == 30
+    # expiry drops superseded records and every file only they named
+    assert store.expire(keep_last=1) == n
+    named = {f["path"] for t in store.record()["tables"].values() for f in t["files"]}
+    assert {p.relative_to(root).as_posix() for p in root.glob("*/*/*.parquet")} == named
+    assert store.read_accumulated("seen").count() == len(sim.seen)
+    assert store.read("frontier").count() == 0
 
 
 def _run_in_job_group(spark, group, fn):
@@ -322,17 +308,20 @@ def test_state_delta_is_one_file_read_with_committed_schema(spark, tmp_path):
         return df
 
     empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), "url_hash long, canon_url string")
+    store.commit(0)
     for wave, df in [(1, delta(0, 120)), (2, delta(1000, 40)), (3, empty)]:
-        back, jobs = _run_in_job_group(
+        (back, rows), jobs = _run_in_job_group(
             spark, f"test-state-write-{wave}", partial(store.write_delta, df, "seen", wave)
         )
+        store.commit(wave)
         assert len(jobs) == 1
         assert [(f.name, f.dataType) for f in back.schema] == [
             (f.name, f.dataType) for f in df.schema
         ]
         assert sorted(back.collect()) == sorted(df.collect())
+        assert rows == df.count()
         # the empty delta too: its one file carries the schema
-        assert len(list((root / "seen" / f"wave={wave}").glob("*.parquet"))) == 1
+        assert len(list((root / "seen").glob(f"{wave}-*/*.parquet"))) == 1
 
     read, jobs = _run_in_job_group(spark, "test-state-read", partial(store.read, "seen", 3))
     assert not jobs
@@ -343,9 +332,41 @@ def test_state_delta_is_one_file_read_with_committed_schema(spark, tmp_path):
     assert not jobs
     assert acc.columns == ["url_hash", "canon_url"]
     assert sorted(r.url_hash for r in acc.collect()) == list(range(120)) + list(range(1000, 1040))
-    assert [(r["wave"], r["rows"], r["files"]) for r in store.lineage("seen")] == [
-        (1, 120, 1), (2, 40, 1), (3, 0, 1)
+    assert [(f["wave"], f["rows"]) for f in store.record()["tables"]["seen"]["files"]] == [
+        (1, 120), (2, 40), (3, 0)
     ]
+
+
+def test_uncommitted_writes_are_ignored_and_expired(spark, tmp_path):
+    """A write whose commit never landed and a temp record left by a crash
+    mid-commit are invisible: the newest commit and every read ignore
+    them, and ``expire`` removes both."""
+    from searchgov_spider_spark.sources.state import ParquetStateStore
+
+    root = tmp_path / "state"
+    store = ParquetStateStore(spark, str(root))
+
+    def delta(lo):
+        return spark.range(lo, lo + 10).selectExpr(
+            "id as url_hash", "concat('https://a.gov/', id) as canon_url"
+        )
+
+    store.commit(0)
+    for wave in (1, 2):
+        store.write_delta(delta(10 * wave), "seen", wave)
+        store.commit(wave)
+    # killed in commit 3: its write landed, its record only as a temp file
+    store.write_delta(delta(30), "seen", 3)
+    (root / "commits" / "wave=3.json.tmp").write_text('{"layout": 1, "wave": 3, "tab')
+
+    reopened = ParquetStateStore(spark, str(root))
+    assert reopened.newest() == 2
+    assert reopened.rows("seen") == 20
+    assert sorted(r.url_hash for r in reopened.read_accumulated("seen").collect()) == list(range(10, 30))
+    assert reopened.expire(keep_last=1) == 2
+    assert sorted(p.name for p in (root / "commits").iterdir()) == ["wave=2.json"]
+    assert sorted(p.name.split("-")[0] for p in (root / "seen").iterdir()) == ["1", "2"]
+    assert sorted(r.url_hash for r in reopened.read_accumulated("seen").collect()) == list(range(10, 30))
 
 
 def test_engine_with_incremental_bloom(spark, graph):
@@ -531,7 +552,7 @@ def test_wave_metrics_match_committed_state(spark, graph, tmp_path, crawl_output
     for w in waves:
         assert w.scheduled == store.read("seen", w.wave + 1).count()
         assert w.fetched_ok + w.http_errors == w.scheduled
-        assert w.emitted == store.read("documents", w.wave).count()
+        assert w.emitted == store.read("documents", w.wave + 1).count()
         assert w.new_urls == store.read("frontier", w.wave + 1).count()
     assert waves[-1].new_urls == 0  # the crawl ran to its end
 

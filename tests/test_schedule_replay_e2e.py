@@ -18,13 +18,17 @@ recorder runner, test_crawl_engine.py's resume) don't give: the real
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
+from searchgov_spider_spark.config import DEFAULT_CONFIG
 from searchgov_spider_spark.plans.crawl import CrawlEngine
 from searchgov_spider_spark.scheduling import CrawlScheduler, engine_runner
 from searchgov_spider_spark.sources.crawl_sites import CrawlSite, CrawlSites
 from searchgov_spider_spark.sources.fetch import TablePageFetcher
-from searchgov_spider_spark.testing.graph import generate_graph, graph_to_dfs
+from searchgov_spider_spark.sources.state import ParquetStateStore
+from searchgov_spider_spark.testing.graph import generate_graph, graph_to_dfs, simulate_crawl
 
 
 class KilledMidCrawl(RuntimeError):
@@ -53,20 +57,35 @@ def _sites() -> CrawlSites:
 
 
 @pytest.fixture(scope="module")
-def world(spark):
-    graph = generate_graph(n_pages=260, seed=13)
+def graph():
+    return generate_graph(n_pages=260, seed=13)
+
+
+@pytest.fixture(scope="module")
+def world(spark, graph):
     pages_df, _, robots_df = graph_to_dfs(spark, graph)
     return TablePageFetcher(pages_df), robots_df
+
+
+def _hot() -> CrawlSite:
+    return next(s for s in _sites() if s.job_id == "hot")
+
+
+@pytest.fixture(scope="module")
+def hot_sim(spark, graph):
+    """The simulator's crawl of `hot` alone, at the engine's defaults."""
+    rows = [tuple(r) for r in CrawlSites([_hot()]).to_seeds_df(spark).collect()]
+    return simulate_crawl({**graph, "seeds_rows": rows}, DEFAULT_CONFIG, DEFAULT_CONFIG.max_waves)
 
 
 def _seen_set(result) -> set[str]:
     return {r["canon_url"] for r in result.seen.collect()}
 
 
-def test_kill_resume_replay(spark, world, tmp_path):
+def test_kill_resume_replay(spark, world, hot_sim, tmp_path):
     fetcher, robots = world
     sites = _sites()
-    hot = next(s for s in sites if s.job_id == "hot")
+    hot = _hot()
 
     # -- uninterrupted reference run of the to-be-killed site ------------
     ref_dir = tmp_path / "ref-state"
@@ -75,6 +94,9 @@ def test_kill_resume_replay(spark, world, tmp_path):
         robots=robots, state_dir=str(ref_dir / "hot"),
     ).run()
     assert ref.total_scheduled > 0
+    # the simulator models this run (the kill sweep below compares with it)
+    assert ref.scheduled_per_wave == hot_sim.scheduled_per_wave
+    assert _seen_set(ref) == hot_sim.seen
 
     # -- boot 1: cycle dies mid-crawl on 'hot' (2 waves committed) -------
     root = tmp_path / "sched-state"
@@ -130,11 +152,13 @@ def test_kill_resume_replay(spark, world, tmp_path):
     assert sched3.trigger_pending_jobs() == []
 
 
-def test_completed_job_killed_before_unlink_is_noop(spark, world, tmp_path):
+def test_completed_job_killed_before_unlink_is_noop(spark, world, tmp_path, monkeypatch):
     """The protocol's only at-least-once window: the crawl finished but
     the process died before the pending entry was removed. The replay
     must resume from the drained frontier and terminate without
-    scheduling anything (idempotent, no duplicate output)."""
+    scheduling anything (idempotent, no duplicate output), and it builds
+    one engine: run-vs-resume is read off the state dir, not off a probe
+    engine."""
     fetcher, robots = world
     sites = _sites()
     root = tmp_path / "state"
@@ -156,48 +180,122 @@ def test_completed_job_killed_before_unlink_is_noop(spark, world, tmp_path):
             site, run_id, state_dir=str(root / site.job_id)
         )
 
+    engines = []
+    init = CrawlEngine.__init__
+
+    def counting_init(self, *args, **kwargs):
+        engines.append(self)
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(CrawlEngine, "__init__", counting_init)
     sched2 = CrawlScheduler(sites, root, recording_runner)
     assert sched2.trigger_pending_jobs() == ["Rerun::hot"]
     assert replayed_results["Rerun::hot"].total_scheduled == 0
+    assert len(engines) == 1
 
 
-def test_resume_from_every_truncation_prefix(spark, world, tmp_path):
-    """Crash-point sweep: truncating the committed state to ANY wave
-    prefix (deleting manifests > k hides later data — the torn-state
-    analog) and resuming must reproduce the uninterrupted run's
-    remaining per-wave schedule and its exact final seen set. This
-    pins the checkpoint format at every wave, not just the latest."""
-    import shutil
+KILL_POINTS = ("seen", "documents", "frontier", "commit")
 
+
+class Killed(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("offset", range(len(KILL_POINTS)))
+def test_resume_after_kill_in_every_wave(spark, world, hot_sim, tmp_path, monkeypatch, offset):
+    """Crash-point sweep: the crawl of `hot` is killed once in every wave
+    and resumed from its newest commit each time. Commit ``c`` (wave
+    ``c - 1``) is killed right after its seen write, documents write,
+    frontier write or commit: point ``(c + offset) % 4``, so the four
+    chains together kill every wave at every point. The commit records
+    must then hold the uninterrupted run's per-wave schedule and seen set,
+    and the documents each once; the killed waves' uncommitted writes and
+    a torn temp record are ignored by every resume and removed by
+    ``expire``."""
     fetcher, robots = world
-    hot = next(s for s in _sites() if s.job_id == "hot")
+    seeds = CrawlSites([_hot()]).to_seeds_df(spark)
+    state = tmp_path / "state"
+    store = ParquetStateStore(spark, str(state))
+    n = len(hot_sim.scheduled_per_wave)
+    kill = None
+
+    write, commit = ParquetStateStore.write, ParquetStateStore.commit
+
+    def killing_write(self, df, name, wave):
+        out = write(self, df, name, wave)
+        if kill == (name, wave):
+            raise Killed(kill)
+        return out
+
+    def killing_commit(self, wave, metrics=None):
+        commit(self, wave, metrics)
+        if kill == ("commit", wave):
+            raise Killed(kill)
+
+    monkeypatch.setattr(ParquetStateStore, "write", killing_write)
+    monkeypatch.setattr(ParquetStateStore, "commit", killing_commit)
+
+    def resume():
+        return CrawlEngine.resume(spark, seeds, fetcher, robots=robots, state_dir=str(state))
+
+    for c in range(1, n + 1):
+        kill = (KILL_POINTS[(c + offset) % len(KILL_POINTS)], c)
+        with pytest.raises(Killed):
+            if c == 1:
+                CrawlEngine(spark, seeds, fetcher, robots=robots, state_dir=str(state)).run()
+            else:
+                resume()
+        assert store.newest() == (c if kill[0] == "commit" else c - 1)
+        if c == 1:  # a crash mid-commit leaves a torn temp record
+            (state / "commits" / f"wave={n + 1}.json.tmp").write_text('{"layout": 1, "wa')
+    kill = None
+    final = resume()
+    assert final.scheduled_per_wave == hot_sim.scheduled_per_wave[n - len(final.waves):]
+
+    assert store.newest() == n
+    metrics = [store.record(c)["metrics"] for c in range(1, n + 1)]
+    assert [m["wave"] for m in metrics] == list(range(n))
+    assert [m["scheduled"] for m in metrics] == hot_sim.scheduled_per_wave
+    seen = [r["canon_url"] for r in store.read_accumulated("seen").collect()]
+    assert len(seen) == len(set(seen)) and set(seen) == hot_sim.seen
+    docs = [r["doc_id"] for r in store.read_accumulated("documents").collect()]
+    assert len(docs) == len(set(docs)) == hot_sim.documents
+
+    def on_disk():
+        return {p.relative_to(state).as_posix() for p in state.glob("*/*/*.parquet")}
+
+    committed = {f["path"] for c in range(n + 1) for t in store.record(c)["tables"].values() for f in t["files"]}
+    assert on_disk() - committed  # the killed waves' uncommitted writes
+    assert list(state.glob("*/*.tmp")) and store.expire(keep_last=1) == n
+    assert not list(state.glob("*/*.tmp"))
+    assert on_disk() == {f["path"] for t in store.record()["tables"].values() for f in t["files"]}
+    assert store.rows("seen") == len(hot_sim.seen)
+
+
+def test_older_layout_state_dir_fails_clearly(spark, world, tmp_path, monkeypatch):
+    """A state dir in the older per-table manifests/ layout is refused,
+    by name, wherever a crawl would resume or start in it; none of the
+    entry points starts a fresh crawl over it."""
+    fetcher, robots = world
+    hot = _hot()
     seeds = CrawlSites([hot]).to_seeds_df(spark)
+    old = tmp_path / "old"
+    (old / "manifests" / "frontier").mkdir(parents=True)
+    (old / "manifests" / "frontier" / "wave=0.json").write_text("{}")
+    seeds_p, pages_p = str(tmp_path / "seeds"), str(tmp_path / "pages")
+    seeds.write.parquet(seeds_p)
+    fetcher.pages.write.parquet(pages_p)
+    monkeypatch.syspath_prepend(str(Path(__file__).parent.parent / "jobs"))
+    import crawl_job
 
-    full_dir = tmp_path / "full"
-    ref = CrawlEngine(
-        spark, seeds, fetcher, robots=robots, state_dir=str(full_dir)
-    ).run()
-    ref_seen = _seen_set(ref)
-    probe = CrawlEngine(spark, seeds, fetcher, robots=robots, state_dir=str(full_dir))
-    waves = probe.store.committed_waves("frontier")
-    assert len(waves) >= 3  # sweep is vacuous on a 1-wave crawl
-
-    for k in waves[1:-1]:  # k=0 is a fresh run; last wave = drained frontier
-        d = tmp_path / f"trunc{k}"
-        shutil.copytree(full_dir, d)
-        for name in ("frontier", "seen", "documents"):
-            mdir = d / "manifests" / name
-            if not mdir.exists():
-                continue
-            for p in mdir.glob("wave=*.json"):
-                if int(p.name[5:-5]) > k:
-                    p.unlink()
-        resumed = CrawlEngine.resume(
-            spark, seeds, fetcher, robots=robots, state_dir=str(d)
-        )
-        start = resumed.waves[0].wave
-        assert 0 < start <= k
-        assert (
-            resumed.scheduled_per_wave == ref.scheduled_per_wave[start:]
-        ), f"schedule diverged resuming at truncation k={k}"
-        assert _seen_set(resumed) == ref_seen, f"seen set diverged at k={k}"
+    job_args = ["--seeds", seeds_p, "--pages", pages_p, "--state-dir", str(old)]
+    entry_points = [
+        lambda: CrawlEngine.resume(spark, seeds, fetcher, robots=robots, state_dir=str(old)),
+        lambda: engine_runner(spark, fetcher, robots=robots)(hot, "hot", state_dir=str(old)),
+        lambda: crawl_job.main([*job_args, "--resume"]),
+        lambda: crawl_job.main(job_args),
+    ]
+    for start in entry_points:
+        with pytest.raises(ValueError, match="older per-table manifests/ layout"):
+            start()
+    assert [p.name for p in old.iterdir()] == ["manifests"]
