@@ -26,7 +26,9 @@ to local[N] when no gateway JVM exists), so the same script runs
 unchanged on YARN / k8s / standalone. State (frontier snapshots, seen
 and documents deltas, per-wave metrics) commits under --state-dir as one
 record per wave; rerunning with --resume continues from the newest
-commit (P4).
+commit (P4). Without --resume the job refuses a --state-dir that already
+holds a crawl. --output gets the documents of the whole crawl, the waves
+of earlier runs included.
 """
 
 from __future__ import annotations
@@ -51,7 +53,7 @@ def parse_args(argv=None):
     ap.add_argument("--robots", help="optional robots parquet (domain, body)")
     ap.add_argument("--max-waves", type=int, default=None)
     ap.add_argument("--resume", action="store_true", help="continue from latest committed wave")
-    ap.add_argument("--output", help="optional parquet dir for the final documents table")
+    ap.add_argument("--output", help="optional parquet dir for the crawl's documents table")
     ap.add_argument(
         "--schedule-cycle",
         action="store_true",
@@ -106,11 +108,9 @@ def main(argv=None):
     robots = spark.read.parquet(args.robots) if args.robots else None
 
     if args.resume:
-        result = CrawlEngine.resume(
-            spark, seeds, fetcher, state_dir=args.state_dir, robots=robots
-        )
+        result = CrawlEngine.resume(spark, seeds, fetcher, args.state_dir, robots=robots)
     else:
-        engine = CrawlEngine(spark, seeds, fetcher, robots=robots, state_dir=args.state_dir)
+        engine = CrawlEngine(spark, seeds, fetcher, args.state_dir, robots=robots)
         result = engine.run(max_waves=args.max_waves)
 
     for w in result.waves:

@@ -8,11 +8,12 @@ Spark restatement of the reference crawl lifecycle (SURVEY.md §3.1):
     --(canonicalize L2, explode, dedup D1 bloom + anti-join)--> frontier_{w+1}
 
 Wave = BFS level (DEPTH_PRIORITY=1 + FIFO ⇒ breadth-first in the reference,
-settings.py:61-64). Per wave the engine appends to `seen` and `documents`,
-replaces `frontier`, and (when a state_dir is given) commits the three
-writes and the wave's metrics as one record — the parquet stand-in for an
-Iceberg snapshot-per-wave; resume reads the newest commit (P4,
-job_state/scheduler.py:18-47 semantics).
+settings.py:61-64). Every wave starts from a commit of the state store:
+it reads that commit's frontier and seen set, appends to `seen` and
+`documents`, replaces `frontier`, and commits the three writes and the
+wave's metrics as the next record — the parquet stand-in for an Iceberg
+snapshot-per-wave. A fresh run starts from commit 0 and resume from the
+newest commit (P4, job_state/scheduler.py:18-47 semantics).
 
 Scale contract:
 - frontier/seen are hash-identified by ``url_hash = xxhash64(canon_url)``;
@@ -92,9 +93,9 @@ class CrawlEngine:
         spark: SparkSession,
         seeds: DataFrame,
         fetcher,
+        state_dir: str,
         robots: DataFrame | None = None,
         config: CrawlConfig = DEFAULT_CONFIG,
-        state_dir: str | None = None,
         use_bloom_over: int = 50_000,
         seen_filter: str = "bloom",
     ):
@@ -106,7 +107,7 @@ class CrawlEngine:
         self.spark = spark
         self.fetcher = fetcher
         self.config = config
-        self.store = ParquetStateStore(spark, state_dir) if state_dir else None
+        self.store = ParquetStateStore(spark, state_dir)
         self.use_bloom_over = use_bloom_over
         self.seen_filter = seen_filter
         self._bloom = None
@@ -131,29 +132,6 @@ class CrawlEngine:
             F.sum(F.col("http_status").isin(*UNWANTED_HTTP_CODES).cast("int")).alias("n_unwanted"),
         )
 
-    # -- plumbing -----------------------------------------------------------
-
-    def _persist(self, df: DataFrame, name: str, wave: int, delta: bool = False) -> tuple[DataFrame, int]:
-        """Truncate lineage between waves and count the rows, in one action.
-        With a state store, write ``df`` as table ``name``'s snapshot (or
-        delta) for commit ``wave`` and read it back; its rows come from the
-        written files' footers. Else localCheckpoint it, counted by an
-        observation on the same job."""
-        if self.store is None:
-            obs = Observation()
-            out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
-            return out, obs.get["rows"]
-        write = self.store.write_delta if delta else self.store.write
-        return write(df, name, wave)
-
-    def _empty_seen(self) -> DataFrame:
-        """The seen set before any delta, with no partitions: a
-        ``createDataFrame([])`` start set holds defaultParallelism empty
-        partitions, which would widen every scan of the seen union."""
-        return self.spark.createDataFrame(
-            self.spark.sparkContext.emptyRDD(), "url_hash long, canon_url string"
-        )
-
     @classmethod
     def resume(
         cls,
@@ -163,19 +141,13 @@ class CrawlEngine:
         state_dir: str,
         **kwargs,
     ) -> CrawlResult:
-        """P4: continue a crawl from its newest commit: that record's
-        frontier, seen set and row counts. Writes of a wave that never
-        committed are named by no record, so the wave replays."""
-        engine = cls(spark, seeds, fetcher, state_dir=state_dir, **kwargs)
-        store = engine.store
-        wave = store.newest()
+        """P4: continue a crawl from its newest commit. Writes of a wave
+        that never committed are named by no record, so the wave replays."""
+        engine = cls(spark, seeds, fetcher, state_dir, **kwargs)
+        wave = engine.store.newest()
         if wave is None:
             raise FileNotFoundError(f"no committed wave under {state_dir} to resume from")
-        seen = store.read_accumulated("seen", wave).select(*SEEN_COLS) if wave else engine._empty_seen()
-        return engine.run_from(
-            store.read("frontier", wave), seen, start_wave=wave,
-            frontier_rows=store.rows("frontier", wave), seen_rows=store.rows("seen", wave) if wave else 0,
-        )
+        return engine._crawl(wave)
 
     def _prepare_candidates(self, cand: DataFrame) -> DataFrame:
         """filters → robots → canonical identity; candidates must arrive with
@@ -251,8 +223,7 @@ class CrawlEngine:
         just the expired fingerprints — O(delta), the operation a bloom
         cannot do; in bloom mode the filter is invalidated and rebuilt
         lazily on the next wave (O(seen)). Returns the surviving seen
-        DataFrame; persist it via the normal wave checkpoint on the next
-        ``run_from``."""
+        DataFrame; ``run_from`` commits it with the re-crawl frontier."""
         if "url_hash" not in expired.columns:
             expired = expired.withColumn("url_hash", url_hash_col("canon_url"))
         expired = expired.select("url_hash").distinct()
@@ -283,51 +254,57 @@ class CrawlEngine:
     # -- the loop ------------------------------------------------------------
 
     def run(self, max_waves: int | None = None) -> CrawlResult:
-        frontier, frontier_rows = self._persist(self.initial_frontier(), "frontier", 0)
-        if self.store is not None:
-            self.store.commit(0)
-        return self.run_from(
-            frontier, self._empty_seen(), start_wave=0, max_waves=max_waves, frontier_rows=frontier_rows
-        )
+        """Crawl from the seeds: ``run_from`` the initial frontier in an
+        empty store. Refuses a state dir that already holds a crawl."""
+        newest = self.store.newest()
+        if newest is not None:
+            raise ValueError(
+                f"{self.store.root} already holds a crawl (newest commit {newest}); "
+                "resume it, or run in an empty state dir"
+            )
+        return self.run_from(self.initial_frontier(), max_waves=max_waves)
 
     def run_from(
-        self,
-        frontier: DataFrame,
-        seen: DataFrame,
-        start_wave: int = 0,
-        max_waves: int | None = None,
-        frontier_rows: int | None = None,
-        seen_rows: int | None = None,
+        self, frontier: DataFrame, seen: DataFrame | None = None, max_waves: int | None = None
     ) -> CrawlResult:
-        """Continue a crawl from (frontier, seen) state before wave
-        ``start_wave`` — resume semantics (P4). With a state store, wave
-        ``w`` commits as record ``w + 1`` on top of record ``w``, which the
-        store must hold. ``frontier_rows`` and ``seen_rows`` are the inputs'
-        row counts when the caller knows them; else they are counted here."""
+        """Commit ``frontier`` and ``seen`` as the store's next commit ``c``
+        (0 in an empty store) and crawl from it, so injected state (a
+        sitemap drain, a re-crawl after ``expire_seen``) continues like a
+        resume. ``seen=None`` keeps the committed seen set (none in an
+        empty store); documents keep their committed files. Waves are
+        numbered from ``c``, and the crawl stops before wave ``max_waves``."""
+        newest = self.store.newest()
+        c = 0 if newest is None else newest + 1
+        self.store.write(frontier, "frontier", c)
+        if seen is not None:
+            self.store.write(seen.select(*SEEN_COLS), "seen", c)
+        self.store.commit(c)
+        return self._crawl(c, max_waves)
+
+    def _crawl(self, start: int, max_waves: int | None = None) -> CrawlResult:
+        """Run waves from commit ``start``: wave ``w`` reads commit ``w``
+        (its frontier, seen set and row counts) and commits ``w + 1``. The
+        result's tables are those of the last commit, the whole crawl's."""
         cfg = self.config
+        store = self.store
         max_waves = max_waves or cfg.max_waves
         result = CrawlResult()
-        documents: DataFrame | None = None
-        if "prevent_follow" not in frontier.columns:  # pre-flag checkpoints
-            frontier = frontier.withColumn("prevent_follow", F.lit(False))
-        if "needs_js" not in frontier.columns:
-            frontier = frontier.withColumn("needs_js", F.lit(False))
 
         # Driver-action budget: a small wave's cost is fixed per-job
         # overhead, so a wave runs only the actions that do real work —
-        # with a state store, exactly three: the seen-delta, documents and
-        # frontier writes. Every count the wave reports rides on them:
-        # scheduled/emitted/new rows from the written files' footers, the
-        # fetch stats and candidate count from observations on plans those
-        # writes run. The seen cardinality is a running counter (every
-        # scheduled row is provably unseen); the entry counts come from the
-        # caller when it knows them.
-        frontier_size = frontier.count() if frontier_rows is None else frontier_rows
-        seen_count = 0 if start_wave == 0 else seen.count() if seen_rows is None else seen_rows
-        for wave in range(start_wave, max_waves):
+        # exactly three: the seen-delta, documents and frontier writes.
+        # Every count the wave reports rides on them or on the commit
+        # record: the entry counts from the record, scheduled/emitted/new
+        # rows from the written files' footers, the fetch stats and
+        # candidate count from observations on plans those writes run.
+        last = start
+        for wave in range(start, max_waves):
             t0 = time.monotonic()
+            frontier_size = store.rows("frontier", wave)
             if frontier_size == 0:
                 break
+            frontier = store.read("frontier", wave)
+            committed_seen = "seen" in store.record(wave)["tables"]
 
             budgeted = frontier.withColumn("wave_budget", self._wave_budget)
             scheduled, deferred = schedule_wave(budgeted, "wave_budget", cfg.salt_buckets)
@@ -336,21 +313,23 @@ class CrawlEngine:
             # fingerprints are recorded at schedule time, like the reference's
             # dupefilter SADD at enqueue (job_state/dupefilter.py:8-25).
             # Persistence is INCREMENTAL: only this wave's delta is written
-            # (O(delta) I/O, the Redis-SADD / Iceberg-append analog); the
-            # in-memory seen set is a union of materialized deltas. Every
-            # scheduled row yields exactly one fetched row (left join /
-            # disjoint routing union), so the delta is written from
-            # `fetched`: the write materializes the fetch cache, and the
-            # fetch stats are observed at its root, where no empty-relation
-            # pruning can drop them.
+            # (O(delta) I/O, the Redis-SADD / Iceberg-append analog). The
+            # seen set is two relations however many waves ran: commit
+            # `wave`'s files, read as one, and this delta. Every scheduled
+            # row yields exactly one fetched row (left join / disjoint
+            # routing union), so the delta is written from `fetched`: the
+            # write materializes the fetch cache, and the fetch stats are
+            # observed at its root, where no empty-relation pruning can
+            # drop them.
             fetch_obs = Observation()
-            seen_delta, n_scheduled = self._persist(
-                fetched.observe(fetch_obs, *self._fetch_stats).select(*SEEN_COLS),
-                "seen", wave + 1, delta=True,
+            seen_delta, n_scheduled = store.write_delta(
+                fetched.observe(fetch_obs, *self._fetch_stats).select(*SEEN_COLS), "seen", wave + 1
             )
             stats = fetch_obs.get
-            seen = seen.unionByName(seen_delta)
-            seen_count += n_scheduled
+            seen, seen_count = seen_delta, n_scheduled
+            if committed_seen:
+                seen = store.read_accumulated("seen", wave).unionByName(seen_delta)
+                seen_count += store.rows("seen", wave)
 
             # emit: valid content type per job target (F6) → documents rows
             ok = F.col("http_status") == 200
@@ -406,12 +385,7 @@ class CrawlEngine:
                     F.col("content_language"),
                 )
             )
-            # per-wave document snapshot: materialize now (store append or
-            # localCheckpoint) so the accumulated documents plan is a union
-            # of materialized waves, not an O(waves)-deep lineage over
-            # unpersisted caches
-            docs_wave, n_emitted = self._persist(docs_wave, "documents", wave + 1, delta=True)
-            documents = docs_wave if documents is None else documents.unionByName(docs_wave)
+            _, n_emitted = store.write_delta(docs_wave, "documents", wave + 1)
 
             # next-wave candidates: explode out-links with deterministic order
             # (prevent_follow rows — sitemap-discovered URLs — emit documents
@@ -452,7 +426,7 @@ class CrawlEngine:
             frontier_next = dedupe_intra_wave(
                 deferred.drop("wave_budget").unionByName(new_urls), order_cols=INTRA_WAVE_ORDER
             )
-            frontier, n_new = self._persist(frontier_next, "frontier", wave + 1)
+            _, n_new = store.write(frontier_next, "frontier", wave + 1)
             # AQE drops an empty-result subtree, and the observation in it
             # (e.g. every candidate already seen and nothing deferred): then
             # count the cache the frontier write built
@@ -472,16 +446,16 @@ class CrawlEngine:
                 seconds=time.monotonic() - t0,
             )
             result.waves.append(metrics)
-            if self.store is not None:
-                self.store.commit(wave + 1, metrics.__dict__)
+            store.commit(wave + 1, metrics.__dict__)
+            last = wave + 1
             parsed.unpersist()
             fetched.unpersist()
             candidates.unpersist()
-            frontier_size = n_new
 
-        result.documents = documents
-        result.seen = seen
-        result.frontier = frontier
+        tables = store.record(last)["tables"]
+        result.frontier = store.read("frontier", last)
+        result.seen = store.read_accumulated("seen", last) if "seen" in tables else None
+        result.documents = store.read_accumulated("documents", last) if "documents" in tables else None
         return result
 
 

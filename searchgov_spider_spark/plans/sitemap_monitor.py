@@ -10,11 +10,12 @@ Spark restatement: one periodic batch job —
     resolve_sitemaps (S5 wave loop)
       → anti-join vs previous snapshot (D5) and vs the crawl seen-set (D1)
       → insert into the frontier flagged prevent_follow
-      → CrawlEngine.run_from drains it in one politeness-budgeted wave
+      → CrawlEngine.run_from commits it and drains it in one
+        politeness-budgeted wave
 
 State: the per-sitemap URL snapshot table replaces the reference's
 /var/tmp/spider_sitemaps/{md5}.txt files (sitemap_monitor.py:131-149);
-persist it like any other wave state (bucketed parquet / Iceberg).
+persist it next to the crawl state (parquet / Iceberg).
 """
 
 from __future__ import annotations

@@ -156,11 +156,11 @@ def engine_runner(spark, fetcher, robots=None, max_waves: int | None = None):
     from .plans.crawl import CrawlEngine
     from .sources.state import ParquetStateStore
 
-    def run(site: CrawlSite, run_id: str, state_dir: str | Path | None = None):
+    def run(site: CrawlSite, run_id: str, state_dir: str | Path):
         seeds = CrawlSites([site]).to_seeds_df(spark)
-        sd = str(state_dir) if state_dir else None
-        if sd and ParquetStateStore(spark, sd).newest() is not None:
-            return CrawlEngine.resume(spark, seeds, fetcher, robots=robots, state_dir=sd)
-        return CrawlEngine(spark, seeds, fetcher, robots=robots, state_dir=sd).run(max_waves=max_waves)
+        sd = str(state_dir)
+        if ParquetStateStore(spark, sd).newest() is not None:
+            return CrawlEngine.resume(spark, seeds, fetcher, sd, robots=robots)
+        return CrawlEngine(spark, seeds, fetcher, sd, robots=robots).run(max_waves=max_waves)
 
     return run

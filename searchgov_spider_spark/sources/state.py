@@ -155,15 +155,18 @@ class ParquetStateStore:
         return sum(f["rows"] for f in self._table(name, wave)[1]["files"])
 
     def compact(self, name: str) -> int:
-        """Rewrite table ``name`` of the newest commit as one write and
-        re-commit that record with it (Iceberg rewrite_data_files analog),
-        between waves. Older records keep the old files until ``expire``.
-        Returns the number of files replaced."""
+        """Rewrite table ``name`` of the newest commit as one write of
+        ⌈bytes / spark.sql.files.maxPartitionBytes⌉ files (one for a small
+        table) and re-commit that record with it (Iceberg rewrite_data_files
+        analog), between waves. Older records keep the old files until
+        ``expire``. Returns the number of files replaced."""
         rec = self.record()
         files = self._table(name, rec["wave"])[1]["files"]
         if len(files) <= 1:
             return 0
-        self.write(self.read_accumulated(name), name, rec["wave"])
+        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        n_files = -(-sum(f["bytes"] for f in files) // split)
+        self.write(self.read_accumulated(name).coalesce(n_files), name, rec["wave"])
         self._commit(rec["wave"], rec["tables"], rec["metrics"])
         return len(files)
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import contextlib
 import dataclasses
+import re
 from functools import partial
 
 import pytest
@@ -54,10 +55,11 @@ def test_generate_graph_is_stable(n_pages, seed, digest):
 
 
 @pytest.fixture(scope="module")
-def crawl_outputs(spark, graph):
+def crawl_outputs(spark, graph, tmp_path_factory):
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
     engine = CrawlEngine(
-        spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df, config=CFG
+        spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path_factory.mktemp("crawl") / "state"),
+        robots=robots_df, config=CFG,
     )
     result = engine.run(max_waves=12)
     sim = simulate_crawl(graph, CFG, max_waves=12)
@@ -95,7 +97,7 @@ def test_robots_blocked_never_fetched(crawl_outputs):
     assert result.seen.filter(F.col("canon_url").contains("/private/")).count() == 0
 
 
-def test_robots_rules_follow_config_user_agent(spark, graph):
+def test_robots_rules_follow_config_user_agent(spark, graph, tmp_path):
     """Robots groups are picked for ``CrawlConfig.user_agent``: crawling as
     ``otherbot`` never schedules a path that ``*`` allows but otherbot's
     group disallows, and the simulator, reading the same setting, agrees
@@ -109,7 +111,7 @@ def test_robots_rules_follow_config_user_agent(spark, graph):
     cfg = CrawlConfig(wave_seconds=30.0, salt_buckets=4, user_agent="otherbot")
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, g)
     res = CrawlEngine(
-        spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df, config=cfg
+        spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"), robots=robots_df, config=cfg
     ).run(max_waves=3)
     sim = simulate_crawl(g, cfg, max_waves=3)
     seen = {r["canon_url"] for r in res.seen.collect()}
@@ -186,7 +188,9 @@ def test_span_equality_pass_rate_100(crawl_outputs, graph, spark):
 
 def test_resume_from_checkpoint(spark, graph, tmp_path):
     """Interrupt after N waves, resume from the persisted state, converge to
-    the same seen-set (P4 semantics: wave checkpoints + idempotent dedup)."""
+    the same seen-set (P4 semantics: wave checkpoints + idempotent dedup).
+    The state is injected with ``run_from`` into a new state dir, where it
+    becomes commit 0."""
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
     state = str(tmp_path / "state")
     e1 = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df,
@@ -199,8 +203,9 @@ def test_resume_from_checkpoint(spark, graph, tmp_path):
     store = ParquetStateStore(spark, state)
     frontier = store.read("frontier", 2)
     seen = store.read_accumulated("seen", up_to=2).select("url_hash", "canon_url")
-    e2 = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df, config=CFG)
-    r2 = e2.run_from(frontier, seen, start_wave=2, max_waves=12)
+    e2 = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state2"),
+                     robots=robots_df, config=CFG)
+    r2 = e2.run_from(frontier, seen, max_waves=10)
     sim = simulate_crawl(graph, CFG, max_waves=12)
     resumed_seen = {r["canon_url"] for r in r2.seen.collect()}
     assert resumed_seen == sim.seen
@@ -260,9 +265,10 @@ def test_resume_classmethod_and_state_store(spark, graph, tmp_path):
     assert sorted({f["wave"] for f in files}) == list(range(1, n + 1))
     assert all(f["rows"] > 0 and f["bytes"] > 0 for f in files)
     assert sum(f["rows"] for f in files) == store.rows("seen") == len(sim.seen)
-    # seen is delta-per-wave: compaction merges deltas without data loss
+    # seen is delta-per-wave: compaction merges a small table's deltas into
+    # one file without data loss
     assert store.compact("seen") == len(files)
-    assert len({f["path"].rsplit("/", 1)[0] for f in store.record()["tables"]["seen"]["files"]}) == 1
+    assert len(store.record()["tables"]["seen"]["files"]) == 1
     assert store.read_accumulated("seen").count() == len(sim.seen)
     # expiry drops superseded records and every file only they named
     assert store.expire(keep_last=1) == n
@@ -270,6 +276,51 @@ def test_resume_classmethod_and_state_store(spark, graph, tmp_path):
     assert {p.relative_to(root).as_posix() for p in root.glob("*/*/*.parquet")} == named
     assert store.read_accumulated("seen").count() == len(sim.seen)
     assert store.read("frontier").count() == 0
+
+
+def test_run_refuses_a_state_dir_that_holds_a_crawl(spark, graph, tmp_path):
+    """``run`` starts a crawl at commit 0, so a state dir that already
+    holds one is refused by name and left as it was; ``resume`` is how
+    that crawl continues."""
+    from searchgov_spider_spark.sources.state import ParquetStateStore
+
+    pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
+    state = tmp_path / "state"
+
+    def engine():
+        return CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), str(state),
+                           robots=robots_df, config=CFG)
+
+    engine().run(max_waves=2)
+    before = sorted(p.relative_to(state).as_posix() for p in state.rglob("*"))
+    with pytest.raises(ValueError, match=re.escape(f"{state} already holds a crawl")):
+        engine().run(max_waves=1)
+    assert sorted(p.relative_to(state).as_posix() for p in state.rglob("*")) == before
+    assert ParquetStateStore(spark, str(state)).newest() == 2
+
+
+def test_seen_check_reads_two_relations_in_any_wave(spark, graph, tmp_path, monkeypatch):
+    """The seen set a wave checks its candidates against is the last
+    commit's files, read as one relation, plus the wave's own delta: in
+    the last wave of a five-wave crawl its plan scans two relations, not
+    one per wave."""
+    import searchgov_spider_spark.plans.crawl as crawl
+
+    seen_frames = []
+
+    def capturing(candidates, seen, *args, **kwargs):
+        seen_frames.append(seen)
+        return dedupe(candidates, seen, *args, **kwargs)
+
+    dedupe = crawl.dedupe_against_seen
+    monkeypatch.setattr(crawl, "dedupe_against_seen", capturing)
+    pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
+    res = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"),
+                      robots=robots_df, config=CFG).run(max_waves=12)
+    assert len(res.waves) == len(seen_frames) >= 5
+    last = seen_frames[-1]
+    assert last._jdf.queryExecution().executedPlan().toString().count("FileScan parquet") <= 2
+    assert {r["canon_url"] for r in last.collect()} == {r["canon_url"] for r in res.seen.collect()}
 
 
 def _run_in_job_group(spark, group, fn):
@@ -369,13 +420,13 @@ def test_uncommitted_writes_are_ignored_and_expired(spark, tmp_path):
     assert sorted(r.url_hash for r in reopened.read_accumulated("seen").collect()) == list(range(10, 30))
 
 
-def test_engine_with_incremental_bloom(spark, graph):
+def test_engine_with_incremental_bloom(spark, graph, tmp_path):
     """Force the bloom path from wave 0 (use_bloom_over=1): per-wave delta
     merge must preserve exactness (no false negatives), converging to the
     simulator's seen set."""
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
-    eng = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df,
-                      config=CFG, use_bloom_over=1)
+    eng = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"),
+                      robots=robots_df, config=CFG, use_bloom_over=1)
     res = eng.run(max_waves=12)
     sim = simulate_crawl(graph, CFG, max_waves=12)
     assert {r["canon_url"] for r in res.seen.collect()} == sim.seen
@@ -383,7 +434,7 @@ def test_engine_with_incremental_bloom(spark, graph):
     assert eng._bloom is not None  # the incremental filter was engaged
 
 
-def test_js_routing_fetcher(spark, graph):
+def test_js_routing_fetcher(spark, graph, tmp_path):
     """S4: jobs with handle_javascript route through the JS fetcher; others
     through the plain fetcher. Results identical to a single fetcher (the
     sandbox JS fetcher replays the same page table)."""
@@ -406,11 +457,10 @@ def test_js_routing_fetcher(spark, graph):
     routing = RoutingFetcher(
         TaggingFetcher(pages_df, "plain"), TaggingFetcher(pages_df, "js")
     )
-    eng = CrawlEngine(spark, seeds_js, routing, robots=robots_df, config=CFG)
+    eng = CrawlEngine(spark, seeds_js, routing, str(tmp_path / "state"), robots=robots_df, config=CFG)
 
     # run one wave manually through the fetch path
-    frontier, _ = eng._persist(eng.initial_frontier(), "frontier", 0)
-    fetched = routing.fetch(frontier.withColumn("fetch_rank", F.lit(1)))
+    fetched = routing.fetch(eng.initial_frontier().withColumn("fetch_rank", F.lit(1)))
     rows = fetched.collect()
     by_job = {}
     for r in rows:
@@ -532,8 +582,8 @@ def test_wave_metrics_match_committed_state(spark, graph, tmp_path, crawl_output
     matches what was committed: over run + resume, a wave's scheduled
     count is its seen delta's rows and the simulator's count, its fetched
     rows split into ok and errors, its emitted count is its documents
-    delta's rows and its new URLs are the next frontier's rows. The run
-    without a state store reports identical metrics."""
+    delta's rows and its new URLs are the next frontier's rows. The
+    uninterrupted run reports identical metrics."""
     from searchgov_spider_spark.sources.state import ParquetStateStore
 
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
@@ -556,12 +606,11 @@ def test_wave_metrics_match_committed_state(spark, graph, tmp_path, crawl_output
         assert w.new_urls == store.read("frontier", w.wave + 1).count()
     assert waves[-1].new_urls == 0  # the crawl ran to its end
 
-    store_off, _ = crawl_outputs
-    assert _sans_seconds(store_off.waves) == _sans_seconds(waves)
+    uninterrupted, _ = crawl_outputs
+    assert _sans_seconds(uninterrupted.waves) == _sans_seconds(waves)
 
 
-@pytest.mark.parametrize("store", [True, False], ids=["store", "no-store"])
-def test_wave_without_parseable_pages_completes(spark, tmp_path, store):
+def test_wave_without_parseable_pages_completes(spark, tmp_path):
     """A wave whose fetches yield no page to parse (a 404 and a non-HTML
     body) ends the crawl with zero candidates: no observation the wave
     reads is left waiting on a plan that never ran."""
@@ -577,8 +626,7 @@ def test_wave_without_parseable_pages_completes(spark, tmp_path, store):
           None, 1)],
         SEEDS_SCHEMA,
     )
-    engine = CrawlEngine(spark, seeds, TablePageFetcher(pages), config=CFG,
-                         state_dir=str(tmp_path / "state") if store else None)
+    engine = CrawlEngine(spark, seeds, TablePageFetcher(pages), str(tmp_path / "state"), config=CFG)
     res = engine.run(max_waves=3)
     assert [(w.scheduled, w.fetched_ok, w.http_errors, w.candidates, w.new_urls)
             for w in res.waves] == [(2, 1, 1, 0, 0)]

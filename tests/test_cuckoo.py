@@ -121,7 +121,7 @@ def test_property_no_false_negatives_under_interleaved_ops():
     check()
 
 
-def test_engine_cuckoo_matches_bloom_oracle(spark):
+def test_engine_cuckoo_matches_bloom_oracle(spark, tmp_path):
     """CrawlEngine(seen_filter='cuckoo', use_bloom_over=0) — filter active
     from wave 0, O(delta) inserts per wave — reproduces the pure-Python
     simulator's exact seen set and per-wave schedule."""
@@ -134,7 +134,7 @@ def test_engine_cuckoo_matches_bloom_oracle(spark):
     graph = generate_graph(n_pages=150, seed=11)
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
     engine = CrawlEngine(
-        spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df,
+        spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"), robots=robots_df,
         config=cfg, use_bloom_over=0, seen_filter="cuckoo",
     )
     result = engine.run(max_waves=8)
@@ -143,7 +143,7 @@ def test_engine_cuckoo_matches_bloom_oracle(spark):
     assert result.scheduled_per_wave == sim.scheduled_per_wave
 
 
-def test_engine_expire_seen_recrawls(spark):
+def test_engine_expire_seen_recrawls(spark, tmp_path):
     """expire_seen evicts fingerprints (cuckoo delete) so an expired URL is
     schedulable again — the re-crawl cycle a bloom filter cannot support
     without a rebuild."""
@@ -158,7 +158,7 @@ def test_engine_expire_seen_recrawls(spark):
     graph = generate_graph(n_pages=120, seed=12)
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
     engine = CrawlEngine(
-        spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df,
+        spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"), robots=robots_df,
         config=cfg, use_bloom_over=0, seen_filter="cuckoo",
     )
     result = engine.run(max_waves=6)
@@ -189,8 +189,11 @@ def test_engine_expire_seen_recrawls(spark):
     assert {r["canon_url"] for r in recrawlable.collect()} == {
         r["canon_url"] for r in expired.collect()
     }
-    # ... and a full re-run from that frontier re-fetches and re-emits them
-    rerun = engine.run_from(recrawlable, survivors, start_wave=100, max_waves=101)
+    # ... and a re-run from that frontier, committed with the survivors as
+    # the store's next commit c, re-fetches and re-emits them in wave c
+    c = engine.store.newest() + 1
+    rerun = engine.run_from(recrawlable, survivors, max_waves=c + 1)
+    assert [w.wave for w in rerun.waves] == [c]
     rescheduled = {r["canon_url"] for r in rerun.seen.collect()} - {
         r["canon_url"] for r in survivors.collect()
     }

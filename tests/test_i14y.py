@@ -125,7 +125,7 @@ def test_pdf_untitled_uses_separated_filename(assembled):
     assert r["created_at"] == NOW  # no Info dates
 
 
-def test_assembly_over_crawl_documents(spark):
+def test_assembly_over_crawl_documents(spark, tmp_path):
     """The engine's documents output feeds assemble_i14y directly."""
     from searchgov_spider_spark.config import CrawlConfig
     from searchgov_spider_spark.plans.crawl import CrawlEngine
@@ -134,8 +134,8 @@ def test_assembly_over_crawl_documents(spark):
 
     graph = generate_graph(n_pages=120, seed=5)
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
-    engine = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), robots=robots_df,
-                         config=CrawlConfig(wave_seconds=30.0, salt_buckets=4))
+    engine = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"),
+                         robots=robots_df, config=CrawlConfig(wave_seconds=30.0, salt_buckets=4))
     result = engine.run(max_waves=6)
     out = assemble_i14y(result.documents, now_iso=NOW)
     rows = out.collect()

@@ -299,3 +299,27 @@ def test_older_layout_state_dir_fails_clearly(spark, world, tmp_path, monkeypatc
         with pytest.raises(ValueError, match="older per-table manifests/ layout"):
             start()
     assert [p.name for p in old.iterdir()] == ["manifests"]
+
+
+def test_crawl_job_resume_outputs_the_whole_crawl(spark, world, hot_sim, tmp_path, monkeypatch):
+    """``jobs/crawl_job.py``: a second run without ``--resume`` over the
+    state dir of a stopped crawl is refused, and ``--resume --output``
+    writes the documents of the whole crawl, the first run's waves
+    included."""
+    fetcher, robots = world
+    seeds_p, pages_p, robots_p = (str(tmp_path / n) for n in ("seeds", "pages", "robots"))
+    CrawlSites([_hot()]).to_seeds_df(spark).write.parquet(seeds_p)
+    fetcher.pages.write.parquet(pages_p)
+    robots.write.parquet(robots_p)
+    monkeypatch.syspath_prepend(str(Path(__file__).parent.parent / "jobs"))
+    import crawl_job
+
+    state, out = tmp_path / "state", tmp_path / "documents"
+    job_args = ["--seeds", seeds_p, "--pages", pages_p, "--robots", robots_p, "--state-dir", str(state)]
+    first = crawl_job.main([*job_args, "--max-waves", "2"])
+    with pytest.raises(ValueError, match="already holds a crawl"):
+        crawl_job.main(job_args)
+    second = crawl_job.main([*job_args, "--resume", "--output", str(out)])
+    assert first.scheduled_per_wave + second.scheduled_per_wave == hot_sim.scheduled_per_wave
+    docs = spark.read.parquet(str(out))
+    assert docs.count() == docs.select("doc_id").distinct().count() == hot_sim.documents

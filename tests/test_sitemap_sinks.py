@@ -260,7 +260,7 @@ class TestSitemapMonitorPlan:
         assert cand.count() == 0
         assert snapshot.count() == 2
 
-    def test_new_urls_flagged_and_not_followed(self, spark):
+    def test_new_urls_flagged_and_not_followed(self, spark, tmp_path):
         from searchgov_spider_spark.config import CrawlConfig
         from searchgov_spider_spark.plans.crawl import CrawlEngine
         from searchgov_spider_spark.plans.sitemap_monitor import sitemap_frontier_candidates
@@ -298,7 +298,8 @@ class TestSitemapMonitorPlan:
             "handle_javascript boolean, output_target string, depth_limit int, "
             "deny_paths array<string>, domain_priority int",
         )
-        eng = CrawlEngine(spark, seeds, TablePageFetcher(pages), config=CrawlConfig(wave_seconds=30.0))
+        eng = CrawlEngine(spark, seeds, TablePageFetcher(pages), str(tmp_path / "state"),
+                          config=CrawlConfig(wave_seconds=30.0))
         frontier = eng._prepare_candidates(cand)
         seen0 = spark.createDataFrame([], "url_hash long, canon_url string")
         res = eng.run_from(frontier, seen0, max_waves=4)
