@@ -51,7 +51,9 @@ def parse_args(argv=None):
     src.add_argument("--pages", help="replay pages parquet (sandbox / recorded-cache mode)")
     src.add_argument("--http", action="store_true", help="real HTTP fetch (mapInPandas urllib)")
     ap.add_argument("--robots", help="optional robots parquet (domain, body)")
-    ap.add_argument("--max-waves", type=int, default=None)
+    ap.add_argument(
+        "--max-waves", type=int, default=None, help="stop before this wave number, also on --resume"
+    )
     ap.add_argument("--resume", action="store_true", help="continue from latest committed wave")
     ap.add_argument("--output", help="optional parquet dir for the crawl's documents table")
     ap.add_argument(
@@ -108,7 +110,9 @@ def main(argv=None):
     robots = spark.read.parquet(args.robots) if args.robots else None
 
     if args.resume:
-        result = CrawlEngine.resume(spark, seeds, fetcher, args.state_dir, robots=robots)
+        result = CrawlEngine.resume(
+            spark, seeds, fetcher, args.state_dir, robots=robots, max_waves=args.max_waves
+        )
     else:
         engine = CrawlEngine(spark, seeds, fetcher, args.state_dir, robots=robots)
         result = engine.run(max_waves=args.max_waves)

@@ -6,8 +6,9 @@ operations and vectorized pandas/Arrow UDFs:
 
 - URL frontier + fetch scheduler as a batch-iterative BFS wave loop
   (``plans.crawl.CrawlEngine``), with per-wave parquet/Iceberg checkpoints.
-- URL-seen dedup as broadcast bloom pre-filter + exact ``left_anti`` join
-  on ``(url_hash, canon_url)`` (``operators.dedup``).
+- URL-seen dedup as an exact ``left_anti`` join on ``(url_hash, canon_url)``,
+  behind a broadcast bloom pre-filter once the seen set passes
+  ``plans.crawl.BLOOM_OVER_ROWS`` rows (``operators.dedup``).
 - Per-domain politeness budgets / priority ordering as salted window
   top-k (``operators.politeness``).
 - robots.txt rule evaluation as broadcast join + vectorized longest-prefix

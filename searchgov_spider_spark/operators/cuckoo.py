@@ -4,7 +4,7 @@ The bloom path (operators/dedup.py) is append-only membership; this is
 the standard cuckoo filter (Fan, Andersen, Kaminsky, Mitzenmacher,
 "Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014 — public
 algorithm), which additionally supports O(1) DELETE. Deletion maps to
-the engine's re-crawl semantics: expiring a URL from seen-state (P5
+re-crawl semantics: expiring a URL from seen-state (P5
 orphan-TTL cleanup, sitemap re-monitoring) evicts one fingerprint
 instead of forcing a full filter rebuild, which a bloom cannot do.
 
@@ -13,11 +13,11 @@ Semantics are a MULTISET, per the paper's deletion contract: every
 insert skipping — skipping a colliding key would make a later delete of
 that key evict some OTHER live key's only copy, a false negative), and
 ``delete`` is safe exactly for keys added at least as many times as
-deleted. The engine upholds that contract structurally: adds are
-schedule-time fingerprints of provably-unseen URLs, deletes are
-restricted to members of the seen table (plans/crawl.py expire_seen).
+deleted. Callers uphold that contract by deleting only members of the
+seen table the filter was built from (driver_queries.q_expire_recrawl
+expires a subset of its seen set).
 
-Plug surface matches ShardedBloom where the engine consumes it:
+Plug surface matches ShardedBloom where ``dedupe_against_seen`` consumes it:
 ``contains(np.ndarray) -> bool[]`` and pickle-for-broadcast, so
 ``dedupe_against_seen(candidates, seen, bloom=cuckoo_filter)`` works
 unchanged (no false negatives; FPP ~ 2*slots/2^fp_bits ~ 1.2e-4 at

@@ -19,8 +19,10 @@ Scale contract:
 - frontier/seen are hash-identified by ``url_hash = xxhash64(canon_url)``;
   each state write keeps the wave frame's own (AQE-sized) partitioning, so
   a small wave's delta is one file (sources/state.py).
-- dedup = sharded-bloom pre-filter (broadcast) + exact left_anti on
-  (url_hash, canon_url) — operators/dedup.py.
+- dedup = exact left_anti on (url_hash, canon_url) — operators/dedup.py.
+  Above ``BLOOM_OVER_ROWS`` seen rows a sharded-bloom pre-filter
+  (broadcast) runs in front of it; below, the wave runs only the exact
+  anti-join.
 - the politeness window is salted two-phase top-k — operators/politeness.py.
 - filters/robots are broadcast joins + codegen predicates, always upstream
   of the fetch stage (filter-before-fetch, SURVEY.md §4).
@@ -44,7 +46,6 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, DISCOVERY_STRIDE, CrawlConfig, UNWANTED_HTTP_CODES
 from ..functions.urls import url_hash_col, url_host_col, url_sha256_col, with_canonical
-from ..operators.cuckoo import build_cuckoo
 from ..operators.dedup import build_bloom, build_delta_bloom, dedupe_against_seen, dedupe_intra_wave
 from ..operators.extraction import extract_spans
 from ..operators.filters import apply_prefetch_filters, filter_reason_col, normalize_job_rules
@@ -53,6 +54,8 @@ from ..operators.robots import apply_agent_rules, robots_keep_col, select_agent_
 
 INTRA_WAVE_ORDER = ("depth", "discovery_idx", "job", "url")
 SEEN_COLS = ("url_hash", "canon_url")
+# seen rows above which a wave pre-filters its candidates with a bloom
+BLOOM_OVER_ROWS = 50_000
 
 
 @dataclass
@@ -96,21 +99,17 @@ class CrawlEngine:
         state_dir: str,
         robots: DataFrame | None = None,
         config: CrawlConfig = DEFAULT_CONFIG,
-        use_bloom_over: int = 50_000,
-        seen_filter: str = "bloom",
     ):
         from ..sources.state import ParquetStateStore
-
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
 
         self.spark = spark
         self.fetcher = fetcher
         self.config = config
         self.store = ParquetStateStore(spark, state_dir)
-        self.use_bloom_over = use_bloom_over
-        self.seen_filter = seen_filter
+        # the seen filter and the committed seen files it holds: None with
+        # no filter, and while it holds a delta that no commit names yet
         self._bloom = None
+        self._bloom_files: frozenset[str] | None = None
         self._bloom_capacity = 0
 
         # Loop invariants, built once: every wave reuses these relations
@@ -139,15 +138,17 @@ class CrawlEngine:
         seeds: DataFrame,
         fetcher,
         state_dir: str,
+        max_waves: int | None = None,
         **kwargs,
     ) -> CrawlResult:
         """P4: continue a crawl from its newest commit. Writes of a wave
-        that never committed are named by no record, so the wave replays."""
+        that never committed are named by no record, so the wave replays.
+        The crawl stops before wave ``max_waves``, as in ``run_from``."""
         engine = cls(spark, seeds, fetcher, state_dir, **kwargs)
         wave = engine.store.newest()
         if wave is None:
             raise FileNotFoundError(f"no committed wave under {state_dir} to resume from")
-        return engine._crawl(wave)
+        return engine._crawl(wave, max_waves)
 
     def _prepare_candidates(self, cand: DataFrame) -> DataFrame:
         """filters → robots → canonical identity; candidates must arrive with
@@ -181,67 +182,30 @@ class CrawlEngine:
         )
         return dedupe_intra_wave(self._prepare_candidates(starts), order_cols=INTRA_WAVE_ORDER)
 
-    def _maintain_bloom(self, seen: DataFrame, seen_count: int, seen_delta: DataFrame, n_delta: int | None = None):
-        """Incremental bloom maintenance (the Redis-SADD analog): per wave,
-        build a delta bloom from just the newly scheduled fingerprints (the
-        wave's ``seen_delta``) and OR it into the cumulative filter. A full
-        rebuild happens only on first use (or resume) and when the seen set
-        outgrows the spec's design capacity — O(seen) work amortized, not
-        per wave."""
+    def _maintain_bloom(
+        self, seen: DataFrame, seen_count: int, seen_delta: DataFrame, n_delta: int, files: frozenset[str]
+    ):
+        """The wave's seen filter, above ``BLOOM_OVER_ROWS`` seen rows. A
+        filter holds exactly the committed seen ``files`` it was built and
+        advanced from: when the wave's commit names that set, the wave ORs
+        in a bloom of just its delta (the Redis-SADD analog, O(delta));
+        any other set (injected or expired seen rows, a compaction, a new
+        engine) or a seen set past the filter's capacity rebuilds it from
+        ``seen`` (O(seen))."""
         cfg = self.config
-        if seen_count <= self.use_bloom_over:
+        if seen_count <= BLOOM_OVER_ROWS:
+            self._bloom = self._bloom_files = None
             return None
-        capacity_for = lambda n: max(n * 4, cfg.bloom_capacity)  # noqa: E731
-        if self._bloom is None or seen_count > self._bloom_capacity:
-            self._bloom_capacity = capacity_for(seen_count)
-            if self.seen_filter == "cuckoo":
-                self._bloom = build_cuckoo(seen, capacity=self._bloom_capacity)
-            else:
-                self._bloom = build_bloom(
-                    seen, capacity=self._bloom_capacity,
-                    fpp=cfg.bloom_fpp, n_shards=cfg.bloom_shards,
-                )
-        elif self.seen_filter == "cuckoo":
-            # O(delta) driver-side insert (Arrow transfer of just the wave's
-            # 8 B/row fingerprints) — cuckoo tables aren't OR-mergeable like
-            # bloom bitmaps, so the delta lands as inserts instead of a merge
-            for b in seen_delta.select("url_hash").toArrow().to_batches(max_chunksize=4_000_000):
-                self._bloom.add(b.column(0).to_numpy(zero_copy_only=False))
-        else:
-            delta = build_delta_bloom(
-                seen_delta.select("url_hash"), self._bloom.spec, n_rows=n_delta,
+        if files != self._bloom_files or seen_count > self._bloom_capacity:
+            self._bloom_capacity = max(seen_count * 4, cfg.bloom_capacity)
+            self._bloom = build_bloom(
+                seen, capacity=self._bloom_capacity, fpp=cfg.bloom_fpp, n_shards=cfg.bloom_shards,
             )
+        else:
+            delta = build_delta_bloom(seen_delta.select("url_hash"), self._bloom.spec, n_rows=n_delta)
             self._bloom.merge(delta)
+        self._bloom_files = None  # until the wave's commit names the delta
         return self._bloom
-
-    def expire_seen(self, seen: DataFrame, expired: DataFrame) -> DataFrame:
-        """Re-crawl semantics (sitemap re-monitoring / P5 TTL expiry):
-        drop URLs from the seen set so the next wave schedules them again.
-
-        ``expired`` needs a ``canon_url`` column (``url_hash`` derived if
-        absent). With ``seen_filter='cuckoo'`` the in-memory filter evicts
-        just the expired fingerprints — O(delta), the operation a bloom
-        cannot do; in bloom mode the filter is invalidated and rebuilt
-        lazily on the next wave (O(seen)). Returns the surviving seen
-        DataFrame; ``run_from`` commits it with the re-crawl frontier."""
-        if "url_hash" not in expired.columns:
-            expired = expired.withColumn("url_hash", url_hash_col("canon_url"))
-        expired = expired.select("url_hash").distinct()
-        survivors = seen.join(expired, "url_hash", "left_anti")
-        if self._bloom is not None:
-            if self.seen_filter == "cuckoo":
-                # delete only hashes actually IN seen — deleting a
-                # non-member could evict a fingerprint-colliding live
-                # key's copy (the paper's deletion contract: delete only
-                # what was added)
-                members = expired.join(
-                    seen.select("url_hash").distinct(), "url_hash", "left_semi"
-                )
-                for b in members.toArrow().to_batches(max_chunksize=4_000_000):
-                    self._bloom.delete(b.column(0).to_numpy(zero_copy_only=False))
-            else:
-                self._bloom = None  # bloom can't delete: force rebuild
-        return survivors
 
     def _budget_col(self):
         cfg = self.config
@@ -304,7 +268,7 @@ class CrawlEngine:
             if frontier_size == 0:
                 break
             frontier = store.read("frontier", wave)
-            committed_seen = "seen" in store.record(wave)["tables"]
+            seen_files = _seen_files(store.record(wave))
 
             budgeted = frontier.withColumn("wave_budget", self._wave_budget)
             scheduled, deferred = schedule_wave(budgeted, "wave_budget", cfg.salt_buckets)
@@ -327,7 +291,7 @@ class CrawlEngine:
             )
             stats = fetch_obs.get
             seen, seen_count = seen_delta, n_scheduled
-            if committed_seen:
+            if seen_files:
                 seen = store.read_accumulated("seen", wave).unionByName(seen_delta)
                 seen_count += store.rows("seen", wave)
 
@@ -409,7 +373,7 @@ class CrawlEngine:
                 cand_obs, F.count(F.lit(1)).alias("n")
             ).cache()
 
-            bloom = self._maintain_bloom(seen, seen_count, seen_delta, n_scheduled)
+            bloom = self._maintain_bloom(seen, seen_count, seen_delta, n_scheduled, seen_files)
             # with a bloom, the out-link count (observed by the documents
             # write) upper-bounds the suspect set and seen_count tracks the
             # big side, letting steady-state waves take the broadcast-probe
@@ -447,6 +411,8 @@ class CrawlEngine:
             )
             result.waves.append(metrics)
             store.commit(wave + 1, metrics.__dict__)
+            if bloom is not None:
+                self._bloom_files = _seen_files(store.record(wave + 1))
             last = wave + 1
             parsed.unpersist()
             fetched.unpersist()
@@ -457,6 +423,23 @@ class CrawlEngine:
         result.seen = store.read_accumulated("seen", last) if "seen" in tables else None
         result.documents = store.read_accumulated("documents", last) if "documents" in tables else None
         return result
+
+
+def expire_seen(seen: DataFrame, expired: DataFrame) -> DataFrame:
+    """Re-crawl semantics (sitemap re-monitoring / P5 TTL expiry): the
+    ``seen`` rows not in ``expired``, matched on (url_hash, canon_url), so
+    the next wave schedules the expired URLs again. ``expired`` needs a
+    ``canon_url`` column (``url_hash`` derived if absent); ``run_from``
+    commits the survivors with the re-crawl frontier."""
+    if "url_hash" not in expired.columns:
+        expired = expired.withColumn("url_hash", url_hash_col("canon_url"))
+    return seen.join(expired.select(*SEEN_COLS).distinct(), list(SEEN_COLS), "left_anti")
+
+
+def _seen_files(record: dict) -> frozenset[str]:
+    """The seen-table files commit ``record`` names (none before a wave ran)."""
+    seen = record["tables"].get("seen")
+    return frozenset(f["path"] for f in seen["files"]) if seen else frozenset()
 
 
 def _driver_local(df: DataFrame) -> DataFrame:

@@ -160,7 +160,7 @@ def engine_runner(spark, fetcher, robots=None, max_waves: int | None = None):
         seeds = CrawlSites([site]).to_seeds_df(spark)
         sd = str(state_dir)
         if ParquetStateStore(spark, sd).newest() is not None:
-            return CrawlEngine.resume(spark, seeds, fetcher, sd, robots=robots)
+            return CrawlEngine.resume(spark, seeds, fetcher, sd, robots=robots, max_waves=max_waves)
         return CrawlEngine(spark, seeds, fetcher, sd, robots=robots).run(max_waves=max_waves)
 
     return run

@@ -16,7 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from searchgov_spider_spark.config import CrawlConfig
-from searchgov_spider_spark.plans.crawl import CrawlEngine
+from searchgov_spider_spark.functions.urls import url_hash_col, url_host_col
+from searchgov_spider_spark.plans.crawl import BLOOM_OVER_ROWS, CrawlEngine, _seen_files, expire_seen
 from searchgov_spider_spark.sources.fetch import TablePageFetcher
 from searchgov_spider_spark.testing.graph import generate_graph, graph_to_dfs, simulate_crawl
 
@@ -420,18 +421,81 @@ def test_uncommitted_writes_are_ignored_and_expired(spark, tmp_path):
     assert sorted(r.url_hash for r in reopened.read_accumulated("seen").collect()) == list(range(10, 30))
 
 
+SYNTHETIC = "https://synthetic.invalid/"
+
+
+def _synthetic_seen(spark):
+    """More than BLOOM_OVER_ROWS fingerprints of URLs outside the test web:
+    committed as seen, they engage the engine's bloom without changing
+    what the crawl schedules."""
+    return spark.range(BLOOM_OVER_ROWS + 1).select(
+        F.concat(F.lit(SYNTHETIC), F.col("id").cast("string")).alias("canon_url")
+    ).withColumn("url_hash", url_hash_col("canon_url"))
+
+
 def test_engine_with_incremental_bloom(spark, graph, tmp_path):
-    """Force the bloom path from wave 0 (use_bloom_over=1): per-wave delta
-    merge must preserve exactness (no false negatives), converging to the
-    simulator's seen set."""
+    """The bloom path, engaged from wave 0 by synthetic seen rows: per-wave
+    delta merges, and the rebuild a resume makes, keep the exact check
+    exact (no false negatives), converging to the simulator's crawl."""
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
-    eng = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"),
-                      robots=robots_df, config=CFG, use_bloom_over=1)
-    res = eng.run(max_waves=12)
+    state = str(tmp_path / "state")
+    eng = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), state, robots=robots_df, config=CFG)
+    first = eng.run_from(eng.initial_frontier(), seen=_synthetic_seen(spark), max_waves=4)
+    assert eng._bloom is not None  # the incremental filter was engaged ...
+    assert eng._bloom_files == _seen_files(eng.store.record())  # ... and mirrors the last commit
+    res = CrawlEngine.resume(
+        spark, seeds_df, TablePageFetcher(pages_df), state, robots=robots_df, config=CFG, max_waves=12
+    )
     sim = simulate_crawl(graph, CFG, max_waves=12)
-    assert {r["canon_url"] for r in res.seen.collect()} == sim.seen
-    assert res.scheduled_per_wave == sim.scheduled_per_wave
-    assert eng._bloom is not None  # the incremental filter was engaged
+    web_seen = res.seen.filter(~F.col("canon_url").startswith(SYNTHETIC))
+    assert {r["canon_url"] for r in web_seen.collect()} == sim.seen
+    assert res.seen.count() == BLOOM_OVER_ROWS + 1 + len(sim.seen)
+    assert first.scheduled_per_wave + res.scheduled_per_wave == sim.scheduled_per_wave
+
+
+def test_injected_seen_rebuilds_the_filter(spark, graph, tmp_path):
+    """The filter holds the committed seen files it was built from. After
+    ``run_from`` commits another seen set, the next wave rebuilds it
+    rather than merging just its delta into a filter that lacks the
+    injected rows, so no URL of the injected seen set is scheduled again."""
+    pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
+    eng = CrawlEngine(
+        spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"), robots=robots_df, config=CFG
+    )
+    synthetic = _synthetic_seen(spark)
+    crawled = eng.run_from(eng.initial_frontier(), seen=synthetic, max_waves=2).seen
+    assert eng._bloom is not None
+    # seen := the synthetic rows plus every other page of the web; pending
+    # := five pages outside that set that the first two waves never reached
+    canon = [p.canon_url for p in graph["pages"]]
+    injected = set(canon[::2])
+    reached = {r["canon_url"] for r in crawled.collect()}
+    seen = synthetic.unionByName(
+        spark.createDataFrame([(u,) for u in sorted(injected)], "canon_url string")
+        .withColumn("url_hash", url_hash_col("canon_url"))
+    )
+    hosts = eng.rules.select("job", F.explode("allowed_hosts").alias("domain"))
+    frontier = eng._prepare_candidates(
+        spark.createDataFrame([(u,) for u in sorted(set(canon[1::2]) - injected - reached)], "url string")
+        .withColumn("domain", url_host_col("url"))
+        .join(hosts, "domain")
+        .select("job", "url", F.lit(0).alias("depth"), F.lit(0).cast("long").alias("discovery_idx"))
+    ).orderBy("canon_url").limit(5)
+    c = eng.store.newest() + 1
+    rerun = eng.run_from(frontier, seen=seen, max_waves=c + 4)
+    assert rerun.scheduled_per_wave[0] == 5
+    rescheduled = rerun.seen.groupBy("canon_url").count().filter("count > 1")
+    assert rescheduled.count() == 0
+    assert rerun.seen.count() == BLOOM_OVER_ROWS + 1 + len(injected) + rerun.total_scheduled
+
+
+def test_expire_seen_keeps_hash_colliding_urls(spark):
+    """expire_seen matches on (url_hash, canon_url): a distinct URL whose
+    hash collides with an expired one stays seen."""
+    schema = "url_hash long, canon_url string"
+    seen = spark.createDataFrame([(1, "a"), (1, "b")], schema)
+    expired = spark.createDataFrame([(1, "a")], schema)
+    assert [tuple(r) for r in expire_seen(seen, expired).collect()] == [(1, "b")]
 
 
 def test_js_routing_fetcher(spark, graph, tmp_path):

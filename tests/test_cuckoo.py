@@ -83,8 +83,7 @@ def test_pickle_roundtrip_for_broadcast():
 
 def test_property_no_false_negatives_under_interleaved_ops():
     """EXACT invariant under interleaved adds and contract-respecting
-    deletes (only live keys deleted — what expire_seen enforces via its
-    left_semi join): every live key is ALWAYS reported present, and
+    deletes (only live keys deleted — the deletion contract): every live key is ALWAYS reported present, and
     n_items == |live multiset|. Holds even through fingerprint
     collisions because add() is a multiset (one stored copy per add)."""
     from hypothesis import given, settings, strategies as st
@@ -121,36 +120,15 @@ def test_property_no_false_negatives_under_interleaved_ops():
     check()
 
 
-def test_engine_cuckoo_matches_bloom_oracle(spark, tmp_path):
-    """CrawlEngine(seen_filter='cuckoo', use_bloom_over=0) — filter active
-    from wave 0, O(delta) inserts per wave — reproduces the pure-Python
-    simulator's exact seen set and per-wave schedule."""
-    from searchgov_spider_spark.config import CrawlConfig
-    from searchgov_spider_spark.plans.crawl import CrawlEngine
-    from searchgov_spider_spark.sources.fetch import TablePageFetcher
-    from searchgov_spider_spark.testing.graph import generate_graph, graph_to_dfs, simulate_crawl
-
-    cfg = CrawlConfig(wave_seconds=30.0, salt_buckets=4)
-    graph = generate_graph(n_pages=150, seed=11)
-    pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
-    engine = CrawlEngine(
-        spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"), robots=robots_df,
-        config=cfg, use_bloom_over=0, seen_filter="cuckoo",
-    )
-    result = engine.run(max_waves=8)
-    sim = simulate_crawl(graph, cfg, max_waves=8)
-    assert {r["canon_url"] for r in result.seen.collect()} == sim.seen
-    assert result.scheduled_per_wave == sim.scheduled_per_wave
-
-
 def test_engine_expire_seen_recrawls(spark, tmp_path):
-    """expire_seen evicts fingerprints (cuckoo delete) so an expired URL is
-    schedulable again — the re-crawl cycle a bloom filter cannot support
-    without a rebuild."""
+    """expire_seen drops URLs from the seen set, so an expired URL is
+    schedulable again: a re-run committed with the survivors re-fetches
+    exactly the expired URLs (the exact path: the seen set stays below
+    the engine's bloom threshold)."""
     from pyspark.sql import functions as F
 
     from searchgov_spider_spark.config import CrawlConfig
-    from searchgov_spider_spark.plans.crawl import CrawlEngine
+    from searchgov_spider_spark.plans.crawl import CrawlEngine, expire_seen
     from searchgov_spider_spark.sources.fetch import TablePageFetcher
     from searchgov_spider_spark.testing.graph import generate_graph, graph_to_dfs
 
@@ -158,13 +136,12 @@ def test_engine_expire_seen_recrawls(spark, tmp_path):
     graph = generate_graph(n_pages=120, seed=12)
     pages_df, seeds_df, robots_df = graph_to_dfs(spark, graph)
     engine = CrawlEngine(
-        spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"), robots=robots_df,
-        config=cfg, use_bloom_over=0, seen_filter="cuckoo",
+        spark, seeds_df, TablePageFetcher(pages_df), str(tmp_path / "state"), robots=robots_df, config=cfg,
     )
     result = engine.run(max_waves=6)
     # expire a slice of fetched URLs, then feed them back as a frontier
     expired = result.seen.orderBy("canon_url").limit(10).cache()
-    survivors = engine.expire_seen(result.seen, expired)
+    survivors = expire_seen(result.seen, expired)
     assert survivors.join(expired, "url_hash", "inner").count() == 0
 
     from searchgov_spider_spark.functions.urls import url_host_col
@@ -181,11 +158,10 @@ def test_engine_expire_seen_recrawls(spark, tmp_path):
         )
     )
     # the candidate-side dedup (what every discovered link flows through)
-    # now passes the expired URLs again — the engine's live cuckoo had
-    # their fingerprints evicted ...
+    # passes the expired URLs again ...
     from searchgov_spider_spark.operators.dedup import dedupe_against_seen
 
-    recrawlable = dedupe_against_seen(refrontier, survivors, engine._bloom)
+    recrawlable = dedupe_against_seen(refrontier, survivors, None)
     assert {r["canon_url"] for r in recrawlable.collect()} == {
         r["canon_url"] for r in expired.collect()
     }

@@ -323,3 +323,26 @@ def test_crawl_job_resume_outputs_the_whole_crawl(spark, world, hot_sim, tmp_pat
     assert first.scheduled_per_wave + second.scheduled_per_wave == hot_sim.scheduled_per_wave
     docs = spark.read.parquet(str(out))
     assert docs.count() == docs.select("doc_id").distinct().count() == hot_sim.documents
+
+
+def test_crawl_job_resume_honours_max_waves(spark, world, hot_sim, tmp_path, monkeypatch):
+    """``--max-waves`` bounds a ``--resume`` run too, by wave number as in
+    ``run_from``: ``--max-waves 1`` then ``--resume --max-waves 2`` runs
+    exactly wave 1. ``engine_runner``'s resume branch (a ``Rerun::``
+    replay) keeps its bound the same way."""
+    fetcher, robots = world
+    seeds_p, pages_p, robots_p = (str(tmp_path / n) for n in ("seeds", "pages", "robots"))
+    CrawlSites([_hot()]).to_seeds_df(spark).write.parquet(seeds_p)
+    fetcher.pages.write.parquet(pages_p)
+    robots.write.parquet(robots_p)
+    monkeypatch.syspath_prepend(str(Path(__file__).parent.parent / "jobs"))
+    import crawl_job
+
+    state = tmp_path / "state"
+    job_args = ["--seeds", seeds_p, "--pages", pages_p, "--robots", robots_p, "--state-dir", str(state)]
+    first = crawl_job.main([*job_args, "--max-waves", "1"])
+    second = crawl_job.main([*job_args, "--resume", "--max-waves", "2"])
+    assert [w.wave for w in first.waves] == [0] and [w.wave for w in second.waves] == [1]
+    replay = engine_runner(spark, fetcher, robots=robots, max_waves=3)(_hot(), "hot", state_dir=state)
+    assert [w.wave for w in replay.waves] == [2]
+    assert [w.scheduled for w in first.waves + second.waves + replay.waves] == hot_sim.scheduled_per_wave[:3]

@@ -359,29 +359,6 @@ def test_schedule_sitemap_urls(spark):
     assert out["https://x.gov/mid-hourly"]["freq_rank"] == 1
 
 
-def test_frontier_datasource_registered_scan(spark):
-    """Spark 4 Python Data Source API: registered format, explicit range
-    partitions, Arrow-batch read path; any split count yields the
-    identical deterministic table."""
-    from searchgov_spider_spark.sources.frontier_source import FrontierDataSource
-
-    spark.dataSource.register(FrontierDataSource)
-    a = (
-        spark.read.format("synthetic_frontier")
-        .option("n", 5000).option("numPartitions", 3).load()
-    )
-    b = (
-        spark.read.format("synthetic_frontier")
-        .option("n", 5000).option("numPartitions", 11).load()
-    )
-    assert a.count() == 5000
-    assert a.rdd.getNumPartitions() == 3 and b.rdd.getNumPartitions() == 11
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    row = a.filter("id = 4").collect()[0]
-    assert row.url == "HTTPS://D0.gov/p/4#frag"  # id%4==0 -> hot domain 0
-    assert (row.priority, row.depth, row.discovery_idx) == (4, 0, 4)
-
-
 class TestGenerateSitemaps:
     def test_chunking_and_xml(self, spark):
         from searchgov_spider_spark.operators.sitemap import generate_sitemaps
