@@ -50,7 +50,11 @@ def parse_args(argv=None):
     src = ap.add_mutually_exclusive_group(required=True)
     src.add_argument("--pages", help="replay pages parquet (sandbox / recorded-cache mode)")
     src.add_argument("--http", action="store_true", help="real HTTP fetch (mapInPandas urllib)")
-    ap.add_argument("--robots", help="optional robots parquet (domain, body)")
+    ap.add_argument(
+        "--robots",
+        help="optional parsed robots rules parquet (FIXTURES.md §4: domain, user_agent, "
+        "allow_prefixes, disallow_prefixes, crawl_delay, sitemap_urls)",
+    )
     ap.add_argument(
         "--max-waves", type=int, default=None, help="stop before this wave number, also on --resume"
     )
@@ -93,12 +97,12 @@ def main(argv=None):
     from searchgov_spider_spark.session import get_spark
     from searchgov_spider_spark.sources.fetch import HttpFetcher, TablePageFetcher
 
+    if args.schedule_cycle and not args.sites:
+        raise SystemExit("--schedule-cycle requires --sites")
     spark = get_spark("searchgov-crawl")
+    fetcher = HttpFetcher() if args.http else TablePageFetcher(spark.read.parquet(args.pages))
+    robots = spark.read.parquet(args.robots) if args.robots else None
     if args.schedule_cycle:
-        if not args.sites:
-            raise SystemExit("--schedule-cycle requires --sites")
-        fetcher = HttpFetcher() if args.http else TablePageFetcher(spark.read.parquet(args.pages))
-        robots = spark.read.parquet(args.robots) if args.robots else None
         return run_schedule_cycle(spark, args, fetcher, robots)
     if args.sites:
         from searchgov_spider_spark.sources.crawl_sites import CrawlSites
@@ -106,8 +110,6 @@ def main(argv=None):
         seeds = CrawlSites.from_file(args.sites).to_seeds_df(spark)
     else:
         seeds = spark.read.parquet(args.seeds)
-    fetcher = HttpFetcher() if args.http else TablePageFetcher(spark.read.parquet(args.pages))
-    robots = spark.read.parquet(args.robots) if args.robots else None
 
     if args.resume:
         result = CrawlEngine.resume(

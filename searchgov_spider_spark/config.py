@@ -70,15 +70,15 @@ class CrawlConfig:
     """Per-job crawl knobs, defaults matching the reference Scrapy config.
 
     The reference's depth clamp (DEPTH_LIMIT=3 into [1, 250]) lives in
-    ``operators.filters.normalize_job_rules`` and its 100 KB sink batch
-    size in ``sources.sinks``. ``frontier_buckets`` is unused: the engine
-    no longer passes it to the state store, whose writes keep each wave
-    frame's own partitioning. It stays for callers that still read it."""
+    ``operators.filters.normalize_job_rules``, its 100 KB sink batch
+    size in ``sources.sinks``, and its per-request timeout and size cap
+    (settings.py:38, :50) in ``sources.fetch``. ``frontier_buckets`` is
+    unused: the engine no longer passes it to the state store, whose
+    writes keep each wave frame's own partitioning. It stays for callers
+    that still read it."""
 
     download_delay_sec: float = 1.0          # settings.py:46 DOWNLOAD_DELAY
     per_domain_concurrency: int = 1          # settings.py:44-45
-    download_timeout_sec: float = 15.0       # settings.py:38
-    download_maxsize: int = 15 * 1024 * 1024  # settings.py:50
     wave_seconds: float = 60.0               # fetch budget window per wave per domain
     max_waves: int = 64
     user_agent: str = "usasearch"            # settings.py:28

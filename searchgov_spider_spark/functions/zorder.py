@@ -17,11 +17,11 @@ from pyspark.sql import functions as F
 ZBITS = 16
 
 
-def zorder_col(x: Column, y: Column, bits: int = ZBITS) -> Column:
-    """Interleave the low ``bits`` bits of x (even positions) and y (odd
-    positions) into a single long. Inputs are masked to ``bits`` bits."""
+def zorder_col(x: Column, y: Column) -> Column:
+    """Interleave the low ``ZBITS`` bits of x (even positions) and y (odd
+    positions) into a single long. Inputs are masked to ``ZBITS`` bits."""
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZBITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i)
         ).bitwiseOR(
@@ -30,9 +30,9 @@ def zorder_col(x: Column, y: Column, bits: int = ZBITS) -> Column:
     return z
 
 
-def zorder_sql(x: str, y: str, bits: int = ZBITS) -> str:
+def zorder_sql(x: str, y: str) -> str:
     terms = []
-    for i in range(bits):
+    for i in range(ZBITS):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " | ".join(terms) + ")"

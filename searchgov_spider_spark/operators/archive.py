@@ -280,11 +280,7 @@ def conditional_fetch_plan_sql(candidates_cte: str, prior_cte: str) -> str:
 _WARC_CRLF = "\r\n"
 
 
-def warc_records(
-    fetch_log: DataFrame,
-    body_col: str = "body",
-    n_files: int = 16,
-) -> DataFrame:
+def warc_records(fetch_log: DataFrame, n_files: int = 16) -> DataFrame:
     """Byte-stable WARC-style record serialization + archive placement.
 
     Closes the archive loop that :func:`cdx_index` opened: the CDX rows
@@ -297,7 +293,7 @@ def warc_records(
     as a sort-on-write archive layout.
 
     Input: the :func:`cdx_index` fetch-log columns ``(url, fetch_ts,
-    http_status, mime, digest)`` plus a ``body_col`` string payload.
+    http_status, mime, digest)`` plus a ``body`` string payload.
     Output, one row per capture::
 
         (warc_file, offset, length, surt, fetch_ts, url, digest, record)
@@ -332,7 +328,7 @@ def warc_records(
 
     from ..functions.hashing import portable_hash32_col
 
-    body = F.col(body_col)
+    body = F.col("body")
     record = F.concat(
         F.lit("WARC/1.0" + _WARC_CRLF),
         F.lit("WARC-Type: response" + _WARC_CRLF),
@@ -370,10 +366,9 @@ def warc_records(
     )
 
 
-def warc_records_sql(fetch_log_cte: str, body_expr: str = "body", n_files: int = 16) -> str:
+def warc_records_sql(fetch_log_cte: str, n_files: int = 16) -> str:
     """DuckDB oracle twin over a CTE named ``fl`` carrying the fetch-log
-    columns; ``body_expr`` names the payload column inside ``fl``.
-    ``strlen`` is DuckDB's VARCHAR byte length (octet_length is
+    columns and the ``body`` payload. ``strlen`` is DuckDB's VARCHAR byte length (octet_length is
     BLOB-only); ``chr(13)||chr(10)`` renders CRLF without escape-syntax
     divergence."""
     from ..functions.hashing import portable_hash32_sql
@@ -385,8 +380,8 @@ def warc_records_sql(fetch_log_cte: str, body_expr: str = "body", n_files: int =
         f"'WARC-Date: ' || fetch_ts::VARCHAR || {crlf} || "
         f"'WARC-Payload-Digest: ' || digest || {crlf} || "
         f"'Content-Type: ' || mime || {crlf} || "
-        f"'Content-Length: ' || strlen({body_expr})::VARCHAR || {crlf} || {crlf} || "
-        f"{body_expr} || {crlf} || {crlf})"
+        f"'Content-Length: ' || strlen(body)::VARCHAR || {crlf} || {crlf} || "
+        f"body || {crlf} || {crlf})"
     )
     return f"""
         WITH {fetch_log_cte},

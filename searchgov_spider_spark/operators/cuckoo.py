@@ -45,13 +45,14 @@ from .dedup import _splitmix64
 SLOTS = 4
 MAX_KICKS = 500
 MAX_STASH = 64  # parked fingerprints tolerated before declaring over-capacity
+LOAD = 0.84  # target slot occupancy at ``capacity`` items
 
 
 class CuckooFilter:
     """Single-table cuckoo filter over int64 url_hash values."""
 
-    def __init__(self, capacity: int, load: float = 0.84):
-        n = max(8, int(capacity / (SLOTS * load)))
+    def __init__(self, capacity: int):
+        n = max(8, int(capacity / (SLOTS * LOAD)))
         self.n_buckets = 1 << max(3, math.ceil(math.log2(n)))
         self._mask = np.uint64(self.n_buckets - 1)
         self.table = np.zeros((self.n_buckets, SLOTS), dtype=np.uint16)
@@ -214,8 +215,8 @@ class CuckooFilter:
         self.stash = list(state.get("stash", []))
 
 
-def build_cuckoo(df, hash_col: str = "url_hash", capacity: int = 1 << 20) -> CuckooFilter:
-    """Driver-side build from a DataFrame's hash column. Arrow transfer
+def build_cuckoo(df, capacity: int = 1 << 20) -> CuckooFilter:
+    """Driver-side build from a DataFrame's ``url_hash`` column. Arrow transfer
     (8 B/row, no pandas copy), inserted in bounded chunks so the per-add
     working set stays flat regardless of input size. The column is
     expected pre-deduped (the seen table is keyed by url_hash); duplicate
@@ -223,7 +224,7 @@ def build_cuckoo(df, hash_col: str = "url_hash", capacity: int = 1 << 20) -> Cuc
     sets past driver memory, shard the column by ``pmod(url_hash,
     n_shards)`` first and build per-shard filters."""
     cf = CuckooFilter(capacity)
-    tbl = df.select(hash_col).toArrow()
+    tbl = df.select("url_hash").toArrow()
     for batch in tbl.to_batches(max_chunksize=4_000_000):
         cf.add(batch.column(0).to_numpy(zero_copy_only=False))
     return cf

@@ -242,10 +242,9 @@ def build_bloom_from_hashes(h: np.ndarray, spec: BloomSpec) -> ShardedBloom:
 DRIVER_BLOOM_MAX_ROWS = 2_000_000
 
 
-def build_delta_bloom(
-    df: DataFrame, spec: BloomSpec, n_rows: int | None = None, hash_col: str = "url_hash"
-) -> ShardedBloom:
-    """Per-wave delta bloom of the cumulative filter's ``spec``.
+def build_delta_bloom(df: DataFrame, spec: BloomSpec, n_rows: int | None = None) -> ShardedBloom:
+    """Per-wave delta bloom of the cumulative filter's ``spec`` over
+    ``df.url_hash``.
 
     For a small known row count the raw 8-byte hashes come to the driver
     via Arrow (a few MB for a politeness-bounded wave) and their bits are
@@ -254,9 +253,9 @@ def build_delta_bloom(
     job instead of a coalesce + bitmap reduce. Larger deltas take the
     distributed ``build_bloom``."""
     if n_rows is not None and n_rows <= DRIVER_BLOOM_MAX_ROWS:
-        h = df.select(hash_col).toArrow().column(0).to_numpy()
+        h = df.select("url_hash").toArrow().column(0).to_numpy()
         return build_bloom_from_hashes(h, spec)
-    return build_bloom(df, hash_col, spec=spec)
+    return build_bloom(df, "url_hash", spec=spec)
 
 
 def bloom_might_contain_udf(spark, bloom: ShardedBloom):
@@ -281,12 +280,11 @@ def dedupe_against_seen(
     candidates: DataFrame,
     seen: DataFrame,
     bloom: ShardedBloom | None = None,
-    hash_col: str = "url_hash",
-    url_col: str = "canon_url",
     candidates_hint_rows: int | None = None,
     seen_hint_rows: int | None = None,
 ) -> DataFrame:
-    """D1: rows of ``candidates`` not present in ``seen``.
+    """D1: rows of ``candidates`` whose (url_hash, canon_url) is not in
+    ``seen``.
 
     With a bloom, candidates that *might* be seen go through the exact
     anti-join while definite-new rows skip it entirely; the union of both
@@ -307,13 +305,13 @@ def dedupe_against_seen(
     suspects against those. Unhinted, oversized, or small-seen waves
     keep the shuffle anti-join.
     """
+    keys = ["url_hash", "canon_url"]
     if bloom is None:
-        return candidates.join(seen.select(hash_col, url_col), [hash_col, url_col], "left_anti")
+        return candidates.join(seen.select(*keys), keys, "left_anti")
     spark = candidates.sparkSession
-    flagged = candidates.withColumn("_maybe_seen", bloom_might_contain_udf(spark, bloom)(F.col(hash_col)))
+    flagged = candidates.withColumn("_maybe_seen", bloom_might_contain_udf(spark, bloom)(F.col("url_hash")))
     definite_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     suspects = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    keys = [hash_col, url_col]
     probe_pays = candidates_hint_rows is not None and candidates_hint_rows <= BROADCAST_PROBE_MAX_ROWS and (
         seen_hint_rows is None or seen_hint_rows >= 4 * max(1, candidates_hint_rows)
     )
@@ -328,25 +326,23 @@ def dedupe_against_seen(
 
 
 def dedupe_intra_wave(
-    candidates: DataFrame,
-    hash_col: str = "url_hash",
-    url_col: str = "canon_url",
-    order_cols: tuple[str, ...] = ("depth", "discovery_idx"),
+    candidates: DataFrame, order_cols: tuple[str, ...] = ("depth", "discovery_idx")
 ) -> DataFrame:
-    """D3: one row per URL within a wave, keeping the first-discovered row
-    ('first SADD wins'). min_by over a struct of the ordering columns gives a
-    deterministic winner — unlike dropDuplicates, whose survivor depends on
-    partition arrival order."""
-    others = [c for c in candidates.columns if c not in (hash_col, url_col)]
+    """D3: one row per (url_hash, canon_url) within a wave, keeping the
+    first-discovered row ('first SADD wins'). min_by over a struct of the
+    ordering columns gives a deterministic winner — unlike dropDuplicates,
+    whose survivor depends on partition arrival order."""
+    keys = ("url_hash", "canon_url")
+    others = [c for c in candidates.columns if c not in keys]
     ordering = F.struct(*[F.col(c) for c in order_cols], *[F.col(c) for c in others if c not in order_cols])
     packed = F.struct(*[F.col(c) for c in others])
     agged = (
-        candidates.groupBy(hash_col, url_col)
+        candidates.groupBy(*keys)
         .agg(F.min_by(packed, ordering).alias("_row"))
     )
-    return agged.select(hash_col, url_col, *[F.col(f"_row.{c}").alias(c) for c in others])
+    return agged.select(*keys, *[F.col(f"_row.{c}").alias(c) for c in others])
 
 
-def new_urls_diff(current: DataFrame, previous: DataFrame, url_col: str = "url") -> DataFrame:
-    """D5: sitemap diff — URLs in current but not previous (EXCEPT)."""
-    return current.select(url_col).distinct().join(previous.select(url_col), url_col, "left_anti")
+def new_urls_diff(current: DataFrame, previous: DataFrame) -> DataFrame:
+    """D5: sitemap diff — ``url`` values in current but not previous (EXCEPT)."""
+    return current.select("url").distinct().join(previous.select("url"), "url", "left_anti")

@@ -209,43 +209,36 @@ EXTRACTED_FIELDS = T.StructType(
 
 def extract_spans(
     fetched: DataFrame,
-    url_col: str = "url",
-    body_col: str = "body",
     keep_cols: Iterable[str] | None = None,
-    ctype_col: str | None = None,
+    ctype_col: str = "content_type",
 ) -> DataFrame:
-    """mapInPandas extraction stage: fetched(url, body, …) -> + spans,
-    out_links, title, html_lang, meta.
+    """mapInPandas extraction stage: fetched(url, body, ``ctype_col``, …)
+    -> + spans, out_links, title, html_lang, meta.
 
-    With ``ctype_col`` the kernel dispatches per row on content type
-    (HTML parser vs PDF kernel); without it every body is parsed as HTML
-    (the original L1-only contract).
+    The kernel dispatches per row on the ``ctype_col`` content type
+    (``parse_resource``): HTML through the span parser, PDF through the
+    PDF kernel, anything else empty fields.
 
-    Column pruning matters at scale: only url/body + keep_cols flow into the
-    Python worker (Arrow), everything else is dropped before the exchange.
+    Column pruning matters at scale: only url/body/content type +
+    keep_cols flow into the Python worker (Arrow), everything else is
+    dropped before the exchange.
     """
-    keep = list(keep_cols) if keep_cols is not None else [c for c in fetched.columns if c != body_col]
-    if url_col not in keep:
-        keep.insert(0, url_col)
-    if ctype_col is not None and ctype_col not in keep:
+    keep = list(keep_cols) if keep_cols is not None else [c for c in fetched.columns if c != "body"]
+    if "url" not in keep:
+        keep.insert(0, "url")
+    if ctype_col not in keep:
         keep.append(ctype_col)
-    in_df = fetched.select(*keep, body_col)
+    in_df = fetched.select(*keep, "body")
     out_schema = T.StructType(
         [in_df.schema[c] for c in keep] + list(EXTRACTED_FIELDS.fields)
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if ctype_col is None:
-                results = [
-                    parse_page(u, b)
-                    for u, b in zip(pdf[url_col], pdf[body_col])
-                ]
-            else:
-                results = [
-                    parse_resource(u, b, ct)
-                    for u, b, ct in zip(pdf[url_col], pdf[body_col], pdf[ctype_col])
-                ]
+            results = [
+                parse_resource(u, b, ct)
+                for u, b, ct in zip(pdf["url"], pdf["body"], pdf[ctype_col])
+            ]
             out = pdf[keep].copy()
             for field in ("spans", "out_links", "title", "html_lang", "meta"):
                 out[field] = [r[field] for r in results]

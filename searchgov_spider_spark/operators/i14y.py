@@ -48,19 +48,16 @@ def separate_file_name_udf(names: pd.Series) -> pd.Series:
     return names.map(separate_file_name, na_action="ignore")
 
 
-def assemble_i14y(
-    docs: DataFrame,
-    now_iso: str,
-    url_col: str = "url",
-    drop_contentless_html: bool = True,
-) -> DataFrame:
+def assemble_i14y(docs: DataFrame, now_iso: str) -> DataFrame:
     """Compose the full i14y document from extraction output.
 
     Expects columns: ``url``, ``content_type`` (the HTTP mime string),
     ``spans``, ``title``, ``html_lang``, ``meta`` (map<string,string>),
     and optionally ``content_language`` (response header language).
     Adds the reference's document fields; input passthrough columns are
-    retained (callers project what they need).
+    retained (callers project what they need). HTML rows without main
+    text content are dropped (the reference emits no document for
+    them); PDF rows are always kept.
 
     NOTE: field names are FLAT (title/description/content +
     language_valid), not the reference's language-suffixed
@@ -84,7 +81,7 @@ def assemble_i14y(
     )
     main = F.when(F.length(F.trim(main_raw)) > 0, F.trim(main_raw))
 
-    path = url_path_col(url_col)
+    path = url_path_col("url")
     base_file = F.regexp_extract(path, r"([^/]*)$", 1)
     has_dot = base_file.contains(".")
     basename = F.when(has_dot, F.regexp_extract(base_file, r"^(.*)\.[^.]*$", 1)).otherwise(base_file)
@@ -152,9 +149,7 @@ def assemble_i14y(
         ),
     ).otherwise(sanitize_text_col(description_src))
 
-    doc_path = F.when(is_pdf, F.col(url_col)).otherwise(
-        F.coalesce(m("url"), F.col(url_col))
-    )
+    doc_path = F.when(is_pdf, F.col("url")).otherwise(F.coalesce(m("url"), F.col("url")))
 
     out = (
         docs.withColumn("id", url_sha256_col(doc_path))
@@ -179,11 +174,9 @@ def assemble_i14y(
         .withColumn("basename", basename)
         .withColumn("extension", extension)
         .withColumn("url_path", path)
-        .withColumn("domain_name", url_host_col(url_col))
+        .withColumn("domain_name", url_host_col("url"))
     )
-    if drop_contentless_html:
-        out = out.filter(is_pdf | main.isNotNull())
-    return out
+    return out.filter(is_pdf | main.isNotNull())
 
 
 # --- upload-time serialization -------------------------------------------

@@ -39,7 +39,6 @@ def schedule_wave(
     frontier: DataFrame,
     budget: int | str,
     salt_buckets: int = 8,
-    domain_col: str = "domain",
 ) -> tuple[DataFrame, DataFrame]:
     """Split a wave's frontier into (scheduled, deferred) under the
     per-domain politeness budget.
@@ -54,10 +53,10 @@ def schedule_wave(
     salted = frontier.withColumn(
         "_salt", F.pmod(F.col("url_hash"), F.lit(max(1, salt_buckets))).cast("int")
     )
-    w_salted = Window.partitionBy(domain_col, "_salt").orderBy(*order)
+    w_salted = Window.partitionBy("domain", "_salt").orderBy(*order)
     with_srn = salted.withColumn("_srn", F.row_number().over(w_salted))
     pruned = with_srn.filter(F.col("_srn") <= budget_col).drop("_srn")
-    w_exact = Window.partitionBy(domain_col).orderBy(*order)
+    w_exact = Window.partitionBy("domain").orderBy(*order)
     ranked = pruned.withColumn("fetch_rank", F.row_number().over(w_exact))
     scheduled = ranked.filter(F.col("fetch_rank") <= budget_col).drop("_salt")
     # deferred = everything not scheduled. Both windows already computed
@@ -76,32 +75,32 @@ def schedule_wave(
     return scheduled, deferred
 
 
+TOP_K_SALT_BUCKETS = 8
+
+
 def top_k_per_group(
     df: DataFrame,
     group_cols: list[str],
     order: list[Column],
     k: int,
-    salt_col: Column | None = None,
-    salt_buckets: int = 8,
-    rank_fn=F.row_number,
 ) -> DataFrame:
-    """Generic salted top-k per group (used for politeness, keyword top-10,
-    priority scheduling).
+    """Salted two-phase top-k rows per group by ``order`` (row_number, so
+    ties are cut at exactly ``k``).
 
-    Any assignment of rows to salt buckets is correct: phase 1 keeps the
+    The salt is the partition id mod ``TOP_K_SALT_BUCKETS``. Any
+    assignment of rows to salt buckets is correct: phase 1 keeps the
     top-k of each (group, salt) slice, which is always a superset of the
-    group's true top-k, and phase 2 re-ranks exactly. The default salt is
-    therefore the partition id — free, no hash, and it cannot collide all
-    of a hot group onto one task.
+    group's true top-k, and phase 2 re-ranks exactly. The partition id is
+    free, needs no hash, and cannot collide all of a hot group onto one
+    task.
     """
-    if salt_col is None:
-        salt_col = F.pmod(F.spark_partition_id().cast("long"), F.lit(max(1, salt_buckets))).cast("int")
-    salted = df.withColumn("_salt", salt_col)
+    salt = F.pmod(F.spark_partition_id().cast("long"), F.lit(TOP_K_SALT_BUCKETS)).cast("int")
+    salted = df.withColumn("_salt", salt)
     w1 = Window.partitionBy(*group_cols, "_salt").orderBy(*order)
-    pruned = salted.withColumn("_r1", rank_fn().over(w1)).filter(F.col("_r1") <= k)
+    pruned = salted.withColumn("_r1", F.row_number().over(w1)).filter(F.col("_r1") <= k)
     w2 = Window.partitionBy(*group_cols).orderBy(*order)
     return (
-        pruned.withColumn("_r2", rank_fn().over(w2))
+        pruned.withColumn("_r2", F.row_number().over(w2))
         .filter(F.col("_r2") <= k)
         .drop("_salt", "_r1", "_r2")
     )
@@ -113,18 +112,13 @@ BREAKER_MIN_FETCHES = 10
 BREAKER_ERR_PPM = 300_000  # suspend at >= 30% server errors
 
 
-def domain_circuit_breaker(
-    fetch_log: DataFrame,
-    min_fetches: int = BREAKER_MIN_FETCHES,
-    err_ppm: int = BREAKER_ERR_PPM,
-    domain_col: str = "domain",
-    status_col: str = "http_status",
-) -> DataFrame:
+def domain_circuit_breaker(fetch_log: DataFrame) -> DataFrame:
     """Suspend domains whose wave error rate breaches the budget.
 
     Per domain: fetch count, 5xx count, error rate in ppm (integer
     division — engine-proof), and ``suspended`` once at least
-    ``min_fetches`` were attempted and the rate is >= ``err_ppm``.
+    ``BREAKER_MIN_FETCHES`` were attempted and the rate is >=
+    ``BREAKER_ERR_PPM``.
     Suspended domains are removed from the next wave's frontier (the
     scheduler left_anti-joins this table), protecting both the crawl
     budget and the struggling origin — the reference's fixed 1 req/s
@@ -132,8 +126,8 @@ def domain_circuit_breaker(
     path. One map-side-combinable hash agg; domain cardinality bounds
     the output.
     """
-    is_err = (F.col(status_col) >= 500).cast("long")
-    agg = fetch_log.groupBy(F.col(domain_col).alias("domain")).agg(
+    is_err = (F.col("http_status") >= 500).cast("long")
+    agg = fetch_log.groupBy("domain").agg(
         F.count(F.lit(1)).cast("long").alias("n_fetches"),
         F.sum(is_err).cast("long").alias("n_5xx"),
     )
@@ -143,17 +137,13 @@ def domain_circuit_breaker(
         "n_5xx",
         F.expr("n_5xx * 1000000 DIV n_fetches").alias("err_ppm"),
         (
-            (F.col("n_fetches") >= F.lit(min_fetches))
-            & (F.expr("n_5xx * 1000000 DIV n_fetches") >= F.lit(err_ppm))
+            (F.col("n_fetches") >= F.lit(BREAKER_MIN_FETCHES))
+            & (F.expr("n_5xx * 1000000 DIV n_fetches") >= F.lit(BREAKER_ERR_PPM))
         ).alias("suspended"),
     )
 
 
-def domain_circuit_breaker_sql(
-    fetch_cte: str,
-    min_fetches: int = BREAKER_MIN_FETCHES,
-    err_ppm: int = BREAKER_ERR_PPM,
-) -> str:
+def domain_circuit_breaker_sql(fetch_cte: str) -> str:
     """DuckDB twin over a CTE named ``fl`` with (domain, http_status)."""
     return f"""
         WITH {fetch_cte},
@@ -165,7 +155,8 @@ def domain_circuit_breaker_sql(
         )
         SELECT domain, n_fetches, n_5xx,
                n_5xx * 1000000 // n_fetches AS err_ppm,
-               (n_fetches >= {min_fetches} AND n_5xx * 1000000 // n_fetches >= {err_ppm}) AS suspended
+               (n_fetches >= {BREAKER_MIN_FETCHES}
+                AND n_5xx * 1000000 // n_fetches >= {BREAKER_ERR_PPM}) AS suspended
         FROM agg
         ORDER BY domain
     """
@@ -176,17 +167,12 @@ def domain_circuit_breaker_sql(
 DOWNLOAD_DELAY_S = 1  # reference politeness: 1 req/s/domain (settings.py:44-47)
 
 
-def drain_report(
-    frontier: DataFrame,
-    budget: int,
-    download_delay_s: int = DOWNLOAD_DELAY_S,
-    domain_col: str = "domain",
-) -> DataFrame:
+def drain_report(frontier: DataFrame, budget: int) -> DataFrame:
     """Crawl-capacity plan per domain: how long the pending frontier takes
     to drain under the politeness budget.
 
     Per domain: pending URL count, depth span, waves_to_drain =
-    ceil(pending / budget), and eta_seconds = pending * download_delay_s
+    ceil(pending / budget), and eta_seconds = pending * DOWNLOAD_DELAY_S
     (the reference's 1 req/s/domain cap makes drain time equal pending
     seconds regardless of worker count). All-integer ceil-div — engine-
     proof. This is the report a crawl operator reads to decide budget
@@ -195,7 +181,7 @@ def drain_report(
     cardinality.
     """
     return (
-        frontier.groupBy(F.col(domain_col).alias("domain"))
+        frontier.groupBy("domain")
         .agg(
             F.count(F.lit(1)).cast("long").alias("pending"),
             F.min("depth").cast("long").alias("min_depth"),
@@ -207,16 +193,12 @@ def drain_report(
             "min_depth",
             "max_depth",
             F.expr(f"(pending + {budget - 1}) DIV {budget}").alias("waves_to_drain"),
-            (F.col("pending") * download_delay_s).alias("eta_seconds"),
+            (F.col("pending") * DOWNLOAD_DELAY_S).alias("eta_seconds"),
         )
     )
 
 
-def drain_report_sql(
-    frontier_cte: str,
-    budget: int,
-    download_delay_s: int = DOWNLOAD_DELAY_S,
-) -> str:
+def drain_report_sql(frontier_cte: str, budget: int) -> str:
     """DuckDB twin over a CTE named ``f`` with (domain, depth)."""
     return f"""
         WITH {frontier_cte},
@@ -229,7 +211,7 @@ def drain_report_sql(
         )
         SELECT domain, pending, min_depth, max_depth,
                (pending + {budget - 1}) // {budget} AS waves_to_drain,
-               pending * {download_delay_s} AS eta_seconds
+               pending * {DOWNLOAD_DELAY_S} AS eta_seconds
         FROM agg
         ORDER BY domain
     """
@@ -276,9 +258,7 @@ def politeness_audit(
     )
 
 
-def politeness_audit_sql(
-    fetch_log_sql: str, delay_ms: int = DOWNLOAD_DELAY_S * 1000
-) -> str:
+def politeness_audit_sql(fetch_log_sql: str) -> str:
     return f"""
         WITH fl AS ({fetch_log_sql}),
         gaps AS (
@@ -289,7 +269,7 @@ def politeness_audit_sql(
         )
         SELECT domain, count(*)::BIGINT AS n_fetches,
                min(gap_ms)::BIGINT AS min_gap_ms,
-               sum(CASE WHEN gap_ms < {delay_ms} THEN 1 ELSE 0 END)::BIGINT AS violations
+               sum(CASE WHEN gap_ms < {DOWNLOAD_DELAY_S * 1000} THEN 1 ELSE 0 END)::BIGINT AS violations
         FROM gaps GROUP BY domain
         ORDER BY domain
     """
@@ -414,7 +394,6 @@ def wave_eta(
     n_workers: int = WAVE_WORKERS,
     delay_s: int = DOWNLOAD_DELAY_S,
     rps_cap: int = WORKER_RPS_CAP,
-    domain_col: str = "domain",
     delay_col: str | None = None,
 ) -> DataFrame:
     """Per-worker wave makespan forecast for a scheduled wave.
@@ -462,7 +441,7 @@ def wave_eta(
             F.lit(int(delay_s) * 1000),
         )
         per_dom = (
-            scheduled.groupBy(F.col(domain_col).alias("domain"))
+            scheduled.groupBy("domain")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_urls"),
                 F.max(delay_ms).cast("long").alias("delay_ms"),
@@ -472,7 +451,7 @@ def wave_eta(
         per_dom = per_dom.select("domain", "n_urls", dom_cost_ms)
     else:
         per_dom = (
-            scheduled.groupBy(F.col(domain_col).alias("domain"))
+            scheduled.groupBy("domain")
             .agg(F.count(F.lit(1)).cast("long").alias("n_urls"))
             .withColumn("dom_cost_ms", (F.col("n_urls") * (int(delay_s) * 1000)).cast("long"))
         )
@@ -499,13 +478,7 @@ def wave_eta(
     )
 
 
-def wave_eta_sql(
-    scheduled_cte: str,
-    n_workers: int = WAVE_WORKERS,
-    delay_s: int = DOWNLOAD_DELAY_S,
-    rps_cap: int = WORKER_RPS_CAP,
-    with_delay_col: bool = False,
-) -> str:
+def wave_eta_sql(scheduled_cte: str, with_delay_col: bool = False) -> str:
     """DuckDB twin over a CTE named ``sched`` with a ``domain`` column
     (plus a ``crawl_delay`` double column when ``with_delay_col``)."""
     from ..functions.hashing import portable_hash32_sql
@@ -513,21 +486,21 @@ def wave_eta_sql(
     h = portable_hash32_sql("'worker|' || domain")
     if with_delay_col:
         delay_ms = (
-            f"coalesce(floor(crawl_delay * 1000 + 0.5)::BIGINT, {int(delay_s) * 1000})"
+            f"coalesce(floor(crawl_delay * 1000 + 0.5)::BIGINT, {DOWNLOAD_DELAY_S * 1000})"
         )
         per_dom = f"""
         per_dom AS (
           SELECT domain, count(*)::BIGINT AS n_urls,
                  (count(*) * max({delay_ms}))::BIGINT AS dom_cost_ms,
-                 ({h} % {n_workers})::BIGINT AS worker
+                 ({h} % {WAVE_WORKERS})::BIGINT AS worker
           FROM sched GROUP BY domain
         )"""
     else:
         per_dom = f"""
         per_dom AS (
           SELECT domain, count(*)::BIGINT AS n_urls,
-                 (count(*) * {int(delay_s) * 1000})::BIGINT AS dom_cost_ms,
-                 ({h} % {n_workers})::BIGINT AS worker
+                 (count(*) * {DOWNLOAD_DELAY_S * 1000})::BIGINT AS dom_cost_ms,
+                 ({h} % {WAVE_WORKERS})::BIGINT AS worker
           FROM sched GROUP BY domain
         )"""
     return f"""
@@ -540,18 +513,14 @@ def wave_eta_sql(
           FROM per_dom GROUP BY worker
         )
         SELECT worker, n_domains, n_urls, politeness_floor_s,
-               (n_urls + {rps_cap - 1}) // {rps_cap} AS capacity_floor_s,
-               greatest(politeness_floor_s, (n_urls + {rps_cap - 1}) // {rps_cap}) AS eta_s
+               (n_urls + {WORKER_RPS_CAP - 1}) // {WORKER_RPS_CAP} AS capacity_floor_s,
+               greatest(politeness_floor_s, (n_urls + {WORKER_RPS_CAP - 1}) // {WORKER_RPS_CAP}) AS eta_s
         FROM per_worker
         ORDER BY worker
     """
 
 
-def assign_workers_balanced(
-    scheduled: DataFrame,
-    n_workers: int = WAVE_WORKERS,
-    domain_col: str = "domain",
-) -> DataFrame:
+def assign_workers_balanced(scheduled: DataFrame, n_workers: int = WAVE_WORKERS) -> DataFrame:
     """Serpentine (boustrophedon) domain→worker assignment — the
     skew-bounded alternative to :func:`wave_eta`'s stable hash.
 
@@ -571,7 +540,7 @@ def assign_workers_balanced(
     """
     from pyspark.sql import Window
 
-    per_dom = scheduled.groupBy(F.col(domain_col).alias("domain")).agg(
+    per_dom = scheduled.groupBy("domain").agg(
         F.count(F.lit(1)).cast("long").alias("n_urls")
     )
     rank = F.row_number().over(
@@ -582,9 +551,7 @@ def assign_workers_balanced(
     return per_dom.select("domain", "n_urls", worker.cast("long").alias("worker"))
 
 
-def assign_workers_balanced_sql(
-    scheduled_cte: str, n_workers: int = WAVE_WORKERS
-) -> str:
+def assign_workers_balanced_sql(scheduled_cte: str) -> str:
     """DuckDB twin over a CTE named ``sched`` with a ``domain`` column."""
     return f"""
         WITH {scheduled_cte},
@@ -597,9 +564,9 @@ def assign_workers_balanced_sql(
           FROM per_dom
         )
         SELECT domain, n_urls,
-               (CASE WHEN (rk - 1) % {2 * n_workers} < {n_workers}
-                     THEN (rk - 1) % {2 * n_workers}
-                     ELSE {2 * n_workers} - 1 - (rk - 1) % {2 * n_workers}
+               (CASE WHEN (rk - 1) % {2 * WAVE_WORKERS} < {WAVE_WORKERS}
+                     THEN (rk - 1) % {2 * WAVE_WORKERS}
+                     ELSE {2 * WAVE_WORKERS} - 1 - (rk - 1) % {2 * WAVE_WORKERS}
                 END)::BIGINT AS worker
         FROM ranked
         ORDER BY domain

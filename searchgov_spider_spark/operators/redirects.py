@@ -83,18 +83,16 @@ def resolve_redirects(
     )
 
 
-def resolve_redirects_sql(
-    requests_cte: str, redirects_cte: str, max_hops: int = REDIRECT_MAX_HOPS
-) -> str:
+def resolve_redirects_sql(requests_cte: str, redirects_cte: str) -> str:
     """DuckDB twin: the same composed-left-join plan, spelled as a chain
-    of CTE hops (h0..h{max_hops}) plus the final cap probe."""
+    of CTE hops (h0..h{REDIRECT_MAX_HOPS}) plus the final cap probe."""
     ctes = [
         requests_cte,
         redirects_cte,
         "h0 AS (SELECT url, url AS final_url, 0::BIGINT AS n_hops FROM requests)",
     ]
     prev = "h0"
-    for i in range(1, max_hops + 1):
+    for i in range(1, REDIRECT_MAX_HOPS + 1):
         ctes.append(
             f"h{i} AS (SELECT p.url, coalesce(m.dst, p.final_url) AS final_url, "
             f"p.n_hops + (CASE WHEN m.dst IS NOT NULL THEN 1 ELSE 0 END) AS n_hops "

@@ -139,11 +139,7 @@ def apply_robots(
 _ROBOTS_KEYS = ("user-agent", "allow", "disallow", "crawl-delay", "sitemap")
 
 
-def parse_robots_txt(
-    robots_files: DataFrame,
-    domain_col: str = "domain",
-    text_col: str = "robots_txt",
-) -> DataFrame:
+def parse_robots_txt(robots_files: DataFrame) -> DataFrame:
     """Parse raw robots.txt file bodies into the ``robots`` rules table.
 
     The reference hands robots enforcement to Scrapy's middleware, which
@@ -177,8 +173,8 @@ def parse_robots_txt(
     from pyspark.sql import Window
 
     lines = robots_files.select(
-        F.col(domain_col).alias("domain"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "raw"),
+        "domain",
+        F.posexplode(F.split(F.col("robots_txt"), "\n")).alias("pos", "raw"),
     )
     clean = F.trim(F.regexp_replace(F.col("raw"), "#.*$", ""))
     key = F.lower(F.trim(F.regexp_extract(clean, "^([^:]+):", 1)))

@@ -89,15 +89,14 @@ def parse_sitemap_udf(bodies: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"kind": [p[0] for p in parsed], "locs": [p[1] for p in parsed]})
 
 
-def resolve_sitemaps(
-    seeds: DataFrame, web: DataFrame, max_depth: int = MAX_SITEMAP_DEPTH
-) -> DataFrame:
+def resolve_sitemaps(seeds: DataFrame, web: DataFrame) -> DataFrame:
     """S5: expand sitemap URLs (possibly nested indexes) into page URLs.
 
     seeds: (sitemap_url) roots; web: (url, http_status, body).
     Returns (sitemap_url, url) — page URLs attributed to their root.
-    One join + parse per nesting level; visited-set anti-join prevents
-    index cycles (the reference's depth counter handles this implicitly).
+    One join + parse per nesting level, down to MAX_SITEMAP_DEPTH;
+    visited-set anti-join prevents index cycles (the reference's depth
+    counter handles this implicitly).
     """
     spark = seeds.sparkSession
     pending = seeds.select(
@@ -106,7 +105,7 @@ def resolve_sitemaps(
     visited = pending.select("sitemap_url", "url")
     out = None
     pending_empty = False
-    for _depth in range(max_depth + 1):
+    for _depth in range(MAX_SITEMAP_DEPTH + 1):
         if pending_empty:
             break
         fetched = pending.join(web.select("url", "http_status", "body"), "url", "left")
@@ -348,12 +347,10 @@ SITEMAP_MAX_URLS = 50_000  # sitemaps.org protocol cap per urlset file
 def generate_sitemaps(
     pages: DataFrame,
     max_per_file: int = SITEMAP_MAX_URLS,
-    url_col: str = "url",
-    domain_col: str = "domain",
 ) -> DataFrame:
     """The write side of the sitemap cycle (the reference only reads
     sitemaps; a crawl that republishes its index needs the writer):
-    chunk each domain's canonical URLs into protocol-compliant urlset
+    chunk each ``domain``'s canonical ``url`` values into protocol-compliant urlset
     files of <= ``max_per_file`` entries and render the XML.
 
     Per (domain, file_idx): n_urls and the <urlset> body, URLs in
@@ -369,10 +366,10 @@ def generate_sitemaps(
     by chunk range if one domain alone exceeds a task)."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(domain_col).orderBy(url_col)
+    w = Window.partitionBy("domain").orderBy("url")
     chunked = pages.select(
-        F.col(domain_col).alias("domain"),
-        F.col(url_col).alias("url"),
+        "domain",
+        "url",
         ((F.row_number().over(w) - 1) / max_per_file).cast("long").alias("file_idx"),
     )
     entry = F.concat(F.lit("<url><loc>"), F.col("url"), F.lit("</loc></url>"))

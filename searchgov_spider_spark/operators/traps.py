@@ -40,8 +40,6 @@ def detect_traps(
     urls: DataFrame,
     min_urls: int = TRAP_MIN_URLS,
     query_pct: int = TRAP_QUERY_PCT,
-    domain_col: str = "domain",
-    url_col: str = "url",
 ) -> DataFrame:
     """Per (domain, path): URL/query-permutation counts and a trap flag.
 
@@ -51,10 +49,10 @@ def detect_traps(
     later waves stop scheduling the trap.
     """
     per = urls.select(
-        F.col(domain_col).alias("domain"),
-        url_path_col(url_col).alias("path"),
-        url_query_col(url_col).alias("query"),
-        F.col(url_col).alias("url"),
+        "domain",
+        url_path_col("url").alias("path"),
+        url_query_col("url").alias("query"),
+        "url",
     )
     agg = per.groupBy("domain", "path").agg(
         F.countDistinct("url").cast("long").alias("n_urls"),
@@ -75,11 +73,7 @@ def detect_traps(
     )
 
 
-def detect_traps_sql(
-    frontier_cte: str,
-    min_urls: int = TRAP_MIN_URLS,
-    query_pct: int = TRAP_QUERY_PCT,
-) -> str:
+def detect_traps_sql(frontier_cte: str) -> str:
     """DuckDB twin over a CTE named ``f`` with (domain, url) columns.
 
     Path/query parsing mirrors Spark's try_parse_url on well-formed
@@ -105,19 +99,13 @@ def detect_traps_sql(
         )
         SELECT domain, path, n_urls, n_queries,
                n_queries * 100 // n_urls AS query_pct,
-               (n_urls >= {min_urls} AND n_queries * 100 // n_urls >= {query_pct}) AS is_trap
+               (n_urls >= {TRAP_MIN_URLS} AND n_queries * 100 // n_urls >= {TRAP_QUERY_PCT}) AS is_trap
         FROM agg
         ORDER BY domain, path
     """
 
 
-def recrawl_schedule(
-    visits: DataFrame,
-    domain_col: str = "domain",
-    url_col: str = "url_id",
-    ts_col: str = "ts",
-    changed_col: str = "changed",
-) -> DataFrame:
+def recrawl_schedule(visits: DataFrame) -> DataFrame:
     """Adaptive revisit scheduling from a visit history.
 
     Input rows are fetch observations ``(url_id, domain, ts, changed)``.
@@ -137,12 +125,12 @@ def recrawl_schedule(
     The window partitions by domain — the same key the scheduler
     shuffles on — so no global ordering ever materializes.
     """
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     agg = (
-        visits.groupBy(F.col(domain_col).alias("domain"), F.col(url_col).alias("url_id"))
+        visits.groupBy("domain", "url_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_visits"),
-            F.sum(F.col(changed_col).cast("long")).cast("long").alias("n_changes"),
+            F.sum(F.col("changed").cast("long")).cast("long").alias("n_changes"),
             F.min(ts_us).alias("_min_us"),
             F.max(ts_us).alias("_max_us"),
         )
@@ -195,7 +183,7 @@ TEMPLATE_HEX = r"[0-9a-f]{8,}"
 TEMPLATE_NUM = r"[0-9]+"
 
 
-def url_templates(urls: DataFrame, domain_col: str = "domain", url_col: str = "url") -> DataFrame:
+def url_templates(urls: DataFrame) -> DataFrame:
     """Generalize URLs into structural templates and count the population
     of each: long hex runs (ids, hashes) -> ``{hex}``, digit runs ->
     ``{n}``.  Template mining is how a crawler discovers that
@@ -207,12 +195,12 @@ def url_templates(urls: DataFrame, domain_col: str = "domain", url_col: str = "u
     itself.
     """
     tpl = F.regexp_replace(
-        F.regexp_replace(F.col(url_col), TEMPLATE_HEX, "{hex}"),
+        F.regexp_replace(F.col("url"), TEMPLATE_HEX, "{hex}"),
         TEMPLATE_NUM,
         "{n}",
     )
     return (
-        urls.select(F.col(domain_col).alias("domain"), tpl.alias("template"), F.col(url_col).alias("url"))
+        urls.select("domain", tpl.alias("template"), "url")
         .groupBy("domain", "template")
         .agg(
             F.countDistinct("url").cast("long").alias("n_urls"),
@@ -253,14 +241,7 @@ SOFT404_PATTERNS = (
 SOFT404_MIN_CHARS = 40
 
 
-def soft404(
-    pages: DataFrame,
-    min_chars: int = SOFT404_MIN_CHARS,
-    domain_col: str = "domain",
-    url_col: str = "url",
-    status_col: str = "http_status",
-    text_col: str = "text",
-) -> DataFrame:
+def soft404(pages: DataFrame) -> DataFrame:
     """Soft-404 detection: pages served with HTTP 200 whose body says
     otherwise — a not-found phrase or a near-empty body. Crawlers that
     index soft 404s pollute both the seen-set (the URL looks fetched) and
@@ -273,22 +254,22 @@ def soft404(
     evidence columns so the operator is auditable: (domain, url,
     http_status, n_chars, pattern_hit, too_small, is_soft404).
     """
-    lower_text = F.lower(F.col(text_col))
+    lower_text = F.lower(F.col("text"))
     pattern_hit = lower_text.rlike(SOFT404_PATTERNS)
-    n_chars = F.length(F.col(text_col)).cast("long")
-    too_small = n_chars < min_chars
+    n_chars = F.length(F.col("text")).cast("long")
+    too_small = n_chars < SOFT404_MIN_CHARS
     return pages.select(
-        F.col(domain_col).alias("domain"),
-        F.col(url_col).alias("url"),
-        F.col(status_col).cast("long").alias("http_status"),
+        "domain",
+        "url",
+        F.col("http_status").cast("long").alias("http_status"),
         n_chars.alias("n_chars"),
         pattern_hit.alias("pattern_hit"),
         too_small.alias("too_small"),
-        ((F.col(status_col) == 200) & (pattern_hit | too_small)).alias("is_soft404"),
+        ((F.col("http_status") == 200) & (pattern_hit | too_small)).alias("is_soft404"),
     )
 
 
-def soft404_sql(pages_cte: str, min_chars: int = SOFT404_MIN_CHARS) -> str:
+def soft404_sql(pages_cte: str) -> str:
     """DuckDB twin over a CTE named ``pg`` with
     (domain, url, http_status, text) columns."""
     return f"""
@@ -297,9 +278,9 @@ def soft404_sql(pages_cte: str, min_chars: int = SOFT404_MIN_CHARS) -> str:
                http_status::BIGINT AS http_status,
                length(text)::BIGINT AS n_chars,
                regexp_matches(lower(text), '{SOFT404_PATTERNS}') AS pattern_hit,
-               length(text) < {min_chars} AS too_small,
+               length(text) < {SOFT404_MIN_CHARS} AS too_small,
                (http_status = 200 AND (regexp_matches(lower(text), '{SOFT404_PATTERNS}')
-                                       OR length(text) < {min_chars})) AS is_soft404
+                                       OR length(text) < {SOFT404_MIN_CHARS})) AS is_soft404
         FROM pg
         ORDER BY domain, url
     """

@@ -44,7 +44,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, DISCOVERY_STRIDE, CrawlConfig, UNWANTED_HTTP_CODES
+from ..config import (
+    CONTENT_TYPES_BY_TARGET, DEFAULT_CONFIG, DISCOVERY_STRIDE, CrawlConfig, UNWANTED_HTTP_CODES,
+)
+from ..functions.content_type import is_valid_content_type_col
 from ..functions.urls import url_hash_col, url_host_col, url_sha256_col, with_canonical
 from ..operators.dedup import build_bloom, build_delta_bloom, dedupe_against_seen, dedupe_intra_wave
 from ..operators.extraction import extract_spans
@@ -122,7 +125,15 @@ class CrawlEngine:
         )
         self._filter_reason = filter_reason_col()
         self._robots_keep = robots_keep_col()
-        self._emit_ok = is_valid_content_type_for_target(F.col("content_type"), F.col("output_target"))
+        # a page is emitted when its job's output_target allows its content
+        # type; a null or empty header never is
+        self._emit_ok = F.coalesce(
+            *[
+                F.when(F.col("output_target") == target, is_valid_content_type_col("content_type", target))
+                for target in CONTENT_TYPES_BY_TARGET
+            ],
+            F.lit(False),
+        )
         self._wave_budget = self._budget_col()
         ok = F.col("http_status") == 200
         self._fetch_stats = (
@@ -251,7 +262,7 @@ class CrawlEngine:
         result's tables are those of the last commit, the whole crawl's."""
         cfg = self.config
         store = self.store
-        max_waves = max_waves or cfg.max_waves
+        max_waves = cfg.max_waves if max_waves is None else max_waves
         result = CrawlResult()
 
         # Driver-action budget: a small wave's cost is fixed per-job
@@ -458,16 +469,3 @@ def _observed(obs: Observation) -> dict | None:
     if obs._jo.getRow().length() == 0:
         return None
     return obs.get
-
-
-def is_valid_content_type_for_target(ctype, target):
-    """Per-row content-type validity when output_target varies by job."""
-    from ..config import CONTENT_TYPES_BY_TARGET
-
-    expr = F.lit(False)
-    for tgt, allowed in CONTENT_TYPES_BY_TARGET.items():
-        m = F.lit(False)
-        for t in allowed:
-            m = m | ctype.rlike(t)
-        expr = F.when(target == tgt, m).otherwise(expr)
-    return F.coalesce(expr, F.lit(False))

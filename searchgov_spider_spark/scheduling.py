@@ -61,7 +61,7 @@ class PendingJobStore:
     def count_pending_jobs(self) -> int:
         return len(list(self.path.glob("*.json")))
 
-    def get_all_pending_jobs(self, rerun_prefix: str = RERUN_PREFIX) -> list[dict]:
+    def get_all_pending_jobs(self) -> list[dict]:
         """Pending entries in deterministic (job_id) order, each with the
         rerun id it should be re-added under — prefixed once, never
         ``Rerun::Rerun::`` (schedulers.py:81-99 parity)."""
@@ -69,13 +69,9 @@ class PendingJobStore:
         for f in sorted(self.path.glob("*.json")):
             job = json.loads(f.read_text(encoding="UTF-8"))
             jid = job["job_id"]
-            job["rerun_id"] = jid if jid.startswith(rerun_prefix) else f"{rerun_prefix}{jid}"
+            job["rerun_id"] = jid if jid.startswith(RERUN_PREFIX) else f"{RERUN_PREFIX}{jid}"
             jobs.append(job)
         return jobs
-
-
-class SchedulerKilled(RuntimeError):
-    """Raised by ``run_pending(fail_after=N)`` to simulate a crash."""
 
 
 class CrawlScheduler:
@@ -115,17 +111,12 @@ class CrawlScheduler:
         self.runner(site, run_id)
         self.store.remove_pending_job(job["job_id"])
 
-    def run_pending(self, fail_after: int | None = None) -> list[str]:
-        """Run every pending job under its own id; ``fail_after=N``
-        simulates the scheduler dying after N jobs completed (entries
-        for the rest stay pending). Returns completed run ids."""
+    def run_pending(self) -> list[str]:
+        """Run every pending job under its own id, removing each entry on
+        completion (a crash leaves the rest pending). Returns completed
+        run ids."""
         done: list[str] = []
         for job in self.store.get_all_pending_jobs():
-            if fail_after is not None and len(done) >= fail_after:
-                raise SchedulerKilled(
-                    f"simulated crash after {fail_after} job(s); "
-                    f"{self.store.count_pending_jobs()} still pending"
-                )
             self._run_one(job, job["job_id"])
             done.append(job["job_id"])
         return done

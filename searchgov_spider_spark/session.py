@@ -43,7 +43,6 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"
 
 def get_spark(
     app_name: str = "searchgov_spider_spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -53,9 +52,13 @@ def get_spark(
       skew described in SURVEY.md §4).
     - Arrow on (all UDF exchange is vectorized; no per-row Python).
     - UTC session timezone (oracle comparisons against DuckDB).
+
+    The master is ``SPARK_GRAFT_MASTER`` when set, else
+    ``local[SPARK_GRAFT_CPUS]`` (the spark-submit master under
+    spark-submit).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_GRAFT_MASTER")
+    master = os.environ.get("SPARK_GRAFT_MASTER")
     if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         # direct `python` launch: default to local mode. Under spark-submit
         # the gateway JVM already carries --master; don't override it.

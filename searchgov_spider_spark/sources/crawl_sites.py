@@ -183,15 +183,16 @@ class CrawlSites:
     def scheduled(self):
         yield from (s for s in self if s.schedule)
 
-    def to_seeds_df(self, spark, domain_priority: int = 1):
+    def to_seeds_df(self, spark):
         """The Spark boundary: emit the engine's seeds table
-        (testing.graph.SEEDS_SCHEMA shape) for normalize_job_rules (S1).
-        One row per site — a config file is broadcast-sized by nature."""
+        (testing.graph.SEEDS_SCHEMA shape) for normalize_job_rules (S1),
+        every site at domain_priority 1. One row per site — a config
+        file is broadcast-sized by nature."""
         rows = [
             (
                 s.name, s.allowed_domains, s.starting_urls, s.allow_query_string,
                 s.handle_javascript, s.output_target, s.depth_limit,
-                list(s.deny_paths or []), domain_priority,
+                list(s.deny_paths or []), 1,
             )
             for s in self
         ]

@@ -26,7 +26,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import CrawlConfig, DEFAULT_CONFIG
+from ..config import DEFAULT_CONFIG
+
+# the reference's per-request caps: settings.py:38 DOWNLOAD_TIMEOUT and
+# settings.py:50 DOWNLOAD_MAXSIZE
+DOWNLOAD_TIMEOUT_S = 15.0
+DOWNLOAD_MAXSIZE = 15 * 1024 * 1024
 
 FETCH_FIELDS = T.StructType(
     [
@@ -39,16 +44,16 @@ FETCH_FIELDS = T.StructType(
 
 
 class TablePageFetcher:
-    """Replay fetches from a pages table (the sandbox 'web')."""
+    """Replay fetches from a pages table (the sandbox 'web') keyed by
+    ``canon_url``."""
 
-    def __init__(self, pages: DataFrame, key: str = "canon_url"):
-        self.key = key
+    def __init__(self, pages: DataFrame):
         self.pages = pages.select(
-            key, "http_status", "content_type", "content_language", "body"
+            "canon_url", "http_status", "content_type", "content_language", "body"
         )
 
     def fetch(self, scheduled: DataFrame) -> DataFrame:
-        joined = scheduled.join(self.pages, self.key, "left")
+        joined = scheduled.join(self.pages, "canon_url", "left")
         # URL not in the table ⇒ 404 with no body (HTTPCACHE_IGNORE_MISSING)
         return joined.withColumn("http_status", F.coalesce("http_status", F.lit(404)))
 
@@ -100,7 +105,7 @@ class PlaywrightFetcher:
     table-replay fetcher standing in for the browser.
     """
 
-    def __init__(self, config: CrawlConfig = DEFAULT_CONFIG, browser_type: str = "chromium"):
+    def __init__(self):
         import importlib.util
 
         if importlib.util.find_spec("playwright") is None:
@@ -109,20 +114,17 @@ class PlaywrightFetcher:
                 "binaries on the executors, or route JS jobs through a "
                 "table-replay fetcher (see RoutingFetcher tests)"
             )
-        self.config = config
-        self.browser_type = browser_type
 
     def fetch(self, scheduled: DataFrame) -> DataFrame:  # pragma: no cover - needs playwright
-        cfg = self.config
-        browser_type = self.browser_type
+        user_agent = DEFAULT_CONFIG.user_agent
         out_schema = T.StructType(list(scheduled.schema.fields) + list(FETCH_FIELDS.fields))
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from playwright.sync_api import sync_playwright  # executors only
 
             with sync_playwright() as p:
-                browser = getattr(p, browser_type).launch(headless=True)
-                page = browser.new_page(user_agent=cfg.user_agent)
+                browser = p.chromium.launch(headless=True)
+                page = browser.new_page(user_agent=user_agent)
                 page.route(
                     "**/*",
                     lambda route: route.abort()
@@ -132,8 +134,8 @@ class PlaywrightFetcher:
 
                 def one(url: str):
                     try:
-                        resp = page.goto(url, timeout=cfg.download_timeout_sec * 1000)
-                        body = page.content().encode("utf-8")[: cfg.download_maxsize]
+                        resp = page.goto(url, timeout=DOWNLOAD_TIMEOUT_S * 1000)
+                        body = page.content().encode("utf-8")[:DOWNLOAD_MAXSIZE]
                         return (
                             resp.status if resp else 0,
                             (resp.headers.get("content-type") if resp else None),
@@ -159,21 +161,18 @@ class PlaywrightFetcher:
 class HttpFetcher:
     """Real HTTP fetch via mapInPandas (disabled in sandbox: no network)."""
 
-    def __init__(self, config: CrawlConfig = DEFAULT_CONFIG):
-        self.config = config
-
     def fetch(self, scheduled: DataFrame) -> DataFrame:
-        cfg = self.config
+        user_agent = DEFAULT_CONFIG.user_agent
         out_schema = T.StructType(list(scheduled.schema.fields) + list(FETCH_FIELDS.fields))
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import urllib.request  # imported on executors only
 
             def one(url: str):
-                req = urllib.request.Request(url, headers={"User-Agent": cfg.user_agent})
+                req = urllib.request.Request(url, headers={"User-Agent": user_agent})
                 try:
-                    with urllib.request.urlopen(req, timeout=cfg.download_timeout_sec) as resp:
-                        body = resp.read(cfg.download_maxsize)
+                    with urllib.request.urlopen(req, timeout=DOWNLOAD_TIMEOUT_S) as resp:
+                        body = resp.read(DOWNLOAD_MAXSIZE)
                         return (
                             resp.status,
                             resp.headers.get("Content-Type"),

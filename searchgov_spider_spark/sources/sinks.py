@@ -79,13 +79,14 @@ def with_batch_ids(
 
 
 def assemble_endpoint_payloads(
-    urls: DataFrame, url_col: str = "url", max_bytes: int = MAX_URL_BATCH_SIZE_BYTES
+    urls: DataFrame, max_bytes: int = MAX_URL_BATCH_SIZE_BYTES
 ) -> DataFrame:
-    """O2: one row per batch with the POST body {"urls": [...]}."""
-    batched = with_batch_ids(urls, url_col, max_bytes=max_bytes)
+    """O2: one row per batch of ``url`` values with the POST body
+    {"urls": [...]}."""
+    batched = with_batch_ids(urls, "url", max_bytes=max_bytes)
     return (
         batched.groupBy("batch_id")
-        .agg(F.sort_array(F.collect_list(url_col)).alias("urls"))
+        .agg(F.sort_array(F.collect_list("url")).alias("urls"))
         .select(
             "batch_id",
             F.size("urls").alias("n_urls"),
@@ -99,21 +100,18 @@ def assemble_endpoint_payloads(
 # ---------------------------------------------------------------------------
 
 def write_urls_csv(
-    urls: DataFrame,
-    path: str,
-    url_col: str = "url",
-    rotate_bytes: int = MAX_URL_BATCH_SIZE_BYTES,
+    urls: DataFrame, path: str, rotate_bytes: int = MAX_URL_BATCH_SIZE_BYTES
 ) -> None:
-    """URL-per-line csv files rotated at ~rotate_bytes.
+    """``url``-per-line csv files rotated at ~rotate_bytes.
 
     Rotation parity via ``maxRecordsPerFile`` sized from the mean URL
     length — enforced per writer task, no shuffle, no driver loop.
     """
-    stats = urls.select(F.avg(F.octet_length(url_col)).alias("avg")).first()
+    stats = urls.select(F.avg(F.octet_length("url")).alias("avg")).first()
     avg = max(1.0, float(stats["avg"] or 1.0))
     per_file = max(1, int(rotate_bytes / (avg + 1)))
     (
-        urls.select(url_col)
+        urls.select("url")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", per_file)
         .csv(path)
@@ -148,16 +146,14 @@ def post_endpoint_batches(payloads: DataFrame, endpoint_url: str) -> None:
 # O3: documents table (ES-bulk analog)
 # ---------------------------------------------------------------------------
 
-def write_documents(
-    docs: DataFrame, path: str, n_buckets: int = 32, url_col: str = "url"
-) -> None:
+def write_documents(docs: DataFrame, path: str, n_buckets: int = 32) -> None:
     """Bucketed, wave-partitioned parquet — the Iceberg table layout
-    (partition by wave, bucket(url_hash)). ``doc_id`` = sha256(url)
+    (partition by wave, bucket(xxhash64(url))). ``doc_id`` = sha256(url)
     (es_batch_upload.py:63-66 _id parity)."""
     out = docs
     if "doc_id" not in docs.columns:
-        out = out.withColumn("doc_id", url_sha256_col(url_col))
-    out = out.withColumn("bucket", F.pmod(F.xxhash64(url_col), F.lit(n_buckets)))
+        out = out.withColumn("doc_id", url_sha256_col("url"))
+    out = out.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
     cols = ["wave", "bucket"] if "wave" in out.columns else ["bucket"]
     out.write.mode("append").partitionBy(*cols).parquet(path)
 

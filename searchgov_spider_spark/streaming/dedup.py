@@ -16,10 +16,8 @@ by the raw url_hash would make one pandas group per URL). Scale shape:
   bucket — at the 10^10-URL design point size ``n_buckets`` so each
   bucket's array stays in the low MBs, or swap the exact array for the
   Bloom-delta representation used by the batch path;
-- ``state_ttl_ms`` arms a processing-time timeout per bucket: buckets
-  idle past the TTL are dropped, the streaming analog of the batch
-  orphan-state TTL cleanup (P5, sources/state.py expire) — expired URLs
-  become re-crawlable, matching the reference's Redis key expiry;
+- state never times out: a URL is emitted once per stream (the
+  budget stream, streaming/budget.py, is the one with a TTL arm);
 - within one micro-batch the winner per url_hash is deterministic:
   rows are sorted by ``order_cols`` and the first row wins (the batch
   twin's min_by ordering); across micro-batches arrival order wins,
@@ -44,7 +42,6 @@ def streaming_seen_dedup(
     discovered: DataFrame,
     n_buckets: int = 256,
     order_cols: tuple[str, ...] = ("ts",),
-    state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """First-ever-occurrence filter over a stream of discovered URLs.
 
@@ -54,9 +51,6 @@ def streaming_seen_dedup(
     cols = list(order_cols)
 
     def dedup_bucket(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
         seen = set(state.get[0]) if state.exists else set()
         chunks = [pdf for pdf in pdfs if not pdf.empty]
         if chunks:
@@ -70,8 +64,6 @@ def streaming_seen_dedup(
         else:
             out = None
         state.update((sorted(seen),))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
         if out is not None and not out.empty:
             yield out
 
@@ -83,7 +75,5 @@ def streaming_seen_dedup(
         DISCOVERED_SCHEMA,
         _STATE_SCHEMA,
         "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout,
+        GroupStateTimeout.NoTimeout,
     )

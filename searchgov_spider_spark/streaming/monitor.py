@@ -28,12 +28,10 @@ FETCH_LOG_SCHEMA = (
 )
 
 
-def read_fetch_log_stream(
-    spark: SparkSession, path: str, schema: str = FETCH_LOG_SCHEMA
-) -> DataFrame:
+def read_fetch_log_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream of fetch-log records (json lines per wave).
     Production swaps this for Kafka with the same schema."""
-    return spark.readStream.schema(schema).json(path)
+    return spark.readStream.schema(FETCH_LOG_SCHEMA).json(path)
 
 
 def status_code_monitor(
@@ -59,15 +57,12 @@ def status_code_monitor(
     )
 
 
-def no_item_monitor(
-    fetch_log: DataFrame,
-    window: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Emitted-item counts per window; zero emitted in a closed window is
-    the streaming analog of the 24h no-item stop condition."""
+def no_item_monitor(fetch_log: DataFrame, window: str = "30 minutes") -> DataFrame:
+    """Emitted-item counts per window (10-minute watermark); zero emitted
+    in a closed window is the streaming analog of the 24h no-item stop
+    condition."""
     return (
-        fetch_log.withWatermark("ts", watermark)
+        fetch_log.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", window).alias("win"))
         .agg(
             F.count("*").alias("fetches"),
@@ -82,17 +77,13 @@ def no_item_monitor(
     )
 
 
-def domain_rate_monitor(
-    fetch_log: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    max_per_minute: int = 60,
-) -> DataFrame:
-    """Politeness audit: fetches per domain per minute window; a domain
-    over ``max_per_minute`` (default = 1 req/s budget) is flagged."""
+def domain_rate_monitor(fetch_log: DataFrame, max_per_minute: int = 60) -> DataFrame:
+    """Politeness audit: fetches per domain per 1-minute window
+    (2-minute watermark); a domain over ``max_per_minute`` (default =
+    1 req/s budget) is flagged."""
     return (
-        fetch_log.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), F.col("domain"))
+        fetch_log.withWatermark("ts", "2 minutes")
+        .groupBy(F.window("ts", "1 minute").alias("win"), F.col("domain"))
         .agg(F.count("*").alias("fetches"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -126,8 +117,6 @@ def windowed_circuit_breaker(
     fetch_log: DataFrame,
     window: str = "10 minutes",
     watermark: str = "5 minutes",
-    min_fetches: int | None = None,
-    err_ppm: int | None = None,
 ) -> DataFrame:
     """Streaming twin of operators.politeness.domain_circuit_breaker:
     per-(window, domain) fetch/5xx counts, integer err ppm, and the trip
@@ -137,8 +126,6 @@ def windowed_circuit_breaker(
     cardinality)."""
     from ..operators.politeness import BREAKER_ERR_PPM, BREAKER_MIN_FETCHES
 
-    mf = BREAKER_MIN_FETCHES if min_fetches is None else min_fetches
-    ep = BREAKER_ERR_PPM if err_ppm is None else err_ppm
     agg = (
         fetch_log.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("win"), F.col("domain"))
@@ -154,7 +141,7 @@ def windowed_circuit_breaker(
         "n_5xx",
         F.expr("n_5xx * 1000000 DIV n_fetches").alias("err_ppm"),
         (
-            (F.col("n_fetches") >= F.lit(mf))
-            & (F.expr("n_5xx * 1000000 DIV n_fetches") >= F.lit(ep))
+            (F.col("n_fetches") >= F.lit(BREAKER_MIN_FETCHES))
+            & (F.expr("n_5xx * 1000000 DIV n_fetches") >= F.lit(BREAKER_ERR_PPM))
         ).alias("suspended"),
     )

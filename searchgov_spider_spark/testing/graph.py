@@ -66,8 +66,8 @@ class Page:
             self.canon_url = canonicalize_url(self.url)
 
 
-def _words(rng: random.Random, lo=3, hi=10) -> str:
-    return " ".join(rng.choice(_VOCAB) for _ in range(rng.randint(lo, hi)))
+def _words(rng: random.Random) -> str:
+    return " ".join(rng.choice(_VOCAB) for _ in range(rng.randint(3, 10)))
 
 
 def _link_kind(ref: str) -> str:

@@ -300,6 +300,18 @@ def test_run_refuses_a_state_dir_that_holds_a_crawl(spark, graph, tmp_path):
     assert ParquetStateStore(spark, str(state)).newest() == 2
 
 
+def test_a_bound_of_zero_runs_no_wave(spark, tmp_path):
+    """``max_waves`` bounds the wave number, so 0 stops before wave 0: no
+    wave runs, and the store holds only commit 0, the initial frontier."""
+    pages_df, seeds_df, robots_df = graph_to_dfs(spark, generate_graph(n_pages=60, seed=3))
+    state = tmp_path / "state"
+    engine = CrawlEngine(spark, seeds_df, TablePageFetcher(pages_df), str(state), robots=robots_df)
+    result = engine.run(max_waves=0)
+    assert result.waves == []
+    assert [p.name for p in (state / "commits").iterdir()] == ["wave=0.json"]
+    assert result.frontier.count() == engine.initial_frontier().count() > 0
+
+
 def test_seen_check_reads_two_relations_in_any_wave(spark, graph, tmp_path, monkeypatch):
     """The seen set a wave checks its candidates against is the last
     commit's files, read as one relation, plus the wave's own delta: in

@@ -83,7 +83,7 @@ def test_extract_spans_dataframe(spark):
     pages_df, _, _ = graph_to_dfs(spark, graph)
     html_pages = pages_df.filter("content_type like 'text/html%'")
     out = extract_spans(
-        html_pages.select("url", "body"), keep_cols=["url"]
+        html_pages.select("url", "content_type", "body"), keep_cols=["url"]
     ).collect()
     golden = {p.url: p for p in graph["pages"]}
     assert len(out) == html_pages.count()

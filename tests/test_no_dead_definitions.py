@@ -1,5 +1,6 @@
-"""Every top-level definition of the package is used, and every
-``CrawlConfig`` field is read.
+"""Every top-level definition of the package is used, every
+``CrawlConfig`` field is read, and every defaulted parameter of the
+crawl-side package is passed by some call.
 
 A static check over the source: a top-level function, class or constant
 of ``searchgov_spider_spark`` counts as used when some other statement
@@ -12,6 +13,15 @@ reads it off a name the code binds to a ``CrawlConfig`` (``config``,
 ``cfg``, ``self.config``, ``CONFIG`` or ``DEFAULT_CONFIG``): reading an
 attribute of the same name off another object (a site row, a simulator
 job) does not count, and passing it as a keyword only sets it.
+
+A parameter with a default, of any function or method the package
+defines outside ``pipelines/`` and ``driver_queries.py``, counts as
+passed when some call of that name in the same sources passes it: by
+keyword, by position (after ``self``/``cls`` for a method), through
+``*args`` (the positional ones) or ``**kwargs`` forwarding, or through
+``functools.partial``. A call of a class passes its ``__init__``'s
+parameters. A default that no call overrides is a constant spelled as an
+option: the code should read the constant.
 """
 
 from __future__ import annotations
@@ -90,6 +100,15 @@ def _defined(stmt: ast.stmt) -> list[str]:
 
 
 @functools.cache
+def _trees() -> list[tuple[Path, ast.Module]]:
+    gc.disable()  # the parse allocates ~2e5 nodes; collection only slows it
+    try:
+        return [(path, ast.parse(path.read_text(), str(path))) for path in _sources()]
+    finally:
+        gc.enable()
+
+
+@functools.cache
 def _scan() -> tuple[list[str], Counter]:
     """(unused package definitions, CrawlConfig reads outside config.py)."""
     names: list[str] = []
@@ -97,28 +116,23 @@ def _scan() -> tuple[list[str], Counter]:
     config_reads: list[str] = []
     config_start = config_end = 0
     defs: list[tuple[str, str, int]] = []
-    gc.disable()  # the parse allocates ~2e5 nodes; collection only slows it
-    try:
-        for path in _sources():
-            tree = ast.parse(path.read_text(), str(path))
-            start = len(config_reads)
-            for stmt in tree.body:
-                defined = _defined(stmt) if PACKAGE in path.parents else []
-                if not defined:
-                    _names(stmt, names, attrs, config_reads)
-                    continue
-                own_names: list[str] = []
-                own_attrs: list[str] = []
-                _names(stmt, own_names, own_attrs, config_reads)
-                names += own_names
-                attrs += own_attrs
-                own = Counter(own_names + own_attrs)
-                where = f"{path.relative_to(ROOT)}:{stmt.lineno}"
-                defs += [(f"{where} {d}", d, own[d]) for d in defined if not d.startswith("__")]
-            if path == CONFIG:
-                config_start, config_end = start, len(config_reads)
-    finally:
-        gc.enable()
+    for path, tree in _trees():
+        start = len(config_reads)
+        for stmt in tree.body:
+            defined = _defined(stmt) if PACKAGE in path.parents else []
+            if not defined:
+                _names(stmt, names, attrs, config_reads)
+                continue
+            own_names: list[str] = []
+            own_attrs: list[str] = []
+            _names(stmt, own_names, own_attrs, config_reads)
+            names += own_names
+            attrs += own_attrs
+            own = Counter(own_names + own_attrs)
+            where = f"{path.relative_to(ROOT)}:{stmt.lineno}"
+            defs += [(f"{where} {d}", d, own[d]) for d in defined if not d.startswith("__")]
+        if path == CONFIG:
+            config_start, config_end = start, len(config_reads)
     uses = Counter(names) + Counter(attrs)
     read_outside_config = Counter(config_reads[:config_start] + config_reads[config_end:])
     return [label for label, d, own in defs if uses[d] == own], read_outside_config
@@ -128,9 +142,150 @@ def _unread(fields: list[str], config_reads: Counter) -> list[str]:
     return [f for f in fields if not config_reads[f]]
 
 
+@dataclasses.dataclass
+class _Passed:
+    """What the calls of one name pass, over all of them."""
+
+    positional: int = 0  # the most arguments one call passes by position
+    keywords: set[str] = dataclasses.field(default_factory=set)
+    star: bool = False  # some call forwards ``*args``
+    double_star: bool = False  # some call forwards ``**kwargs``
+
+
+def _callee(func: ast.expr) -> str | None:
+    if type(func) is ast.Name:
+        return func.id
+    if type(func) is ast.Attribute:
+        return func.attr
+    return None
+
+
+def _record_calls(tree: ast.AST, passed: dict[str, _Passed]) -> None:
+    """Add what every call under ``tree`` passes to ``passed``, by the
+    called name (``partial(f, ...)`` counts as a call of ``f``)."""
+    for node in ast.walk(tree):
+        if type(node) is not ast.Call:
+            continue
+        name, args = _callee(node.func), node.args
+        if name == "partial" and args:
+            name, args = _callee(args[0]), args[1:]
+        if name is None:
+            continue
+        p = passed.setdefault(name, _Passed())
+        p.positional = max(p.positional, sum(type(a) is not ast.Starred for a in args))
+        p.star |= any(type(a) is ast.Starred for a in args)
+        for k in node.keywords:
+            if k.arg is None:
+                p.double_star = True
+            else:
+                p.keywords.add(k.arg)
+
+
+def _functions(tree: ast.AST):
+    """(def, enclosing class or None) for every function under ``tree``:
+    module functions, methods and nested functions."""
+    stack: list[tuple[ast.AST, ast.ClassDef | None]] = [(tree, None)]
+    while stack:
+        node, cls = stack.pop()
+        for child in ast.iter_child_nodes(node):
+            if type(child) is ast.ClassDef:
+                stack.append((child, child))
+            elif type(child) in (ast.FunctionDef, ast.AsyncFunctionDef):
+                yield child, cls
+                stack.append((child, None))
+            else:
+                stack.append((child, cls))
+
+
+def _never_passed(fn: ast.FunctionDef, cls: ast.ClassDef | None, passed: dict[str, _Passed]) -> list[str]:
+    """The parameters of ``fn`` with a default that no call passes."""
+    p = passed.get(cls.name if cls is not None and fn.name == "__init__" else fn.name, _Passed())
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    bound = int(cls is not None and "staticmethod" not in {_callee(d) for d in fn.decorator_list})
+    first_default = len(positional) - len(a.defaults)
+    out = [
+        arg.arg
+        for i, arg in enumerate(positional)
+        if i >= first_default
+        and not (p.star or p.double_star or arg.arg in p.keywords or i - bound < p.positional)
+    ]
+    out += [
+        arg.arg
+        for arg, default in zip(a.kwonlyargs, a.kw_defaults)
+        if default is not None and not (p.double_star or arg.arg in p.keywords)
+    ]
+    return out
+
+
+def _covered(path: Path) -> bool:
+    """Does the parameter check cover ``path`` (a package module outside
+    ``pipelines/`` and ``driver_queries.py``)?"""
+    if PACKAGE not in path.parents:
+        return False
+    rel = path.relative_to(PACKAGE).parts
+    return rel[0] != "pipelines" and rel != ("driver_queries.py",)
+
+
+def _unpassed(trees: list[tuple[Path, ast.Module]]) -> list[tuple[Path, int, str]]:
+    """(path, line, "function(parameter)") for every covered parameter
+    with a default that no call in ``trees`` passes."""
+    passed: dict[str, _Passed] = {}
+    for _, tree in trees:
+        _record_calls(tree, passed)
+    return [
+        (path, fn.lineno, f"{fn.name}({param})")
+        for path, tree in trees
+        if _covered(path)
+        for fn, cls in _functions(tree)
+        for param in _never_passed(fn, cls, passed)
+    ]
+
+
 def test_every_package_definition_is_named_elsewhere():
     unused, _ = _scan()
     assert not unused, "top-level definitions nothing names:\n" + "\n".join(unused)
+
+
+def test_every_defaulted_parameter_is_passed():
+    unpassed = sorted(f"{path.relative_to(ROOT)}:{line} {p}" for path, line, p in _unpassed(_trees()))
+    assert not unpassed, "parameters with a default that no call passes:\n" + "\n".join(unpassed)
+
+
+def test_parameter_check_counts_every_way_of_passing():
+    """Keyword, position (after ``self``), ``*``/``**`` forwarding,
+    ``functools.partial`` and a call of the class all pass a parameter;
+    a call of another name does not."""
+    src = """
+class Fetcher:
+    def __init__(self, pages, key="k"):
+        pass
+
+    def fetch(self, rows, limit=1, *, strict=False):
+        pass
+
+
+def kw(x, a=1): pass
+def pos(x, a=1): pass
+def star(x, a=1): pass
+def dstar(x, *, a=1): pass
+def part(x, a=1): pass
+def dead(x, a=1, *, b=2): pass
+def other(x, a=1): pass
+
+
+Fetcher(p, "key").fetch(r, 5)
+kw(1, a=2)
+pos(1, 2)
+star(*args)
+dstar(1, **kw)
+functools.partial(part, 1, 2)
+dead(1)
+dead(x=1)
+unrelated(1, 2, a=3, b=4)
+"""
+    unpassed = _unpassed([(PACKAGE / "probe.py", ast.parse(src))])
+    assert sorted(p for _, _, p in unpassed) == ["dead(a)", "dead(b)", "fetch(strict)", "other(a)"]
 
 
 def test_every_crawl_config_field_is_read():

@@ -11,7 +11,6 @@ from searchgov_spider_spark.scheduling import (
     RERUN_PREFIX,
     CrawlScheduler,
     PendingJobStore,
-    SchedulerKilled,
 )
 from searchgov_spider_spark.sources.crawl_sites import CrawlSite, CrawlSites
 
@@ -31,6 +30,25 @@ def _site(name: str) -> CrawlSite:
     )
 
 
+class Crash(RuntimeError):
+    """The scheduler process dying mid-cycle."""
+
+
+def _crashing(runner, after: int):
+    """``runner`` that runs ``after`` jobs, then raises ``Crash`` as the
+    next job starts (its pending entry is never removed)."""
+    calls = 0
+
+    def run(site, run_id):
+        nonlocal calls
+        if calls >= after:
+            raise Crash(site.job_id)
+        calls += 1
+        runner(site, run_id)
+
+    return run
+
+
 @pytest.fixture()
 def sites() -> CrawlSites:
     return CrawlSites([_site("alpha"), _site("beta"), _site("gamma")])
@@ -45,12 +63,12 @@ def test_restart_replays_pending_exactly_once(sites, tmp_path):
     def runner(site, run_id):
         runs.append((site.job_id, run_id))
 
-    sched = CrawlScheduler(sites, tmp_path, runner)
+    sched = CrawlScheduler(sites, tmp_path, _crashing(runner, after=1))
     assert sched.schedule_due() == ["alpha", "beta", "gamma"]
     assert sched.store.count_pending_jobs() == 3
 
-    with pytest.raises(SchedulerKilled):
-        sched.run_pending(fail_after=1)  # alpha completes, then crash
+    with pytest.raises(Crash):
+        sched.run_pending()  # alpha completes, then crash
     assert [r for r, _ in runs] == ["alpha"]
     assert sched.store.count_pending_jobs() == 2  # beta, gamma survive
 
@@ -75,10 +93,10 @@ def test_restart_replays_pending_exactly_once(sites, tmp_path):
 
 def test_crash_before_any_run_replays_all(sites, tmp_path):
     runs = []
-    sched = CrawlScheduler(sites, tmp_path, lambda s, r: runs.append(r))
+    sched = CrawlScheduler(sites, tmp_path, _crashing(lambda s, r: runs.append(r), after=0))
     sched.schedule_due()
-    with pytest.raises(SchedulerKilled):
-        sched.run_pending(fail_after=0)  # due but nothing started
+    with pytest.raises(Crash):
+        sched.run_pending()  # due but nothing started
     assert runs == []
 
     sched2 = CrawlScheduler(sites, tmp_path, lambda s, r: runs.append(r))
